@@ -20,8 +20,9 @@ deployment decision, not an algorithm decision, so it lives here:
   one read of the round state through the reliable store per round.
 
 Operators take ``checkpoint_mode={'local','reliable'}`` and route every
-round-state materialization through :func:`materialize`, so the
-algorithm code never hardcodes the tradeoff. The checkpoint directory
+round-state materialization through :func:`materialize` (or
+:func:`materialize_counted` when the loop needs the round's row count),
+so the algorithm code never hardcodes the tradeoff. The checkpoint directory
 comes from (first match wins) an explicitly configured
 ``sc.setCheckpointDir`` (``session.get_spark(checkpoint_dir=...)``),
 ``$SPARK_GRAFT_CHECKPOINT_DIR``, or a process-local temp dir — the temp
@@ -76,3 +77,18 @@ def materialize(df: DataFrame, mode: str = LOCAL) -> DataFrame:
     raise ValueError(
         f"unknown checkpoint_mode {mode!r}: expected one of {_MODES}"
     )
+
+
+def materialize_counted(df: DataFrame, mode: str = LOCAL) -> tuple[DataFrame, int]:
+    """:func:`materialize` plus the number of rows it stored.
+
+    The count rides on the checkpoint action itself through
+    ``DataFrame.observe`` (the metric fires under both the local and the
+    reliable checkpoint), so an iterative loop that needs each round's
+    size pays no separate ``count()`` job for it."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")), mode)
+    return out, obs.get["n"]

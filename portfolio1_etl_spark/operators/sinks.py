@@ -570,7 +570,14 @@ def _replicated(net: DataFrame, positive: bool) -> DataFrame:
     The repeat count stays BIGINT via sequence() (r14 — casting to int
     with ANSI off would wrap a multiplicity over 2^31 and array_repeat
     on the negative wrap returns an EMPTY array: rows silently vanish
-    instead of failing)."""
+    instead of failing).
+
+    Practical multiplicity bound: sequence() builds the whole repeat
+    array inside one executor row before the explode, 8 bytes per copy
+    — 10^7 copies of one row hold ~80 MB, 10^8 ~800 MB of one task's
+    memory. Duplicate rows in a versioned table repeat a handful of
+    times, far below that; past Spark's array length limit (2^31 − 16
+    elements) sequence() fails the job instead of dropping rows."""
     cols = [c for c in net.columns if c != _DIFF_COL]
     side = net.filter(F.col(_DIFF_COL) > 0 if positive else F.col(_DIFF_COL) < 0)
     rep = _marker_name("__r", cols)
@@ -587,7 +594,9 @@ def _step_changes(to_df: DataFrame, from_df: DataFrame) -> DataFrame:
     rows diff by COUNT. A row can never appear under both labels (the
     counts are max(0, Δ) and max(0, −Δ)), which is what makes per-step
     feeds net-foldable. Frames with evolved (additive) schemas align
-    to the union of columns first — see ``_align_for_diff``."""
+    to the union of columns first — see ``_align_for_diff``. The
+    repeat shares ``_replicated``'s multiplicity bound (8 bytes per
+    copy, materialized in one row)."""
     to_df, from_df = _align_for_diff(to_df, from_df)
     net = _signed_diff(to_df, from_df)
     cols = [c for c in net.columns if c != _DIFF_COL]

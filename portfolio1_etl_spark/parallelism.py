@@ -68,11 +68,35 @@ def overlap_jobs(*thunks):
     of one job with the next job's tasks.
 
     Callers must pass thunks with NO data dependencies between them
-    (the whole point); exceptions propagate from ``result()``. Job
-    descriptions are thread-local, so each leg may label itself."""
+    (the whole point); exceptions propagate from ``result()``. Each leg
+    starts with its own copy of the caller's Spark local properties
+    (job group, job description, scheduler pool) — under PySpark's
+    pinned-thread mode a fresh driver thread would otherwise start
+    with none, so overlapped jobs would escape the caller's group and
+    its cancellation. Local properties are thread-local, so a leg may
+    still relabel itself without touching its siblings."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        return [f.result() for f in [pool.submit(t) for t in thunks]]
+        futures = [pool.submit(_with_caller_properties(t)) for t in thunks]
+        return [f.result() for f in futures]
+
+
+def _with_caller_properties(thunk):
+    """``thunk`` wrapped to run under a copy of the calling thread's
+    Spark local properties (taken now, applied in whichever thread
+    runs it)."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return thunk
+    props = sc._jsc.sc().getLocalProperties().clone()
+
+    def run():
+        sc._jsc.sc().setLocalProperties(props)
+        return thunk()
+
+    return run

@@ -83,11 +83,12 @@ def q114_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated subplan once within this query, while the eager
     checkpoint adds a full barrier (no overlap with the method legs)
     plus a store-and-reload. Left deliberately uncached."""
-    # The six legs are independent pipelines; two of them (q83, q265)
-    # BUILD persisted indexes eagerly inside their fn — dozens of
-    # small sequential driver actions each. Constructing the legs from
-    # driver threads overlaps those builds (guide §2.6): total build
-    # cost drops from the sum of the legs to roughly the slowest leg.
+    # The six legs are independent pipelines; one of them (q265)
+    # BUILDS a persisted index eagerly inside its fn — dozens of small
+    # sequential driver actions. Constructing the legs from driver
+    # threads overlaps that build with the other legs' planning
+    # (guide §2.6): total build cost drops from the sum of the legs
+    # to roughly the slowest leg.
     from portfolio1_etl_spark.parallelism import overlap_jobs
 
     exact, *method_dfs = overlap_jobs(

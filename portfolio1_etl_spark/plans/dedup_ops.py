@@ -261,8 +261,10 @@ def q89_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
     # cc feeds the size aggregate AND the final join; it is already
-    # materialized (the operator localCheckpoints its fixpoint), so the
-    # fan-out re-reads the checkpoint, not the iteration.
+    # materialized — a driver-built local relation when the pair set is
+    # under the operator's driver-finish bound, else a grouped read of
+    # the checkpointed fixpoint — so the fan-out never re-runs the
+    # iteration.
     sizes = cc.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return cc.join(F.broadcast(sizes), "cluster_id").select(
         "doc_id",

@@ -71,20 +71,28 @@ def test_ensure_checkpoint_dir_precedence(spark, tmp_path):
 
 
 def test_connected_components_reliable_matches_local(spark, ckpt_dir):
-    from portfolio1_etl_spark.operators.dedup import connected_components
+    """Bound 0 keeps the distributed star rounds (and their observed
+    per-round counts) under the reliable checkpoint; the default bound
+    checks that the driver finish reads a reliable checkpoint the same
+    way."""
+    from unittest import mock
+
+    from portfolio1_etl_spark.operators import dedup
 
     # two cliques + a chain bridge — enough structure for >1 round
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (3, 10), (20, 21)],
         "doc_a long, doc_b long",
     )
-    want = sorted(
-        map(tuple, connected_components(pairs, checkpoint_mode="local").collect())
-    )
-    got = sorted(
-        map(tuple, connected_components(pairs, checkpoint_mode="reliable").collect())
-    )
-    assert got == want
+
+    def labels(mode):
+        return sorted(
+            map(tuple, dedup.connected_components(pairs, checkpoint_mode=mode).collect())
+        )
+
+    with mock.patch.object(dedup, "_DRIVER_FINISH_EDGES", 0):
+        assert labels("reliable") == labels("local")
+    assert labels("reliable") == labels("local")
     assert _checkpoint_files(ckpt_dir)
 
 

@@ -1,12 +1,47 @@
 """Connected components (alternating large-star/small-star) — the
 cluster-contraction step behind q89. Ground truth: a driver-side
-union-find over the same edge list (fine at test scale)."""
+union-find over the same edge list (fine at test scale).
+
+Every graph here is under the operator's driver-finish bound, so each
+deterministic case runs twice: with the bound patched to 0 (the
+distributed star rounds and the exact fixpoint test, end to end) and
+at the default bound (collect and finish on the driver)."""
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+from unittest import mock
+
 from pyspark.sql import functions as F
 
+from portfolio1_etl_spark.operators import dedup
 from portfolio1_etl_spark.operators.dedup import connected_components
+
+
+def _star_only():
+    return mock.patch.object(dedup, "_DRIVER_FINISH_EDGES", 0)
+
+
+def _bounds():
+    """The two finishes each deterministic case runs under: the star
+    rounds only (bound 0), then the default driver-finish bound."""
+    return (_star_only(), contextlib.nullcontext())
+
+
+@contextlib.contextmanager
+def _job_group(spark):
+    """Run the body under a fresh job group; the yielded list is
+    filled with the ids of the Spark jobs the body issued."""
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, "connected_components job guard")
+    try:
+        yield jobs
+    finally:
+        sc._jsc.clearJobGroup()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -28,12 +63,14 @@ def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
 
 def _check(spark, edges: list[tuple[int, int]]):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components(df).collect()
-    }
     want = set(_uf_components(edges).items())
-    assert got == want
+    for bound in _bounds():
+        with bound:
+            got = {
+                (r["node"], r["component"])
+                for r in connected_components(df).collect()
+            }
+        assert got == want
 
 
 def test_chain_collapses_to_min(spark):
@@ -65,14 +102,59 @@ def test_deterministic_mixed_graph(spark):
 
 def test_empty_input(spark):
     df = spark.createDataFrame([], "doc_a long, doc_b long")
-    out = connected_components(df)
-    assert out.columns == ["node", "component"]
-    assert out.count() == 0
+    for bound in _bounds():
+        with bound:
+            out = connected_components(df)
+        assert out.columns == ["node", "component"]
+        assert out.count() == 0
 
 
 def test_self_pairs_only(spark):
     df = spark.createDataFrame([(4, 4), (7, 7)], "doc_a long, doc_b long")
-    assert connected_components(df).count() == 0
+    for bound in _bounds():
+        with bound:
+            out = connected_components(df)
+        assert out.columns == ["node", "component"]
+        assert out.count() == 0
+
+
+def test_switches_to_driver_finish_mid_loop(spark):
+    """K8 plus a disjoint 3-node path starts with 28 + 2 = 30 edges;
+    one star round turns K8 into a 7-edge star, leaving 9. With the
+    bound at 10 the first round runs distributed and the second edge
+    set is finished on the driver: the result is a local relation, not
+    the star path's grouped aggregate."""
+    k8 = [(a, b) for a in range(8) for b in range(8) if a < b]
+    edges = k8 + [(20, 21), (21, 22)]
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    with mock.patch.object(dedup, "_DRIVER_FINISH_EDGES", 10):
+        out = connected_components(df)
+    assert "Aggregate" not in out._jdf.queryExecution().optimizedPlan().toString()
+    got = {(r["node"], r["component"]) for r in out.collect()}
+    assert got == set(_uf_components(edges).items())
+
+
+def test_driver_finish_job_count_and_schema(spark):
+    """Under the bound the operator is one observed checkpoint plus one
+    Arrow collect: at most 4 Spark jobs (AQE runs the checkpoint's
+    shuffle as its own job), where the star rounds issue several per
+    round. The result keeps the star path's column names and id
+    types."""
+    ids = {"long": int, "int": int, "string": lambda i: f"d{i:02d}"}
+    for id_type, make in ids.items():
+        df = spark.createDataFrame(
+            [(make(0), make(1)), (make(1), make(2)), (make(30), make(31))],
+            f"doc_a {id_type}, doc_b {id_type}",
+        )
+        with _job_group(spark) as jobs:
+            out = connected_components(df)
+        assert len(jobs) <= 4, jobs
+        with _star_only():
+            star = connected_components(df)
+        fields = [(f.name, f.dataType) for f in out.schema.fields]
+        assert fields == [(f.name, f.dataType) for f in star.schema.fields]
+        assert [t for _, t in fields] == [df.schema["doc_a"].dataType] * 2
+        assert sorted(out.collect()) == sorted(star.collect())
 
 
 def test_convergence_is_exact_not_digest(spark):

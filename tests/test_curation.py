@@ -4,6 +4,8 @@ shapes that make the layer scale."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -229,10 +231,17 @@ def test_sequence_pack_plan_has_single_shard_exchange(spark, sf_dir, name):
     of the narrow (doc_id, text) rows in front of the tokenizer loop —
     round-robin cannot skew and carries no synthesized payload."""
     plan = _formatted_plan(REGISTRY[name].fn(spark, sf_dir))
-    tree = plan.split("\n\n")[0]
-    n_exchanges = tree.count("Exchange")
-    n_roundrobin = plan.count("RoundRobinPartitioning")
-    assert n_exchanges - n_roundrobin == 1  # exactly one keyed shard shuffle
+    # Both counts come from the same section — the per-operator detail
+    # blocks ("(N) Exchange" plus its Arguments line), main plan and
+    # subqueries alike — so a round-robin exchange can only offset
+    # itself, never a keyed one.
+    exchanges = [
+        block
+        for block in plan.split("\n\n")
+        if re.match(r"\(\d+\) \w*Exchange", block.lstrip())
+    ]
+    n_roundrobin = sum("RoundRobinPartitioning" in b for b in exchanges)
+    assert len(exchanges) - n_roundrobin == 1  # exactly one keyed shard shuffle
     assert n_roundrobin <= 1
     # the keyed exchange must be the uniform hash shard, nothing else
     assert plan.count("hashpartitioning(") == 1

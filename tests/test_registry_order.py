@@ -39,42 +39,41 @@ def test_every_operator_family_inside_window():
     families = {
         "relational-agg": "q01_pricing_summary",
         "sets": "q247_bag_set_ops",
-        "fact-fact-join": "q218_supplier_part_variety",  # r13: TPC-H Q10
-        # returned-items join (q203 Q18 rotated out, oracle-backed)
+        "fact-fact-join": "q218_supplier_part_variety",  # r14: TPC-H Q16
+        # supplier variety (was q200 Q10; stays oracle-backed)
         "topk": "q269_mmr_diversified_topk",  # r13: diversified top-k
         # (q181 skyline rotated out)
         "hierarchical-agg": "q262_ratio_to_parent",
         "json": "q238_variant_shredding",  # kept: VARIANT flagship
         "pivot-family": "q28_pivot",
-        "star-join": "q198_volume_shipping",  # r13: TPC-H Q14 promo
-        # share (was q205 Q9)
+        "star-join": "q198_volume_shipping",  # r14: TPC-H Q7 trade
+        # volume (was q202 Q14 promo share)
         "exotic-join": "q183_fuzzy_part_linkage",  # r13: blocked
         # similarity join (was q246 as-of; stays oracle-backed)
-        "stats-agg": "q34_percentiles",  # r13: quantiles
-        # from merged histograms (was q280 order-stat profiler)
+        "stats-agg": "q34_percentiles",  # r14: re-gates the single-
+        # buffer percentile rewrite (was q227 histogram quantiles)
         "collect-agg": "q234_value_histogram",  # r13: width-bucket
         # histogram (was q182 bitmap distinct)
         "interval-join": "q179_geo_grid_knn",  # kept
-        "subquery-scalar": "q201_order_count_distribution",  # r13: TPC-H
-        # Q4 EXISTS (was q167 Q22)
+        "subquery-scalar": "q201_order_count_distribution",  # r14: TPC-H
+        # Q13 order-count histogram (was q169)
         "curation-pack": "q107_chunking",
         "curation-schedule": "q85_stratified_sample",  # r13:
         # stratified sampling (was q106 weighted)
         "curation-card": "q276_fd_violation_census",  # r13: FD
         # profiling (was q138 table stats)
         "pipeline": "q43_enriched_sales",
-        "merge-upsert": "q263_joinview_row_deltas",  # r13: its
-        # base chain takes delete_from_chain + re-keying
-        # upsert_into_chain commits — the same delta-commit machinery
-        # q263 exercised (q263 rotated out, stays benched+oracle)
-        "cdc": "q263_joinview_row_deltas",  # r13 NEW: the CDC
-        # feed drives the count-distinct sidecar view (was q288 agg)
+        "merge-upsert": "q263_joinview_row_deltas",  # r14: its
+        # fact chain takes row-level delete + upsert commits, re-gating
+        # the staged delta-commit path (was q289; stays oracle-backed)
+        "cdc": "q263_joinview_row_deltas",  # r14: the row-delta feed
+        # drives the incremental join view (was q289 distinct view)
         "warehouse-txn": "q168_versioned_time_travel",
         "stream-window": "q154_gap_fill_resample",
-        "stream-session": "q233_session_stats",
-        "udf-shapes": "q102_png_decode",
-        "window-frame": "q217_shipping_lag_priority",  # r13: cohort
-        # retention frames (was q170 deciles)
+        "stream-session": "q233_session_stats",  # r14 (was q175)
+        "udf-shapes": "q102_png_decode",  # r14 (was q272)
+        "window-frame": "q217_shipping_lag_priority",  # r14: TPC-H
+        # Q12 ship-lag buckets (was q49 cohort retention)
         "date-spine": "q154_gap_fill_resample",
         "text-words": "q87_token_histogram",
         "text-quality": "q96_repetition_filter",
@@ -89,34 +88,35 @@ def test_every_operator_family_inside_window():
         # against the lossless truth (was q73; re-gates the r12
         # shingle-repartition fix)
         "dedup-simhash": "q112_image_neardup",
-        "dedup-embedding": "q286_label_noise_detection",
+        "dedup-embedding": "q286_label_noise_detection",  # r14 (was q250)
         "dedup-spans": "q97_decontaminate",  # kept
         "dedup-cc": "q139_leakage_safe_split",
         "graph-iterative": "q271_label_propagation",  # r13: LPA
         # fixpoint (was q243 closure)
         "graph-peel": "q163_user_kcore",  # kept
-        "graph-features": "q224_link_prediction",  # r13:
-        # wedge closure (was q254; re-gates the r12 shuffle-hash fix)
+        "graph-features": "q224_link_prediction",  # r14: common-
+        # neighbor link prediction (was q237 clustering coefficient)
         "sketch-cms": "q92_cms_heavy_hitters",
         "sketch-bloom": "q104_bloom_prune",
-        "digest-reconcile": "q287_kmv_mergeable_rollup",  # r13: KMV
-        # digest set-overlap estimation (was q172 replica digests;
+        "digest-reconcile": "q287_kmv_mergeable_rollup",  # r14: KMV
+        # per-partition sketch merge (was q283 KMV intersection;
         # stays oracle-backed)
         "cluster-kmeans": "q93_kmeans",
         "sim-knn": "q114_ann_recall",  # kept: the five-pipeline board
         "sim-lsh": "q260_multiprobe_lsh_ann",
-        "sim-ivf": "q265_ivfpq_index_probe",
+        "sim-ivf": "q265_ivfpq_index_probe",  # r14: re-gates the
+        # overlapped index build (was q270)
         "sim-quantized": "q268_matryoshka_recall",  # r13: truncated-
         # dim (matryoshka) recall — dimension quantization (was q253)
         "multimodal-decode": "q112_image_neardup",  # shares the
         # dedup-simhash slot — q112 synthesizes AND PNG-decodes its
         # thumbs in-pipeline
-        "multimodal-governance": "q290_mp4_sample_extract",  # r13: FLAC
-        # stream census (was q149 video)
-        "timeseries": "q230_revenue_acf",  # r13: Holt backtest
-        # (was q285 forecast eval board)
-        "mining": "q221_rfm_segmentation",  # r13: co-occurrence
-        # similarity (was q284 recommender eval)
+        "multimodal-governance": "q290_mp4_sample_extract",  # r14: MP4
+        # sample extraction (was q278 FLAC census)
+        "timeseries": "q230_revenue_acf",  # r14: revenue
+        # autocorrelation (was q236 Holt backtest)
+        "mining": "q221_rfm_segmentation",  # r14: RFM segments
+        # (was q281 item-item similarity)
     }
     outside = {f: q for f, q in families.items() if q not in window}
     assert not outside, f"families outside the {WINDOW}-entry window: {outside}"
