@@ -6,9 +6,11 @@ columns ASAP" (portfolio-etl.py:73, :226) and "push date window into the
 API query" (portfolio-etl.py:43, :109) optimizations are what Catalyst
 does for free once the scan is declarative.
 
-``load`` asserts the parquet footer matches the declared schema (names
-and top-level order) instead of trusting inference — at 100 TB a schema
-drift should fail loudly at plan time, not corrupt an aggregate.
+``load`` asserts the parquet footer matches the declared schema (names,
+top-level order and data types; nullability is not compared) instead of
+trusting inference — at 100 TB a schema drift should fail loudly at plan
+time, not corrupt an aggregate. Queries rely on the declared types: the
+reference pipeline joins on integral part keys (plans/reference_pipeline.py).
 
 events.parquet quirk: its ``ts`` column is parquet TIMESTAMP(NANOS),
 which Spark's vectorized reader rejects. We enable
@@ -53,28 +55,29 @@ def _ensure_session_conf(spark: SparkSession) -> None:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str, validate: bool = True) -> DataFrame:
-    """Scan one driver table; optionally validate column names/order."""
+    """Scan one driver table; optionally validate column names, order
+    and types against the declared schema. Types compare by their
+    simple strings, so nullability (nested included) is not checked."""
     _ensure_session_conf(spark)
     df = spark.read.parquet(path_for(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    actual = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+    if name == "events" and ("ts", "bigint") in actual:
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
+        actual = [("ts", "timestamp_ntz") if c == ("ts", "bigint") else c for c in actual]
     if validate and name in schemas.DRIVER_TABLES:
-        declared = [f.name for f in schemas.DRIVER_TABLES[name].fields]
-        actual = df.columns
-        if actual != declared:
+        declared = [
+            (f.name, f.dataType.simpleString()) for f in schemas.DRIVER_TABLES[name].fields
+        ]
+        if [c for c, _ in actual] != [c for c, _ in declared]:
             raise ValueError(
-                f"schema drift in {name}: declared {declared}, parquet has {actual}"
+                f"schema drift in {name}: declared {[c for c, _ in declared]}, "
+                f"parquet has {[c for c, _ in actual]}"
             )
+        for (col, want), (_, got) in zip(declared, actual):
+            if got != want:
+                raise ValueError(
+                    f"schema drift in {name}.{col}: declared {want}, parquet has {got}"
+                )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in schemas.DRIVER_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (for the SQL path)."""
-    for name in schemas.DRIVER_TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -23,10 +23,6 @@ from portfolio1_etl_spark.operators.ranks import (
 from portfolio1_etl_spark.plans.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 @query(
     "q31_full_outer_join",
     sql="""
@@ -47,9 +43,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q31_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join: both unmatched sides survive with NULLs."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
+    c = catalog.load(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
     o = (
-        _t(spark, sf_dir, "orders")
+        catalog.load(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -72,9 +68,9 @@ def q31_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q32_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit cross join (dimension grid) — only ever between
     dimension-sized inputs; both sides here are tiny and broadcast."""
-    r = _t(spark, sf_dir, "region").select(F.col("r_name").alias("region"))
+    r = catalog.load(spark, sf_dir, "region").select(F.col("r_name").alias("region"))
     s = (
-        _t(spark, sf_dir, "orders")
+        catalog.load(spark, sf_dir, "orders")
         .select(F.col("o_orderstatus").alias("status"))
         .distinct()
     )
@@ -98,7 +94,7 @@ def q33_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates (sample stddev/variance, correlation,
     covariance). Rounded coarsely: the running-moment accumulations are
     order-dependent across engines at the 1e-9 level."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return li.groupBy(F.col("l_returnflag").alias("returnflag")).agg(
         F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
         F.round(F.var_samp("l_quantity"), 4).alias("var_qty"),
@@ -140,7 +136,7 @@ def q34_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot move the exact result."""
     from portfolio1_etl_spark.parallelism import spread_rows
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     pct = F.percentile(
         "l_extendedprice",
         F.array(F.lit(0.25), F.lit(0.50), F.lit(0.75)),
@@ -183,7 +179,7 @@ def q35_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     its guarantee fails the hash gate. At 100 TB the sketches are the
     default: exact distinct over a high-cardinality key is a full
     shuffle, the sketch is a map-side merge."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     rsd = 0.05
     return o.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -218,7 +214,7 @@ def q35_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q36_collect_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collect-to-array aggregate, made deterministic (and engine-
     comparable) by sorting and joining to a string."""
-    c = _t(spark, sf_dir, "customer")
+    c = catalog.load(spark, sf_dir, "customer")
     return c.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.concat_ws(",", F.sort_array(F.collect_set("c_nationkey"))).alias("nations"),
         F.count(F.lit(1)).alias("n_customers"),
@@ -245,14 +241,14 @@ def q37_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_asof alternative is the non-scalable fallback). Ties
     (order and event at the same instant) sort the order first,
     matching ASOF's >= semantics."""
-    e = _t(spark, sf_dir, "events").select(
+    e = catalog.load(spark, sf_dir, "events").select(
         F.col("user_id").alias("k"),
         F.col("ts").alias("t"),
         "event_id",
         F.lit(None).cast("timestamp_ntz").alias("o_ts"),
         F.lit(1).alias("is_event"),
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = catalog.load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k"),
         F.col("o_orderdate").alias("t"),
         F.lit(None).cast("long").alias("event_id"),
@@ -290,7 +286,7 @@ def q38_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-minute cells and joins on (key, cell) with each left row probing
     its own and the next cell — candidates shrink from O(n²) per key to
     the events in two cells, then the exact predicate filters."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = catalog.load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts",
         F.floor(F.col("ts").cast("timestamp").cast("double") / 600).alias("cell"),
     )
@@ -340,7 +336,7 @@ def q55_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-day ties are frame-safe and the result is deterministic
     without a tie-break column. Ordering key is epoch seconds (both
     engines); the sum is decimal-exact."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     epoch = F.col("o_orderdate").cast("timestamp").cast("long")
     w = (
         W.partitionBy("o_custkey")
@@ -381,7 +377,7 @@ def q56_window_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Navigation + distribution window functions: first/last value,
     dense_rank, ntile, percent_rank, cume_dist — fully ordered (orderkey
     tie-break) so every function is deterministic."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
     )
@@ -423,7 +419,7 @@ def q57_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-get-zero report shape (sequence() + explode is Spark's
     generate_series). The spine is generated, broadcastable, and
     pruned; the fact side keeps its pushed-down date window."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     spine = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -471,7 +467,7 @@ def q58_timestamp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     :695) plus the coercing variant on garbage input
     (``errors='coerce'`` ≡ try_to_timestamp → NULL, counted as 0 by
     count())."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     strs = o.select(
         F.date_format("o_orderdate", "MM-dd-yyyy").alias("date_str"),
         "o_orderpriority",
@@ -517,11 +513,11 @@ def q59_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates pushed into both fact scans, grouped revenue, top-10
     with a fully deterministic sort (exact decimal revenue, then
     date/key). TakeOrderedAndProject keeps only 10×partitions rows."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = catalog.load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = catalog.load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp_ntz")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = catalog.load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp_ntz")
     )
     from portfolio1_etl_spark.functions import dsum_product
@@ -566,7 +562,7 @@ def q39_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide→long) via stack()."""
     from portfolio1_etl_spark.functions import dsum_money
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     agg = li.groupBy(F.col("l_returnflag").alias("returnflag")).agg(
         F.sum("l_quantity").alias("qty"),
         dsum_money("l_extendedprice").alias("price"),
@@ -594,7 +590,7 @@ def q66_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter/exists/forall/aggregate — all JVM-side lambdas, the idiom
     that replaces per-row Python loops on array columns. l1_norm is a
     sequential fold → bitwise-identical to DuckDB's list_sum."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = catalog.load(spark, sf_dir, "embeddings")
     v = "transform(embedding, x -> cast(x as double))"
     return e.select(
         "vec_id",
@@ -625,7 +621,7 @@ def q66_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q67_string_extras(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extended string surface: lpad, split_part, left/right, translate,
     repeat — the remainder of the cleaning toolbox beyond q04."""
-    p = _t(spark, sf_dir, "part")
+    p = catalog.load(spark, sf_dir, "part")
     return p.select(
         F.col("p_partkey").alias("sku"),
         F.lpad(F.col("p_partkey").cast("string"), 8, "0").alias("padded_id"),
@@ -654,7 +650,7 @@ def q67_string_extras(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q68_null_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL-handling surface: nullif / ifnull / greatest / least /
     IS NULL — the coalesce family beyond q05's fillna."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     status_or_null = F.nullif(F.col("o_orderstatus"), F.lit("O"))
     return o.select(
         F.col("o_orderkey").alias("order_id"),
@@ -698,7 +694,7 @@ def q48_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (entry order, missing-key lookup, lambda filters) are all value
     -checked. Maps shuffle as compact binary structs — at scale this
     is the pattern for per-entity feature bundles."""
-    e = _t(spark, sf_dir, "events").withColumn(
+    e = catalog.load(spark, sf_dir, "events").withColumn(
         "props_map", F.from_json("props", "map<string,bigint>")
     )
     per_type = e.groupBy("user_id", "event_type").agg(
@@ -754,15 +750,15 @@ def q84_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-filter, so mismatched rows never materialize."""
     from portfolio1_etl_spark.functions import dsum_product
 
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("date"))
     )
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    c = catalog.load(spark, sf_dir, "customer")
+    s = catalog.load(spark, sf_dir, "supplier")
+    n = catalog.load(spark, sf_dir, "nation")
+    r = catalog.load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     joined = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -803,8 +799,8 @@ def q88_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     front-ends hit the same Catalyst plans. Spark de-correlates the
     lateral into a ranked window join (no per-row re-execution);
     deterministic via the (price DESC, orderkey ASC) tie-break."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("q88_customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("q88_orders")
+    catalog.load(spark, sf_dir, "customer").createOrReplaceTempView("q88_customer")
+    catalog.load(spark, sf_dir, "orders").createOrReplaceTempView("q88_orders")
     return spark.sql(
         """
         SELECT c.c_custkey AS custkey, t.o_orderkey AS orderkey,
@@ -987,7 +983,7 @@ def q246_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     All math in exact integer microseconds. Per-user windows, no
     single-partition hazard; ties on equidistant purchases don't
     affect the output (only the gap is emitted)."""
-    e = _t(spark, sf_dir, "events").select(
+    e = catalog.load(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -1067,7 +1063,7 @@ def q247_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle each, no row-by-row matching. Counts per priority keep
     the output grain bounded; the oracle spells the same bag algebra
     with SQL INTERSECT ALL / EXCEPT ALL."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("ck"), F.col("o_orderpriority").alias("pri")
     )
@@ -1125,7 +1121,7 @@ def q248_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark plans ``eqNullSafe`` as a hash join on a null-safe key (no
     nested loop); both sides aggregate to the ≤51-key grain first, so
     the join is dimension-sized."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
 
     def side(status: str, mod: int, alias: str) -> DataFrame:
         return (

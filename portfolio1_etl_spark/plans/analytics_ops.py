@@ -25,10 +25,6 @@ from portfolio1_etl_spark.operators.ranks import with_exact_rank
 from portfolio1_etl_spark.plans.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 @query(
     "q177_group_regression",
     sql="""
@@ -76,7 +72,7 @@ def q177_group_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead accumulate raw doubles whose sum order diverges). At 100 TB
     this is the textbook map-side-combinable aggregation: five
     fixed-width partial sums per group."""
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     dec = "decimal(38,0)"
     pts = e.select(
         "event_type",
@@ -139,7 +135,7 @@ def q181_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     part iff it beats every cheaper part's size and ties the max size
     at its own price. Same-price-same-size twins survive together
     (neither strictly dominates)."""
-    p = _t(spark, sf_dir, "part")
+    p = catalog.load(spark, sf_dir, "part")
     grain = p.groupBy("p_retailprice").agg(
         F.max("p_size").alias("price_max_size")
     )
@@ -179,7 +175,7 @@ def q182_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-count rollup needs (count-distinct EXPAND multiplies the
     scan; bitmaps don't). Final count is the sum of per-bucket
     popcounts. The oracle is the plain COUNT(DISTINCT)."""
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     per_bucket = (
         e.select(
             "event_type",
@@ -229,7 +225,7 @@ def q183_fuzzy_part_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     mistake). Blocks stay the shuffle key; a skewed block would route
     through salted_join (operators/joins.py)."""
     names = (
-        _t(spark, sf_dir, "part")
+        catalog.load(spark, sf_dir, "part")
         .groupBy(
             "p_name",
             # try_element_at + '' : a space-free name must block on ''
@@ -302,7 +298,7 @@ def q184_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cell running sum — not a partitionless window funneling
     every part through one reducer. Exact-decimal accumulation holds
     in both phases (cell sums and offsets stay DECIMAL(38,2))."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         dsum_product(
             F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -379,7 +375,7 @@ def q190_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary; clipping at it would be nondeterministic). One shuffle
     on the group key serves ranking, counting, and the final
     aggregate; bounds re-join broadcast-sized."""
-    base = _t(spark, sf_dir, "events").select(
+    base = catalog.load(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
         F.col("value").cast("decimal(18,2)").alias("v"),
@@ -538,7 +534,7 @@ def q242_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     where 2·cum ≥ total. No arithmetic ever touches the price values
     (only ordering and min), and the weight sums are exact integers —
     bit-identical across engines by construction."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     b = li.select(
         F.col("l_returnflag").alias("rf"),
         F.col("l_linestatus").alias("ls"),
@@ -627,7 +623,7 @@ def q259_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     state dedups on (node, reach) each round; canonical assignment and
     survivorship are one left join + two aggregates."""
     names = (
-        _t(spark, sf_dir, "part")
+        catalog.load(spark, sf_dir, "part")
         .groupBy(
             "p_name",
             # try_element_at + '' : a space-free name must block on ''
@@ -737,7 +733,7 @@ def q261_woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies ROUNDED shares by the ROUNDED woe before its own
     rounding — transcendental ulps never compound. The category table
     is 5 cells; totals ride in as a broadcast 1-row aggregate."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     bad = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     cells = o.groupBy(F.col("o_orderpriority").alias("category")).agg(
         F.sum(1 - bad).cast("long").alias("n_good"),
@@ -814,10 +810,10 @@ def q262_ratio_to_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep a row (LEFT join, 0 cents). At 100 TB the single fact-wide
     exchange is the nation-grain aggregate; everything above it is
     25/5/1-row arithmetic."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    n = catalog.load(spark, sf_dir, "nation")
+    r = catalog.load(spark, sf_dir, "region")
     cust_rev = (
         o.join(
             c.select("c_custkey", "c_nationkey"),
@@ -915,7 +911,7 @@ def q272_jaro_winkler_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from portfolio1_etl_spark.operators.udfs import jaro_winkler_udf
 
     names = (
-        _t(spark, sf_dir, "part")
+        catalog.load(spark, sf_dir, "part")
         .groupBy(
             "p_name",
             F.coalesce(
@@ -988,8 +984,8 @@ def q273_loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     for free (any within-pair variance would fan out extra rows).
     Integer-ratio divisions keep every value bit-identical across
     engines."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
     base = o.join(c, F.col("o_custkey") == F.col("c_custkey")).select(
         F.col("c_mktsegment").alias("segment"),
         F.when(F.col("o_orderpriority") == "1-URGENT", F.lit(1))
@@ -1113,8 +1109,8 @@ def q277_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     two: exact, bit-identical."""
     from portfolio1_etl_spark.parallelism import spread_rows
 
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
     # spread the ×64 replicate fan-out across the configured
     # parallelism BEFORE it runs: the 64 md5 evaluations per base row
     # dwarf one round-robin shuffle of the 3-column base (the

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from portfolio1_etl_spark import catalog
+from portfolio1_etl_spark.operators.checkpointing import materialize
 from portfolio1_etl_spark.operators.dedup import (
     H48 as _H48_SPARK,
     MINHASH_MOD,
@@ -156,9 +157,10 @@ def q72_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles (q77 applies it; q73's LSH plays that role here).
     The shingle set feeds three consumers inside ``jaccard_pairs``
     (sizes + both sides of the self-join), so it is materialized once
-    (localCheckpoint; on a cluster: reliable checkpoint/persist-disk)
+    (``checkpointing.materialize``, a localCheckpoint by default; on a
+    cluster: its reliable mode or a DISK_ONLY persist)
     instead of re-running the tokenize→explode→md5 scan per consumer."""
-    sh = shingle_hashes(_docs(spark, sf_dir), "text").localCheckpoint(eager=True)
+    sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     return jaccard_pairs(sh, 0.4)
 
 
@@ -201,7 +203,7 @@ def q77_jaccard_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10^12 candidate pairs. Stop-shingle semantics: sizes and
     intersections both use the capped sets, so Spark and the oracle
     agree exactly."""
-    sh = shingle_hashes(_docs(spark, sf_dir), "text").localCheckpoint(eager=True)
+    sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     return jaccard_pairs(sh, 0.4, df_cap=_DF_CAP)
 
 
@@ -255,7 +257,7 @@ def q89_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (transitive duplicates land in different "keep" decisions). Output
     covers documents appearing in ≥1 pair; all others are trivially
     their own cluster."""
-    sh = shingle_hashes(_docs(spark, sf_dir), "text").localCheckpoint(eager=True)
+    sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     pairs = jaccard_pairs(sh, 0.4, df_cap=_DF_CAP)
     cc = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
@@ -331,10 +333,10 @@ def q73_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_candidates → verify_candidates``. The shingle scan (the
     expensive tokenize→explode→md5 subtree) fans out to the signature
     aggregate AND the verification join, so it is materialized once
-    via localCheckpoint — without it the subtree executes twice and
-    dominated the round-1 bench (27.8 s → low single digits). On a
-    cluster, substitute a reliable checkpoint or DISK_ONLY persist."""
-    sh = shingle_hashes(_docs(spark, sf_dir), "text").localCheckpoint(eager=True)
+    (``checkpointing.materialize``) — without it the subtree executes
+    twice and dominated the round-1 bench (27.8 s → low single digits).
+    On a cluster, substitute a reliable checkpoint or DISK_ONLY persist."""
+    sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     cand = lsh_candidates(minhash_signatures(sh))
     return verify_candidates(sh, cand, 0.4, assume_pair_distinct=True)
 
@@ -655,13 +657,12 @@ def q79_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (which would re-execute the tokenize→posexplode→md5 subtree).
     w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
     w_all = W.partitionBy("doc_id")
-    fps = (
+    fps = materialize(  # feeds sizes AND both join sides
         psh.withColumn("wmin", F.min("h").over(w))
         .withColumn("n_sh", F.count(F.lit(1)).over(w_all))
         .filter(F.col("pos") <= F.col("n_sh") - 3)
         .select("doc_id", "wmin")
         .distinct()
-        .localCheckpoint(eager=True)  # feeds sizes AND both join sides
     )
     nfp = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = fps.alias("a"), fps.alias("b")
@@ -725,7 +726,7 @@ def q97_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     huge eval suite). The corpus side is never self-joined, unlike
     near-dup detection. Flag threshold: ≥3 shared shingles (one
     shared phrase is noise)."""
-    sh = shingle_hashes(_docs(spark, sf_dir), "text").localCheckpoint(eager=True)
+    sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     is_eval = F.col("doc_id") % 50 == 0
     eval_sh = sh.filter(is_eval).select("h").distinct()
     hits = (
@@ -764,7 +765,7 @@ def q105_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     index + candidate-only exact verification."""
     from portfolio1_etl_spark.operators.dedup import prefix_jaccard_pairs
 
-    sh = shingle_hashes(_docs(spark, sf_dir), "text").localCheckpoint(eager=True)
+    sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     return prefix_jaccard_pairs(sh, 2, 5)  # 2/5 = 0.4 exactly
 
 

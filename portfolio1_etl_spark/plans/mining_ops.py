@@ -43,10 +43,6 @@ from portfolio1_etl_spark.operators.ranks import ntile_from_rank, with_exact_ran
 from portfolio1_etl_spark.plans.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 def _copurchase_graph(spark: SparkSession, sf_dir: str, cap: int = 40):
     """Hub-capped co-purchase user graph shared by q224/q237/q254:
     distinct (user, purchase-hour) pairs, hours with more than ``cap``
@@ -55,7 +51,7 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str, cap: int = 40):
     within-hour pair explosion deduped to a canonical u<v edge list.
     Returns (edges, nbr): the canonical edges and the symmetric
     neighbor list."""
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     ub = (
         e.filter(F.col("event_type") == "purchase")
         .select("user_id", F.date_trunc("hour", F.col("ts")).alias("h"))
@@ -113,7 +109,7 @@ def q220_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH bucket joins. Item supports are part-grain (dimension-sized →
     broadcast); N is a 1-row literal broadcast. Confidence and lift
     divide exact integer counts with identical expression trees."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = catalog.load(spark, sf_dir, "lineitem")
     b = l.select("l_orderkey", "l_partkey").distinct()
     n = (
         b.agg(F.countDistinct("l_orderkey").alias("n_orders"))
@@ -206,7 +202,7 @@ def q221_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
       column (broadcast 1-row bounds; ties on f_orders are resolved
       by custkey, so refining by custkey keeps the cell order exact);
     - monetary: scale-free log2 histogram cells of cents (q223's)."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     rfm = o.groupBy("o_custkey").agg(
         F.datediff(
             F.lit(_RFM_REF).cast("date"), F.max("o_orderdate").cast("date")
@@ -309,7 +305,7 @@ def q222_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     class boundaries cannot flip on sum-order noise; everything
     downstream is integer counts. The self-join is at (part, year)
     grain — dimension-sized."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = catalog.load(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     pr = l.groupBy(
         "l_partkey", F.year("l_shipdate").cast("long").alias("y")
@@ -405,7 +401,7 @@ def q223_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole dimension at 100 TB. Count-per-cell + broadcast prefix
     offsets + within-cell row_number is exact regardless of cell
     balance."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     cr = o.groupBy("o_custkey").agg(
         F.sum(_cents(F.col("o_totalprice"))).alias("cents")
     )
@@ -558,7 +554,7 @@ def q225_dyadic_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     with NO rounding tricks needed before the final display round.
     The per-user rank is a partitioned window (no global sort); rows
     beyond the 16-step horizon are filtered before aggregation."""
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -612,7 +608,7 @@ def q226_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user expansion is bounded by a user's 7-day click activity,
     the same bounded-band argument as the as-of join family. Pure
     timestamp/int outputs: no float hazard."""
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("pu"),
@@ -687,7 +683,7 @@ def q227_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer; the interpolation divides exact integers with the
     identical expression tree in both engines and is emitted UNROUNDED
     (fully deterministic — no round boundary exists to straddle)."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     h = (
         o.select(_cents(F.col("o_totalprice")).alias("cents"))
         .groupBy((F.col("cents") / _QSK_W).cast("long").alias("b"))
@@ -770,7 +766,7 @@ def q228_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in both engines) or sits ≥ 1/(2·size) away from any
     round boundary — never the .xx5 shortest-decimal divergence a
     2-dp currency round would hit."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     midx = F.year("o_orderdate") * 12 + F.month("o_orderdate")
     first_m = o.groupBy("o_custkey").agg(F.min(midx).alias("cm"))
     sz = first_m.groupBy("cm").agg(F.count(F.lit(1)).alias("cohort_size"))
@@ -829,7 +825,7 @@ def q234_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     platforms). Log-spaced histograms are the standard first look at
     heavy-tailed value distributions; one map + ONE ~40-bucket
     aggregate, all exact integers."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     c = o.select(_cents(F.col("o_totalprice")).alias("cents"))
     return c.groupBy(
         F.length(F.bin(F.col("cents"))).cast("int").alias("bucket_bits")
@@ -1092,10 +1088,10 @@ def q255_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision check shuffles on (u, p) — and the max-partkey rides in
     as a broadcast 1-row aggregate. Counts are exact integers; the one
     division rounds to 6 dp (n_pos ≥ 1 per emitted segment)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    cust = _t(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    part = catalog.load(spark, sf_dir, "part")
+    cust = catalog.load(spark, sf_dir, "customer")
     pos = (
         o.select("o_orderkey", "o_custkey")
         .join(li.select("l_orderkey", "l_partkey"),
@@ -1298,7 +1294,7 @@ def q281_item_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound); the rank window partitions by ITEM — never global; at
     100 TB the serving table shards on item, which is exactly this
     output's grain."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     b = li.select("l_orderkey", "l_partkey").distinct()
     item = b.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
     a, c = b.alias("a"), b.alias("c")
@@ -1441,8 +1437,8 @@ def q284_recommender_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hit probe is an equi-join of (query_item, target) against
     the 3-rows-per-item rec table. Integer counts, one rounded
     division."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders")
+    li = catalog.load(spark, sf_dir, "lineitem")
     days = (
         o.select(F.col("o_orderdate").cast("date").alias("d"))
         .distinct()

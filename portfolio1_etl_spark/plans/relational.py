@@ -34,10 +34,6 @@ from portfolio1_etl_spark.functions import dmoney, dsum_money, dsum_product
 from portfolio1_etl_spark.plans.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 def _ntz(s: str):
     return F.lit(s).cast("timestamp_ntz")
 
@@ -72,7 +68,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the reference's groupBy-sum pipeline (portfolio-etl.py
     :602-615) generalized to the TPC-H Q1 shape — filter → project →
     hash-aggregate with map-side partials. One shuffle, 6 groups."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     n = F.count(F.lit(1))
     return (
@@ -112,7 +108,7 @@ def q02_filter_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     :263, :325). The conjunction is pushed into the parquet scan
     (PushedFilters) — the reference pushed the same window into its API
     query strings (:43, :109-110)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= _ntz("1996-01-01"))
         & (F.col("l_shipdate") < _ntz("1997-01-01"))
@@ -150,7 +146,7 @@ def q03_project_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + rename + literal source-tag + derived arithmetic
     (portfolio-etl.py:70 ``df['site']='walmart'``, :625 ``qty*multiplier``,
     :73 projection). Narrow ops — no shuffle at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_linenumber") == 1).select(
         F.col("l_orderkey").alias("order_id"),
         F.col("l_linenumber").alias("line_no"),
@@ -178,7 +174,7 @@ def q04_string_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's string-cleaning pass — lowercase (portfolio-etl.py
     :605), trim (:607), contains-filter (:602-604) — as one codegen'd
     projection instead of three pandas materializations."""
-    p = _t(spark, sf_dir, "part")
+    p = catalog.load(spark, sf_dir, "part")
     return p.filter(F.col("p_name").contains("a")).select(
         F.lower(F.trim(F.col("p_name"))).alias("sku"),
         F.upper(F.col("p_brand")).alias("brand_uc"),
@@ -206,7 +202,7 @@ def q05_safe_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     :680-681): try_cast yields NULL on unparseable input; coalesce is the
     ``fillna`` analogue (:638). Exercises both the success and failure
     paths of the cast."""
-    p = _t(spark, sf_dir, "part")
+    p = catalog.load(spark, sf_dir, "part")
     type_num = F.expr("try_cast(p_type AS DOUBLE)")
     return p.select(
         F.col("p_partkey").alias("sku"),
@@ -235,7 +231,7 @@ def q05_safe_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q06_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date enrichment (portfolio-etl.py:672-678: Year, English month
     name, MM-dd-yyyy formatting) over a pruned date window."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     return (
         o.filter(
             (F.col("o_orderdate") >= _ntz("1996-01-01"))
@@ -277,7 +273,7 @@ def q07_union_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``unionByName(allowMissingColumns=True)`` — pandas concat aligns by
     name and NaN-fills missing columns; so does this (the 'file' branch
     lacks totalprice). NULL-skipping SUM matches pandas NaN-skip."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     api = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_custkey").alias("custkey"),
         F.col("o_totalprice").alias("totalprice"),
@@ -318,8 +314,8 @@ def q08_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     portfolio-etl.py:668, :683). The dim side carries an explicit
     broadcast hint: at 100 TB the fact table must not shuffle for a
     dimension lookup."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))
@@ -349,10 +345,12 @@ def q09_sortmerge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact × fact equi-join — both sides large, so no broadcast hint:
     Catalyst plans a sort-merge join with both sides shuffled on the
     join key (AQE can downgrade to broadcast at small SF)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = catalog.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_orderdate")
+    o = catalog.load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_orderdate"
+    )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
@@ -396,8 +394,8 @@ def q10_right_join_multiplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     right 100× plan here anyway — both sides are key-partitioned fact
     data at scale. tools/plan_audit.py asserts the whole registry
     optimizes with ZERO hint WARNs so dead hints can't accumulate."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
     soldvalue = li.groupBy(F.col("l_partkey").alias("sku")).agg(
         F.sum("l_quantity").alias("qty")
     )
@@ -431,8 +429,8 @@ def q11_inventory_decrement(spark: SparkSession, sf_dir: str) -> DataFrame:
     stock LEFT JOIN sold, fillna(0) → coalesce, new_qty = qty_x − qty_y,
     column reorder. Idempotent snapshot semantics instead of the
     reference's self-overwriting CSV (:648)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
     sold = li.groupBy(F.col("l_partkey").alias("sku")).agg(
         F.sum("l_quantity").alias("sold_qty")
     )
@@ -465,8 +463,8 @@ def q12_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS as left_semi join — no row multiplication, the probe side
     streams through; engine capability beyond the reference (SURVEY.md
     §2.5)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    c = catalog.load(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -486,8 +484,8 @@ def q12_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q13_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS as left_anti join (customers who never ordered)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -510,7 +508,7 @@ def q14_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     :385-388) → TakeOrderedAndProject: each partition keeps its local
     top-10, only 10×partitions rows reach the driver — no global sort
     at any scale. Tie-break on o_orderkey for determinism."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(10)
@@ -530,7 +528,7 @@ def q14_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT = hash-aggregate without measures; partial distinct
     happens map-side before the shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_returnflag").alias("returnflag"),
         F.col("l_linestatus").alias("linestatus"),
@@ -555,7 +553,7 @@ def q15_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-measure aggregate incl. exact COUNT DISTINCT (expand +
     two-phase aggregation in Spark)."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     return o.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.countDistinct("o_custkey").alias("n_customers"),
@@ -578,7 +576,7 @@ def q16_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q17_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy subtotals — single Expand + hash-aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return li.rollup(
         F.col("l_returnflag").alias("returnflag"),
         F.col("l_linestatus").alias("linestatus"),
@@ -600,7 +598,7 @@ def q17_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q18_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over both group keys — all 4 grouping sets in one pass."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return li.cube(
         F.col("l_returnflag").alias("returnflag"),
         F.col("l_linestatus").alias("linestatus"),
@@ -633,7 +631,7 @@ def q18_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q19_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer — the canonical top-k-per-group window.
     One shuffle on the partition key; deterministic tie-break."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -665,7 +663,7 @@ def q20_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag(): per-customer order-over-order price delta (NULL for the
     first order — matches SQL). The subtraction operands are identical
     doubles in both engines, so the result is bitwise-deterministic."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
     )
@@ -691,7 +689,7 @@ def q20_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q21_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total with an explicit ROWS frame (decimal-exact)."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     w = (
         W.partitionBy("o_custkey")
         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
@@ -727,7 +725,7 @@ def q22_in_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-list + equality predicates (the brand splits, portfolio-etl.py
     :688-689 — implemented on the frame's *own* column, i.e. the intended
     semantics of the reference's misaligned-mask bug, SURVEY.md §4.3.2)."""
-    p = _t(spark, sf_dir, "part")
+    p = catalog.load(spark, sf_dir, "part")
     return (
         p.filter(
             F.col("p_brand").isin("Brand#1", "Brand#7", "Brand#13")
@@ -756,7 +754,7 @@ def q22_in_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q23_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN bucketing + aggregate."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 50000, "small")
         .when(F.col("o_totalprice") < 200000, "medium")
@@ -780,7 +778,7 @@ def q23_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q24_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation filter (HAVING)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return (
         li.groupBy(F.col("l_partkey").alias("sku"))
         .agg(F.sum("l_quantity").alias("qty"))
@@ -801,7 +799,7 @@ def q24_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q25_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct) — customers active in both years."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     y96 = o.filter(F.year("o_orderdate") == 1996).select(
         F.col("o_custkey").alias("custkey")
     )
@@ -826,7 +824,7 @@ def q26_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct) — churned customers. ``subtract`` is Spark's
     EXCEPT DISTINCT (``exceptAll`` would be bag difference — different
     semantics)."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     y96 = o.filter(F.year("o_orderdate") == 1996).select(
         F.col("o_custkey").alias("custkey")
     )
@@ -854,7 +852,7 @@ def q27_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays inside codegen, no Python."""
     from portfolio1_etl_spark.schemas import EVENT_PROPS
 
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     return (
         e.withColumn("props_s", F.from_json("props", EVENT_PROPS))
         .groupBy((F.col("props_s.k") % 10).alias("k_mod"))
@@ -879,7 +877,7 @@ def q27_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q28_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long→wide) with an explicit value list — Spark plans one
     pass; the oracle is the equivalent conditional aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = catalog.load(spark, sf_dir, "lineitem")
     return (
         li.groupBy(F.col("l_returnflag").alias("returnflag"))
         .pivot("l_linestatus", ["O", "F"])
@@ -909,10 +907,10 @@ def q29_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-schema rollup: fact joined through two snowflake dims. All
     three dims broadcast — the fact table is never shuffled for the
     joins, only for the final aggregate."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    n = catalog.load(spark, sf_dir, "nation")
+    r = catalog.load(spark, sf_dir, "region")
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)

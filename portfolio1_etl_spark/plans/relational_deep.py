@@ -36,10 +36,6 @@ _DSUM = "CAST(round(SUM(CAST({x} AS DECIMAL(28,8))), 2) AS DOUBLE)"
 _REV = "l.l_extendedprice * (1 - l.l_discount)"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 @query(
     "q198_volume_shipping",
     sql=f"""
@@ -67,11 +63,11 @@ def q198_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the lineitem→orders fact join (two tiny dims prune the fact
     rows early), ONE shuffle pair for the fact-fact join, then a
     map-side-combinable decimal aggregate on (nation, nation, year)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    s = catalog.load(spark, sf_dir, "supplier")
+    n = catalog.load(spark, sf_dir, "nation")
     ns = n.select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
@@ -142,13 +138,13 @@ def q199_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is the only float op (identical operands → identical
     bits in both engines, then a stabilizing 6 dp round). Plan: every
     dimension broadcasts; the fact pair shuffles once; one aggregate."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    p = _t(spark, sf_dir, "part")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    s = catalog.load(spark, sf_dir, "supplier")
+    n = catalog.load(spark, sf_dir, "nation")
+    r = catalog.load(spark, sf_dir, "region")
+    p = catalog.load(spark, sf_dir, "part")
     nc = n.select("n_nationkey", "n_regionkey")
     ns = n.select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
@@ -207,10 +203,10 @@ def q205_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (same bits), then snapped to DECIMAL(28,8) for the exact
     order-independent sum. Part and supplier dims broadcast; one
     map-side-combinable aggregate."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
+    s = catalog.load(spark, sf_dir, "supplier")
+    n = catalog.load(spark, sf_dir, "nation")
     ns = n.select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation")
     )
@@ -255,10 +251,10 @@ def q200_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract). Plan: date + returnflag predicates prune the facts at
     the scan, customer/nation broadcast, one aggregate, then a
     TakeOrderedAndProject top-20 (never a global sort)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    n = catalog.load(spark, sf_dir, "nation")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.filter(F.col("l_returnflag") == "R")
@@ -302,8 +298,8 @@ def q201_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     collapse to per-customer counts on ONE shuffle (count(o_orderkey)
     ignores the null-extended rows), then the tiny count-of-counts
     fold."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
     per_cust = (
         c.join(o, c["c_custkey"] == o["o_custkey"], "left")
         .groupBy(c["c_custkey"])
@@ -335,8 +331,8 @@ def q202_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Numerator and denominator are exact decimal sums; the percentage
     divides identical doubles in both engines and rounds to 4 dp.
     Part broadcasts; one monthly aggregate."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
     return (
@@ -381,9 +377,9 @@ def q203_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying orderkeys), then the survivors join orders and the
     broadcast customer dim — never a lineitem-orders join before the
     filter. Quantities are integral doubles (exact sums, exact cast)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
@@ -428,8 +424,8 @@ def q204_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the part dim broadcast, rather than exploding it into a
     union of three scans. One row out: exact decimal revenue and the
     qualifying line count."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
     q = F.col("l_quantity")
     sz = F.col("p_size")
     br = F.col("p_brand")
@@ -472,7 +468,7 @@ def q216_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical 'filter reaches the scan' probe. Discount bounds
     are cast to DOUBLE on the oracle side so both engines compare
     against the identical IEEE literal, never a DECIMAL(3,2)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = catalog.load(spark, sf_dir, "lineitem")
     disc_rev = F.col("l_extendedprice") * F.col("l_discount")
     return (
         l.filter(
@@ -518,8 +514,8 @@ def q217_shipping_lag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders), conditional-sum pairs fold map-side into 3 rows. Day
     arithmetic goes through DATE casts in BOTH engines so timestamp
     sub-day components can never skew the bucket edge."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders")
     lag = F.datediff(
         F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
     )
@@ -572,9 +568,9 @@ def q218_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; then one COUNT(DISTINCT) aggregate. At 100 TB the
     only wide exchange is the initial pair-dedup, keyed on two fixed
     bigints."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
+    s = catalog.load(spark, sf_dir, "supplier")
     ps = l.select("l_partkey", "l_suppkey").distinct()
     complaints = s.filter(F.col("s_acctbal") < 0).select("s_suppkey")
     pf = p.filter(
@@ -636,10 +632,10 @@ def q219_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes the scan; both aggregates reuse the l_partkey-clustered
     shuffle; part and nation broadcast; the final semi-join is
     against a tiny qualifying set."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    l = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part")
+    s = catalog.load(spark, sf_dir, "supplier")
+    n = catalog.load(spark, sf_dir, "nation")
     shipped = (
         l.filter(
             (F.col("l_shipdate") >= "1997-01-01")

@@ -29,10 +29,6 @@ from portfolio1_etl_spark.functions import dsum_money
 from portfolio1_etl_spark.plans.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 @query(
     "q165_small_quantity_revenue",
     sql="""
@@ -63,8 +59,8 @@ def q165_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold table shrink to the selected slice instead of carrying
     full part cardinality (a line-level filter could NOT push down —
     the subquery averages a part's unfiltered lines)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") < 5).select("p_partkey")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part").filter(F.col("p_size") < 5).select("p_partkey")
     selected = li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
     thresholds = selected.groupBy("l_partkey").agg(
         (F.lit(0.2) * F.avg("l_quantity")).alias("qty_threshold")
@@ -114,8 +110,8 @@ def q166_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled self-joins of the full fact). A returned line qualifies
     when its order has >1 distinct supplier overall AND every returned
     line on it comes from this one supplier (min = max = mine)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = catalog.load(spark, sf_dir, "lineitem")
+    o = catalog.load(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey")
     order_stats = li.groupBy("l_orderkey").agg(
@@ -140,7 +136,7 @@ def q166_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("rmax") == F.col("l_suppkey"))
         )
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey")
+    s = catalog.load(spark, sf_dir, "supplier").select("s_suppkey")
     return (
         base.join(F.broadcast(s), base.l_suppkey == s.s_suppkey, "left_semi")
         .groupBy(F.col("l_suppkey").alias("suppkey"))
@@ -178,12 +174,12 @@ def q167_untapped_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the orders keys — both the shapes Catalyst
     reaches from the subquery spelling, written explicitly. Customer
     key's leading digit stands in for the country-code segment."""
-    c = _t(spark, sf_dir, "customer")
+    c = catalog.load(spark, sf_dir, "customer")
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         F.avg("c_acctbal").alias("abal")
     )
     o = (
-        _t(spark, sf_dir, "orders")
+        catalog.load(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -232,11 +228,11 @@ def q169_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timestamp_ntz literals (the q02 window pattern): a TIMESTAMP_LTZ
     # literal only matches the NTZ column under the UTC session pin —
     # the NTZ cast keeps the boundary timezone-independent
-    o = _t(spark, sf_dir, "orders").filter(
+    o = catalog.load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ntz("1996-01-01"))
         & (F.col("o_orderdate") < _ntz("1996-07-01"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = catalog.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     matched = o.join(
         li,
         (o.o_orderkey == li.l_orderkey)
@@ -277,9 +273,9 @@ def q187_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelling. Exact-decimal revenue makes the threshold comparison
     bit-deterministic — a group sitting exactly AT the boundary cannot
     flip on sum order."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    s = catalog.load(spark, sf_dir, "supplier")
+    n = catalog.load(spark, sf_dir, "nation")
     from portfolio1_etl_spark.functions import dsum_product
 
     rev = (
@@ -335,9 +331,9 @@ def q188_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The window partitions on p_partkey over pair-grain rows (bounded
     by |partsupp|, not |lineitem|); the p_size filter prunes parts
     BEFORE the window."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") < 10)
-    s = _t(spark, sf_dir, "supplier")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    p = catalog.load(spark, sf_dir, "part").filter(F.col("p_size") < 10)
+    s = catalog.load(spark, sf_dir, "supplier")
     from pyspark.sql import Window as W
 
     ps = li.select(
@@ -383,8 +379,8 @@ def q189_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-deterministic. The date filter pushes to the parquet scan
     (PushedFilters); the view is supplier-grain, so everything after
     the one fact shuffle is dimension-sized."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    li = catalog.load(spark, sf_dir, "lineitem")
+    s = catalog.load(spark, sf_dir, "supplier")
     from portfolio1_etl_spark.functions import dsum_product
 
     rev = (

@@ -26,10 +26,6 @@ from portfolio1_etl_spark.operators.scd import scd2_rebuild
 from portfolio1_etl_spark.plans.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
-
-
 @query(
     "q46_scd2_intervals",
     sql="""
@@ -64,7 +60,7 @@ def q46_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental daily form is operators/scd.scd2_apply — replayed
     history of touched entities + new events through the same plan,
     equivalence asserted in tests/test_scd2.py."""
-    return scd2_rebuild(_t(spark, sf_dir, "events"))
+    return scd2_rebuild(catalog.load(spark, sf_dir, "events"))
 
 
 #: Merge cutoff: customers below it form the base dimension; order
@@ -110,7 +106,7 @@ def q47_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness surface) overwrites only the partitions containing
     touched keys — see operators/sinks.write_partitioned."""
     base = (
-        _t(spark, sf_dir, "customer")
+        catalog.load(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < _MERGE_CUTOFF)
         .select(
             F.col("c_custkey").alias("custkey"),
@@ -118,7 +114,7 @@ def q47_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     changes = (
-        _t(spark, sf_dir, "orders")
+        catalog.load(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
@@ -269,7 +265,7 @@ def q151_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (portfolio-etl.py:634-650) published as deltas."""
     from portfolio1_etl_spark.operators.sinks import change_feed
 
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     base = o.select(F.col("o_orderkey").alias("id"), F.col("o_custkey").alias("val"))
     from_v = base.filter(F.col("id") % 10 < 8).unionAll(
         base.filter(F.col("id") % 100 == 7)
@@ -355,8 +351,8 @@ def q153_join_strategy_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for lt, lk, rt, rk in pairs:
         adv = join_advice_frame(
-            _t(spark, sf_dir, lt),
-            _t(spark, sf_dir, rt),
+            catalog.load(spark, sf_dir, lt),
+            catalog.load(spark, sf_dir, rt),
             lk,
             rk,
             how="inner",
@@ -445,7 +441,7 @@ def q168_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     base = o.select(F.col("o_orderkey").alias("id"), F.col("o_custkey").alias("val"))
     states = [
         base.filter(F.col("id") % 4 < 3),
@@ -560,7 +556,7 @@ def q172_replica_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     over ≤millions of rows stay far under BIGINT range). The replica
     carries injected corruption on every 97th key, so the scoreboard
     gates both directions: corrupt buckets flag 0, clean buckets 1."""
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     a = o.select(
         F.col("o_orderkey").alias("id"),
         F.col("o_custkey").alias("val"),
@@ -670,7 +666,7 @@ def q180_pit_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, orders of magnitude below the fact stream; a pathologically
     deep history would switch to the sorted merge-asof form
     (plans/advanced.q37's operator)."""
-    e = _t(spark, sf_dir, "events")
+    e = catalog.load(spark, sf_dir, "events")
     iv = scd2_rebuild(e.filter(F.col("event_type") != "purchase")).select(
         F.col("user_id").alias("iv_user"),
         "state",
@@ -747,7 +743,7 @@ def q185_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     cents = (
         F.col("o_totalprice").cast("decimal(18,2)") * 100
     ).cast("long")
@@ -820,7 +816,7 @@ def q192_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow projection. Balance arithmetic rides DECIMAL(18,2) per the
     money-parity contract."""
     base = (
-        _t(spark, sf_dir, "customer")
+        catalog.load(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") < _MERGE_CUTOFF)
         .select(
             F.col("c_custkey").alias("custkey"),
@@ -828,7 +824,7 @@ def q192_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     changes = (
-        _t(spark, sf_dir, "orders")
+        catalog.load(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
@@ -954,7 +950,7 @@ def q239_merge_into_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").alias("id"), F.col("o_custkey").alias("val")
     )
@@ -1086,7 +1082,7 @@ def q240_widened_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, path)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     even = o.filter(F.col("o_orderkey") % 2 == 0)
     write_versioned(
         even.select(
@@ -1211,8 +1207,8 @@ def q244_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, base)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
     ok = F.col("o_orderkey")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     a_states = [
@@ -1340,8 +1336,8 @@ def q263_joinview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, base)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = catalog.load(spark, sf_dir, "orders")
+    c = catalog.load(spark, sf_dir, "customer")
     ok = F.col("o_orderkey")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     a0 = o.select(
@@ -1467,7 +1463,7 @@ def q288_aggview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, base)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     ok = F.col("o_orderkey")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     a0 = o.select(
@@ -1567,7 +1563,7 @@ def q289_distinctview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs, jpath = _hadoop_fs(spark, base)
     if fs.exists(jpath):
         fs.delete(jpath, True)
-    o = _t(spark, sf_dir, "orders")
+    o = catalog.load(spark, sf_dir, "orders")
     ok = F.col("o_orderkey")
     a0 = o.select(
         ok.alias("id"),
