@@ -230,12 +230,14 @@ def write_versioned(
     optimistic-concurrency-safe. Each writer stages its data under a
     uuid-unique ``_staging/{token}/`` directory (no two writers ever
     contend on a path), then commits with a CREATE-EXCLUSIVE rename
-    of ``_manifests/v=N.json`` — the compare-and-swap. Losing the
-    race raises ``ConcurrentCommitError`` internally; the writer
-    re-reads the latest version, re-derives its change feed against
-    the ACTUAL new predecessor, and retries at N+1 (bounded, then
-    loud failure — never a silent clobber; two-interleaved-writers
-    test in test_sinks_layout). Non-manifest chains remain
+    of ``_manifests/v=N.json`` — the compare-and-swap, through the
+    same ``_commit_with_retry`` every chain mutation uses. A lost race
+    re-reads the latest version, re-derives the constraint check,
+    widening audit and change feed against the ACTUAL new
+    predecessor, and retries at N+1 (bounded, then loud failure —
+    never a silent clobber; two-interleaved-writers test in
+    test_sinks_layout). A refused write leaves no staging behind.
+    Non-manifest chains remain
     single-writer (the batch-job norm) — a multi-writer deployment
     without manifests needs a lock service in front.
 
@@ -296,10 +298,7 @@ def write_versioned(
     crash could leave half-updated (streaming/jobs.py
     ``versioned_cdc_stream``)."""
     spark = df.sparkSession
-    fs, _ = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    has_manifests = fs.exists(hpath(f"{path}/_manifests"))
+    has_manifests = _has_manifests(spark, path)
     if manifest and not has_manifests and _dir_versions(spark, path):
         raise ValueError(
             f"{path} already holds non-manifest versions; a chain "
@@ -313,125 +312,65 @@ def write_versioned(
         w = frame.write.mode("errorifexists")
         return w.partitionBy(*partition_by) if partition_by else w
 
+    def _feed(written: DataFrame, new: int) -> DataFrame:
+        # diff the WRITTEN files (cheap re-scan) against the previous
+        # snapshot — never the incoming plan, which would recompute
+        # the upstream pipeline a second time
+        if new == 0:
+            return written.withColumn("_change", F.lit("insert"))
+        return _step_changes(written, read_version(spark, path, new - 1))
+
     if not manifest:
         vs = _versions(spark, path)
         new = (max(vs) + 1) if vs else 0
         _writer(df).parquet(f"{path}/v={new}")
         if capture_changes:
-            # diff the WRITTEN files (cheap re-scan) against the
-            # previous snapshot — never the incoming plan, which
-            # would recompute the upstream pipeline a second time
-            written = spark.read.parquet(f"{path}/v={new}")
-            if new == 0:
-                feed = written.withColumn("_change", F.lit("insert"))
-            else:
-                feed = _step_changes(
-                    written, read_version(spark, path, new - 1)
-                )
-            feed.write.mode("errorifexists").parquet(
-                f"{path}/_changes/v={new}"
-            )
+            feed = _feed(spark.read.parquet(f"{path}/v={new}"), new)
+            feed.write.mode("errorifexists").parquet(f"{path}/_changes/v={new}")
         return new
 
-    # manifest chain: stage once under a writer-unique token, then
-    # CAS-commit with bounded retry. The data staging is version-
-    # independent, so a lost race re-derives only the change feed.
-    import uuid
+    # manifest chain: the data stages once (version-independent); each
+    # commit attempt re-derives the rest against its ACTUAL predecessor
+    def stage(staging):
+        _writer(df).parquet(f"{path}/{staging}/data")
+        return spark.read.parquet(f"{path}/{staging}/data")
 
-    token = uuid.uuid4().hex[:12]
-    data_rel = f"_staging/{token}/data"
-    _writer(df).parquet(f"{path}/{data_rel}")
-    written = spark.read.parquet(f"{path}/{data_rel}")
-    for _ in range(_COMMIT_RETRIES):
-        vs = _versions(spark, path)
-        new = (max(vs) + 1) if vs else 0
-        promotions = None
-        constraints = None
-        prev_m = _read_manifest(spark, path, new - 1) if new > 0 else None
+    def attempt(staging, written, new, prev_m):
+        promotions = constraints = None
         if new > 0:
-            # constraints ride every manifest and carry forward; the
-            # incoming snapshot validates per CAS attempt (a lost race
-            # may have ADDED a constraint under this writer's feet)
-            constraints = (prev_m or {}).get("constraints")
+            # constraints ride every manifest and carry forward; a lost
+            # race may have ADDED a constraint under this writer's feet
+            constraints = prev_m.get("constraints")
             _enforce_constraints(written, constraints, "snapshot write")
-        if new > 0:
-            # widening audit against the ACTUAL predecessor (re-derived
-            # per CAS attempt): value-preserving promotions commit and
-            # are RECORDED in the manifest; narrowing or cross-family
-            # changes refuse at write time — before any reader can
-            # trip over them at diff or span-fold time. Schema-only
-            # probe: the recorded manifest schemas answer it without
-            # building (and inferring) the predecessor's scan.
-            prior_fields = _manifest_head_types(prev_m or {}) or {
+            # widening audit: value-preserving promotions commit and are
+            # RECORDED; anything else refuses before any reader can trip
+            # over it. Schema-only probe: the recorded manifest schemas
+            # answer it without building the predecessor's scan.
+            prior_fields = _manifest_head_types(prev_m) or {
                 f.name: f.dataType
                 for f in read_version(spark, path, new - 1).schema.fields
             }
-            promotions = {}
-            for f in written.schema.fields:
-                old_t = prior_fields.get(f.name)
-                if old_t is not None and f.dataType != old_t:
-                    w = _widened(f.dataType, old_t)
-                    if w is None or w != f.dataType:
-                        raise ValueError(
-                            f"column {f.name!r} would change "
-                            f"{old_t.simpleString()} -> "
-                            f"{f.dataType.simpleString()}: not a type-"
-                            "widening promotion; narrowing/reinterpreting "
-                            "needs an explicit migration write"
-                        )
-                    promotions[f.name] = {
-                        "from": old_t.simpleString(),
-                        "to": f.dataType.simpleString(),
-                    }
-            promotions = promotions or None
-        changes_rel = None
+            promotions = _type_promotions(written.schema, prior_fields, "column")
+        changes, rels = [], []
         if capture_changes:
-            # feed staging is PER ATTEMPT: its content depends on the
-            # predecessor version, which a lost race changes
-            changes_rel = f"_staging/{token}/changes-{new}"
-            if new == 0:
-                feed = written.withColumn("_change", F.lit("insert"))
-            else:
-                feed = _step_changes(
-                    written, read_version(spark, path, new - 1)
-                )
-            feed.write.mode("errorifexists").parquet(
-                f"{path}/{changes_rel}"
-            )
-        try:
-            _commit_manifest(
-                spark,
-                path,
-                new,
-                meta,
-                files=_list_rel_parquet(spark, path, data_rel),
-                changes=(
-                    _list_rel_parquet(spark, path, changes_rel)
-                    if changes_rel
-                    else []
-                ),
-                base=data_rel,
-                partition_by=partition_by,
-                type_promotions=promotions,
-                constraints=constraints,
-                schemas={str(new): written.schema.jsonValue()},
-            )
-            return new
-        except ConcurrentCommitError:
-            # another writer took v=new; drop our stale feed attempt
-            # and retry against the advanced chain
-            if changes_rel and not fs.delete(
-                hpath(f"{path}/{changes_rel}"), True
-            ):
-                raise IOError(
-                    f"could not clean stale staging {changes_rel}"
-                )
-    if not fs.delete(hpath(f"{path}/_staging/{token}"), True):
-        pass  # best-effort abandon; vacuum_staging sweeps orphans
-    raise ConcurrentCommitError(
-        f"gave up committing to {path} after {_COMMIT_RETRIES} lost "
-        "races — contention too high; back off and retry the write"
-    )
+            # the feed depends on the predecessor: staged PER ATTEMPT
+            changes_rel = f"{staging}/changes-{new}"
+            feed = _feed(written, new)
+            feed.write.mode("errorifexists").parquet(f"{path}/{changes_rel}")
+            changes = _list_rel_parquet(spark, path, changes_rel)
+            rels = [changes_rel]
+        return {
+            "meta": meta,
+            "files": _list_rel_parquet(spark, path, f"{staging}/data"),
+            "changes": changes,
+            "base": f"{staging}/data",
+            "partition_by": partition_by or None,
+            "type_promotions": promotions,
+            "constraints": constraints,
+            "schemas": {str(new): written.schema.jsonValue()},
+        }, rels
+
+    return _commit_with_retry(spark, path, stage, attempt)
 
 
 def _widened(a, b):
@@ -459,6 +398,33 @@ def _widened(a, b):
     ):
         return a if a.precision >= b.precision else b
     return None
+
+
+def _type_promotions(schema, prior_types: dict, what: str) -> dict | None:
+    """The write-time widening audit of a commit (snapshot or upsert):
+    the ``type_promotions`` manifest block for every column of
+    ``schema`` whose type moved off ``prior_types`` (name → DataType)
+    by a ``_widened`` promotion, None when none moved. Any other type
+    change refuses: committing it would put mixed-type parquet into
+    the chain and corrupt (or silently coerce) every later read at the
+    diff, span-fold or cross-seq ``unionByName``."""
+    promotions = {}
+    for f in schema.fields:
+        old_t = prior_types.get(f.name)
+        if old_t is None or f.dataType == old_t:
+            continue
+        if _widened(f.dataType, old_t) != f.dataType:
+            raise ValueError(
+                f"{what} {f.name!r} would change {old_t.simpleString()} -> "
+                f"{f.dataType.simpleString()}: not a type-widening "
+                "promotion; narrowing/reinterpreting needs an explicit "
+                "migration write"
+            )
+        promotions[f.name] = {
+            "from": old_t.simpleString(),
+            "to": f.dataType.simpleString(),
+        }
+    return promotions or None
 
 
 def _align_for_diff(
@@ -662,6 +628,15 @@ def _dir_versions(spark: SparkSession, path: str) -> list[int]:
     return sorted(vs)
 
 
+def _has_manifests(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` is a manifest chain (its ``_manifests``
+    directory exists)."""
+    fs, _ = _hadoop_fs(spark, path)
+    return fs.exists(
+        spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{path}/_manifests")
+    )
+
+
 def _versions(spark: SparkSession, path: str) -> list[int]:
     """Committed version numbers. On a manifest chain only versions
     whose manifest file landed count — an uncommitted data directory
@@ -680,6 +655,15 @@ def _versions(spark: SparkSession, path: str) -> list[int]:
         if status.isFile() and (m := re.fullmatch(r"v=(\d+)\.json", name)):
             vs.append(int(m.group(1)))
     return sorted(vs)
+
+
+def _latest(spark: SparkSession, path: str) -> int:
+    """The newest committed version; FileNotFoundError on an empty
+    chain."""
+    vs = _versions(spark, path)
+    if not vs:
+        raise FileNotFoundError(f"no versions under {path}")
+    return vs[-1]
 
 
 def _list_rel_parquet(spark: SparkSession, path: str, sub: str) -> list[str]:
@@ -719,8 +703,9 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed the same version/pointer first. The
-    caller either retries against the new latest (``write_versioned``)
-    or aborts loudly — never silently clobbers the winner's commit."""
+    caller either retries against the new latest
+    (``_commit_with_retry``) or aborts loudly — never silently
+    clobbers the winner's commit."""
 
 
 def _write_small_file_atomic(
@@ -826,8 +811,7 @@ def _write_small_file_atomic(
     try:
         fc.rename(tmp, final, opts)
     except Py4JJavaError as e:
-        if not fs.delete(tmp, False):  # best-effort stage cleanup
-            pass
+        fs.delete(tmp, False)  # best-effort stage cleanup
         exc = str(e.java_exception.getClass().getName())
         if not overwrite and "AlreadyExists" in exc:
             raise ConcurrentCommitError(
@@ -880,90 +864,125 @@ def _enforce_constraints(df: DataFrame, cons: dict | None, what: str) -> None:
         )
 
 
+#: the optional blocks of a manifest, in their on-disk order between
+#: ``committed_at`` and ``files``; a block is written only when set
+_MANIFEST_BLOCKS = (
+    "base",
+    "partition_by",
+    "seqs",
+    "row_deletes",
+    "bases",
+    "type_promotions",
+    "clone_of",
+    "constraints",
+    "stats",
+    # per-seq read-back schemas (see _recorded_schema): readers skip
+    # footer-inference jobs for every group recorded here
+    "schemas",
+)
+
+
 def _commit_manifest(
     spark: SparkSession,
     path: str,
     n: int,
     meta: dict | None = None,
-    files: list[str] | None = None,
-    changes: list[str] | None = None,
-    cas: bool = True,
-    base: str | None = None,
-    partition_by: list[str] | None = None,
-    seqs: dict[str, int] | None = None,
-    row_deletes: list[dict] | None = None,
-    bases: dict[str, str] | None = None,
-    type_promotions: dict[str, dict] | None = None,
-    clone_of: dict | None = None,
-    constraints: dict | None = None,
-    stats: dict | None = None,
-    schemas: dict | None = None,
+    files: list[str] | tuple = (),
+    changes: list[str] | tuple = (),
+    **blocks,
 ) -> None:
     """The commit point of a manifest chain: one small JSON file
-    listing the version's data (and change-feed) files, staged to a
-    dot-tmp name and renamed into ``_manifests/v=N.json``. Until this
-    file exists, no reader resolves the version.
-
-    ``cas=True`` (the default — every production commit path) makes
-    the rename CREATE-EXCLUSIVE: if another writer's ``v=N.json``
-    landed first the commit raises ``ConcurrentCommitError`` instead
-    of silently replacing the winner's manifest — the
-    compare-and-swap half of the concurrent-writer protocol
-    (``write_versioned`` reacts by re-reading the latest version and
-    retrying at N+1).
-
-    ``files``/``changes`` are the r9 staged-layout inputs (root-
-    relative parquet paths); when omitted the legacy ``v=N`` /
-    ``_changes/v=N`` directories are listed instead."""
+    listing the version's data (``files``) and change-feed
+    (``changes``) parquet files, root-relative, plus the
+    ``_MANIFEST_BLOCKS`` passed as keywords, staged to a dot-tmp name
+    and renamed CREATE-EXCLUSIVE into ``_manifests/v=N.json``. Until
+    this file exists, no reader resolves the version; if another
+    writer's ``v=N.json`` landed first the commit raises
+    ``ConcurrentCommitError`` instead of replacing the winner's
+    manifest — the compare-and-swap that ``_commit_with_retry`` retries
+    on."""
     import json
 
     from datetime import datetime, timezone
 
-    layout = {}
-    if base is not None:
-        layout["base"] = base
-    if partition_by:
-        layout["partition_by"] = list(partition_by)
-    if seqs is not None:
-        layout["seqs"] = seqs
-    if row_deletes is not None:
-        layout["row_deletes"] = row_deletes
-    if bases is not None:
-        layout["bases"] = bases
-    if type_promotions:
-        layout["type_promotions"] = type_promotions
-    if clone_of is not None:
-        layout["clone_of"] = clone_of
-    if constraints:
-        layout["constraints"] = constraints
-    if stats:
-        layout["stats"] = stats
-    if schemas:
-        # per-seq read-back schemas (see _recorded_schema): readers
-        # skip footer-inference jobs for every group recorded here
-        layout["schemas"] = schemas
     doc = json.dumps(
         {
             "version": n,
             "committed_at": datetime.now(timezone.utc).isoformat(),
-            **layout,
-            "files": (
-                files
-                if files is not None
-                else _list_rel_parquet(spark, path, f"v={n}")
-            ),
-            "changes": (
-                changes
-                if changes is not None
-                else _list_rel_parquet(spark, path, f"_changes/v={n}")
-            ),
+            **{
+                k: blocks[k]
+                for k in _MANIFEST_BLOCKS
+                if blocks.get(k) is not None
+            },
+            "files": list(files),
+            "changes": list(changes),
             "meta": meta or {},
         },
         indent=1,
     )
     _write_small_file_atomic(
-        spark, f"{path}/_manifests/v={n}.json", doc, overwrite=not cas
+        spark, f"{path}/_manifests/v={n}.json", doc, overwrite=False
     )
+
+
+def _commit_with_retry(spark: SparkSession, path: str, stage, attempt) -> int:
+    """The one optimistic commit of every manifest-chain mutation;
+    returns the committed version.
+
+    One writer token per call: ``stage(staging)`` (may be None) writes
+    the version-independent files under ``staging`` =
+    ``_staging/{token}`` once and returns what the attempts need. Each
+    attempt lists the versions and reads the head manifest once, then
+    ``attempt(staging, staged, new, head)`` (``head`` None on an empty
+    chain) validates against that head, stages what depends on it and
+    returns ``(commit_kwargs, rels)``: the ``_commit_manifest``
+    keywords for version ``new`` and the staged paths this attempt
+    wrote. A lost race (``ConcurrentCommitError`` from the commit)
+    deletes ``rels`` — a failed delete raises ``IOError`` — and
+    re-derives against the advanced head, at most ``_COMMIT_RETRIES``
+    times.
+
+    Cleanup rule: when the call fails and nothing can have committed —
+    a refusal raised while staging or deriving an attempt, or giving
+    up after the last lost race — the whole ``staging`` directory is
+    deleted. Any other error out of ``_commit_manifest`` is ambiguous
+    (the manifest may have landed before e.g. the tmp-file removal
+    failed), so staging stays and ``vacuum_chain`` decides by
+    referencedness. A ``ConcurrentCommitError`` raised by ``attempt``
+    itself is a refusal, not a lost race: it propagates unretried."""
+    import uuid
+
+    fs, _ = _hadoop_fs(spark, path)
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    staging = f"_staging/{uuid.uuid4().hex[:12]}"
+    committing = False
+    try:
+        staged = stage(staging) if stage else None
+        for _ in range(_COMMIT_RETRIES):
+            vs = _versions(spark, path)
+            head = _read_manifest(spark, path, vs[-1]) if vs else None
+            if vs and head is None:
+                raise ValueError(f"{path} v={vs[-1]} has no manifest")
+            new = vs[-1] + 1 if vs else 0
+            kwargs, rels = attempt(staging, staged, new, head)
+            committing = True
+            try:
+                _commit_manifest(spark, path, new, **kwargs)
+                return new
+            except ConcurrentCommitError:
+                committing = False
+            for rel in rels:
+                if not fs.delete(hpath(f"{path}/{rel}"), True):
+                    raise IOError(f"could not clean stale staging {rel}")
+        raise ConcurrentCommitError(
+            f"gave up committing to {path} after {_COMMIT_RETRIES} lost "
+            "races — contention too high; back off and retry"
+        )
+    except BaseException:
+        if not committing:
+            # False only when nothing was staged yet
+            fs.delete(hpath(f"{path}/{staging}"), True)
+        raise
 
 
 def _read_manifest(spark: SparkSession, path: str, n: int) -> dict | None:
@@ -982,14 +1001,19 @@ def version_meta(spark: SparkSession, path: str, n: int | None = None) -> dict:
     written without meta; raises FileNotFoundError for non-manifest
     chains/versions (they have no committed metadata)."""
     if n is None:
-        vs = _versions(spark, path)
-        if not vs:
-            raise FileNotFoundError(f"no versions under {path}")
-        n = vs[-1]
+        n = _latest(spark, path)
     m = _read_manifest(spark, path, n)
     if m is None:
         raise FileNotFoundError(f"no manifest for version {n} under {path}")
     return m.get("meta", {})
+
+
+def _manifest_rels(m: dict) -> list[str]:
+    """Every root-relative path manifest ``m`` references: data,
+    change-feed and equality-delete key files."""
+    return (
+        m["files"] + m["changes"] + [e["path"] for e in m.get("row_deletes") or []]
+    )
 
 
 def _manifest_bases(m: dict) -> dict[str, str]:
@@ -1070,10 +1094,7 @@ def read_version(spark: SparkSession, path: str, n: int | None = None) -> DataFr
     files. The delete frames are key-only and tiny relative to the
     base, so at scale the anti-join broadcasts."""
     if n is None:
-        vs = _versions(spark, path)
-        if not vs:
-            raise FileNotFoundError(f"no versions under {path}")
-        n = vs[-1]
+        n = _latest(spark, path)
     m = _read_manifest(spark, path, n)
     if m is None:
         return spark.read.parquet(f"{path}/v={n}")
@@ -1186,12 +1207,7 @@ def _delta_commit(
     version — the streaming jobs' exactly-once markers need to ride
     O(delta) commits; None keeps the prior version's meta carrying
     forward unchanged (the pre-r13 behavior)."""
-    import uuid
-
-    fs, _ = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(hpath(f"{path}/_manifests")):
+    if not _has_manifests(spark, path):
         raise ValueError(
             f"{path} is not a manifest chain — row-level delta commits "
             "need atomic one-file manifests (write_versioned(..., "
@@ -1201,9 +1217,6 @@ def _delta_commit(
         raise ValueError("key_cols must be non-empty")
     keys = (keys_df if keys_df is not None else source_df.select(*key_cols))
     keys = keys.select(*key_cols).dropDuplicates()
-    token = uuid.uuid4().hex[:12]
-    # version-independent stages land ONCE; only the change feed
-    # (which depends on the actual predecessor) re-stages per attempt.
     # On a hive-partitioned chain the appended rows stage in the SAME
     # layout (partitionBy) so the per-seq basePath read restores the
     # partition columns for every file group uniformly.
@@ -1212,44 +1225,41 @@ def _delta_commit(
     if head:
         m0 = _read_manifest(spark, path, head[-1])
         pb0 = (m0 or {}).get("partition_by")
-    keys_rel = f"_staging/{token}/rowdel"
-    data_rel = f"_staging/{token}/data" if source_df is not None else None
 
-    # the keys and data stagings land under distinct paths with no
+    # version-independent stages land ONCE; only the change feed
+    # (which depends on the actual predecessor) re-stages per attempt.
+    # The keys and data stagings land under distinct paths with no
     # dependency — write both (and their footer read-backs) from
     # driver threads (guide §2.6). The read-back inference results are
     # captured into the manifest (_recorded_schema) and reused below
     # for constraint checks and the change feed, so every later
     # read_version of this commit skips its inference jobs entirely.
-    def _stage_keys():
-        keys.write.mode("errorifexists").parquet(f"{path}/{keys_rel}")
-        return spark.read.parquet(f"{path}/{keys_rel}")
+    def stage(staging):
+        def _stage_keys():
+            keys.write.mode("errorifexists").parquet(f"{path}/{staging}/rowdel")
+            return spark.read.parquet(f"{path}/{staging}/rowdel")
 
-    def _stage_data():
-        if data_rel is None:
-            return None
-        w = source_df.write.mode("errorifexists")
-        if pb0:
-            w = w.partitionBy(*pb0)
-        w.parquet(f"{path}/{data_rel}")
-        return spark.read.parquet(f"{path}/{data_rel}")
+        def _stage_data():
+            if source_df is None:
+                return None
+            w = source_df.write.mode("errorifexists")
+            if pb0:
+                w = w.partitionBy(*pb0)
+            w.parquet(f"{path}/{staging}/data")
+            return spark.read.parquet(f"{path}/{staging}/data")
 
-    from portfolio1_etl_spark.parallelism import overlap_jobs
+        from portfolio1_etl_spark.parallelism import overlap_jobs
 
-    keys_read, appended = overlap_jobs(_stage_keys, _stage_data)
-    for _ in range(_COMMIT_RETRIES):
-        vs = _versions(spark, path)
-        if not vs:
+        return overlap_jobs(_stage_keys, _stage_data)
+
+    def attempt(staging, staged, new, m):
+        keys_read, appended = staged
+        if m is None:
             raise FileNotFoundError(
                 f"no versions under {path} — a delta commit needs a base "
                 "snapshot (write_versioned first)"
             )
-        latest = vs[-1]
-        m = _read_manifest(spark, path, latest)
-        if m is None:
-            raise ValueError(f"{path} v={latest} has no manifest")
-        new = latest + 1
-        prior = read_version(spark, path, latest)
+        prior = read_version(spark, path, new - 1)
         missing = [c for c in key_cols if c not in prior.columns]
         if missing:
             raise ValueError(f"key columns {missing} not in {path} schema")
@@ -1262,32 +1272,12 @@ def _delta_commit(
                     f"{sorted(prior.columns)}); schema evolution on a "
                     "delta chain is an explicit full-snapshot write"
                 )
-            # names alone are not enough: a same-named column of a
-            # different TYPE would commit mixed-type parquet into the
-            # chain and corrupt (or silently coerce) every later
-            # read_version at the cross-seq unionByName. Refuse at
-            # write time — except the sanctioned value-preserving
-            # widenings, recorded like write_versioned records them.
-            prior_types = {f.name: f.dataType for f in prior.schema.fields}
-            promotions = {}
-            for f in source_df.schema.fields:
-                old_t = prior_types[f.name]
-                if f.dataType == old_t:
-                    continue
-                w = _widened(f.dataType, old_t)
-                if w is None or w != f.dataType:
-                    raise ValueError(
-                        f"upsert column {f.name!r} would change "
-                        f"{old_t.simpleString()} -> "
-                        f"{f.dataType.simpleString()}: not a type-"
-                        "widening promotion; a delta chain refuses "
-                        "narrowing/reinterpretation at commit time"
-                    )
-                promotions[f.name] = {
-                    "from": old_t.simpleString(),
-                    "to": f.dataType.simpleString(),
-                }
-            promotions = promotions or None
+            # names alone are not enough: types are audited too
+            promotions = _type_promotions(
+                source_df.schema,
+                {f.name: f.dataType for f in prior.schema.fields},
+                "upsert column",
+            )
         if (m.get("partition_by") or None) != (pb0 or None):
             raise ConcurrentCommitError(
                 f"chain layout changed mid-stage ({pb0} -> "
@@ -1303,16 +1293,17 @@ def _delta_commit(
         constraints = m.get("constraints")
         if appended is not None and constraints:
             _enforce_constraints(appended, constraints, "upsert source")
-        captures = bool(m["changes"])
-        changes_rel = None
-        if captures:
-            changes_rel = f"_staging/{token}/changes-{new}"
+        changes, rels = [], []
+        if m["changes"]:
+            changes_rel = f"{staging}/changes-{new}"
             old_matched = prior.join(F.broadcast(keys), key_cols, "semi")
             if appended is not None:
                 feed = _step_changes(appended, old_matched)
             else:
                 feed = old_matched.withColumn("_change", F.lit("delete"))
             feed.write.mode("errorifexists").parquet(f"{path}/{changes_rel}")
+            changes = _list_rel_parquet(spark, path, changes_rel)
+            rels = [changes_rel]
         seqs = {
             rel: int((m.get("seqs") or {}).get(rel, m["version"]))
             for rel in m["files"]
@@ -1320,11 +1311,11 @@ def _delta_commit(
         files = list(m["files"])
         bases = _manifest_bases(m)
         schemas = dict(m.get("schemas") or {})
-        if data_rel is not None:
-            new_files = _list_rel_parquet(spark, path, data_rel)
+        if appended is not None:
+            new_files = _list_rel_parquet(spark, path, f"{staging}/data")
             files += new_files
             seqs.update({rel: new for rel in new_files})
-            bases[str(new)] = data_rel
+            bases[str(new)] = f"{staging}/data"
             schemas[str(new)] = appended.schema.jsonValue()
         kschema = keys_read.schema.jsonValue()
         row_deletes = inherited_deletes + [
@@ -1334,41 +1325,23 @@ def _delta_commit(
                 "key_cols": list(key_cols),
                 "schema": kschema,
             }
-            for rel in _list_rel_parquet(spark, path, keys_rel)
+            for rel in _list_rel_parquet(spark, path, f"{staging}/rowdel")
         ]
-        try:
-            _commit_manifest(
-                spark,
-                path,
-                new,
-                meta if meta is not None else (m.get("meta") or None),
-                files=files,
-                changes=(
-                    _list_rel_parquet(spark, path, changes_rel)
-                    if changes_rel
-                    else []
-                ),
-                partition_by=m.get("partition_by"),
-                seqs=seqs,
-                row_deletes=row_deletes,
-                bases=bases or None,
-                type_promotions=promotions,
-                clone_of=m.get("clone_of"),
-                constraints=constraints,
-                schemas=schemas or None,
-            )
-            return new
-        except ConcurrentCommitError:
-            if changes_rel and not fs.delete(
-                hpath(f"{path}/{changes_rel}"), True
-            ):
-                raise IOError(f"could not clean stale staging {changes_rel}")
-    if not fs.delete(hpath(f"{path}/_staging/{token}"), True):
-        pass  # best-effort abandon; vacuum_chain sweeps orphans
-    raise ConcurrentCommitError(
-        f"gave up committing delta to {path} after {_COMMIT_RETRIES} "
-        "lost races — back off and retry"
-    )
+        return {
+            "meta": meta if meta is not None else (m.get("meta") or None),
+            "files": files,
+            "changes": changes,
+            "partition_by": m.get("partition_by"),
+            "seqs": seqs,
+            "row_deletes": row_deletes,
+            "bases": bases or None,
+            "type_promotions": promotions,
+            "clone_of": m.get("clone_of"),
+            "constraints": constraints,
+            "schemas": schemas or None,
+        }, rels
+
+    return _commit_with_retry(spark, path, stage, attempt)
 
 
 def delete_from_chain(
@@ -1441,22 +1414,18 @@ def prune_versions(spark: SparkSession, path: str, keep: int = 3) -> list[int]:
     doomed = vs[: -max(keep, 1)]
     survivors = vs[-max(keep, 1):]
 
-    def _rels(man: dict) -> list[str]:
-        return (
-            man["files"]
-            + man["changes"]
-            + [e["path"] for e in man.get("row_deletes") or []]
-        )
+    def _tokens(man: dict) -> set[str]:
+        return {
+            rel.split("/", 2)[1]
+            for rel in _manifest_rels(man)
+            if rel.startswith("_staging/")
+        }
 
     kept_tokens: set[str] = set()
     for n in survivors:
         man = _read_manifest(spark, path, n)
         if man is not None:
-            kept_tokens |= {
-                rel.split("/", 2)[1]
-                for rel in _rels(man)
-                if rel.startswith("_staging/")
-            }
+            kept_tokens |= _tokens(man)
     for n in doomed:
         m = _read_manifest(spark, path, n)
         mf = hpath(f"{path}/_manifests/v={n}.json")
@@ -1470,12 +1439,7 @@ def prune_versions(spark: SparkSession, path: str, keep: int = 3) -> list[int]:
             # SURVIVING delta manifest still references it. Legacy
             # (pre-staging) manifest rels all live under the v=N /
             # _changes/v=N dirs the loop below deletes anyway.
-            tokens = {
-                rel.split("/", 2)[1]
-                for rel in _rels(m)
-                if rel.startswith("_staging/")
-            }
-            for tok in sorted(tokens - kept_tokens):
+            for tok in sorted(_tokens(m) - kept_tokens):
                 p = hpath(f"{path}/_staging/{tok}")
                 if fs.exists(p):
                     fs.delete(p, True)
@@ -1506,38 +1470,21 @@ def compact_versioned(
     bookkeeping — dropping it would reset e.g. the streaming epoch
     marker and break the durable exactly-once guard).
     Returns the new version number."""
-    import uuid
-
     fs, _ = _hadoop_fs(spark, path)
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
-    manifest = fs.exists(hpath(f"{path}/_manifests"))
-    for _ in range(_COMMIT_RETRIES if manifest else 1):
-        vs = _versions(spark, path)
-        if not vs:
-            raise FileNotFoundError(f"no versions under {path}")
-        latest = vs[-1]
-        m = _read_manifest(spark, path, latest) if manifest else None
-        captures = (
-            bool(m["changes"])
-            if m is not None
-            else fs.exists(hpath(f"{path}/_changes/v={latest}"))
-        )
-        prior_meta = m.get("meta", {}) if m is not None else None
-        new = latest + 1
-        if manifest:
-            token = uuid.uuid4().hex[:12]
-            data_rel = f"_staging/{token}/data"
-            changes_rel = f"_staging/{token}/changes-{new}"
-        else:
-            data_rel = f"v={new}"
-            changes_rel = f"_changes/v={new}"
+
+    def rewrite(latest: int, m: dict | None, data_rel: str, changes_rel: str):
+        """Write version ``latest`` compacted to ``data_rel`` (and an
+        empty feed to ``changes_rel`` on a capture chain); returns the
+        partition columns and whether the chain captures changes."""
         if m is not None:
-            pb = m.get("partition_by")
+            pb, captures = m.get("partition_by"), bool(m["changes"])
         else:
             # non-manifest chains record no layout metadata — recover
             # the hive partition columns from the directory structure
             # itself, else compaction silently flattens the layout
+            captures = fs.exists(hpath(f"{path}/_changes/v={latest}"))
             pb = _hive_partition_cols(spark, f"{path}/v={latest}")
         src = read_version(spark, path, latest)
         if pb:
@@ -1566,42 +1513,46 @@ def compact_versioned(
                 .parquet(f"{path}/{data_rel}")
             )
         if captures:
-            empty = (
-                spark.read.parquet(f"{path}/{data_rel}")
-                .limit(0)
-                .withColumn("_change", F.lit("insert"))
+            _write_empty_feed(
+                spark.read.parquet(f"{path}/{data_rel}"), f"{path}/{changes_rel}"
             )
-            empty.write.mode("errorifexists").parquet(f"{path}/{changes_rel}")
-        if not manifest:
-            return new
-        try:
-            _commit_manifest(
-                spark,
-                path,
-                new,
-                prior_meta,
-                files=_list_rel_parquet(spark, path, data_rel),
-                changes=(
-                    _list_rel_parquet(spark, path, changes_rel)
-                    if captures
-                    else []
-                ),
-                base=data_rel,
-                partition_by=pb,
-                # a layout rewrite materializes a clone (clone_of is
-                # deliberately NOT carried) but keeps the rules
-                constraints=m.get("constraints") if m else None,
-            )
-            return new
-        except ConcurrentCommitError:
-            # a concurrent WRITE advanced the chain: this compaction's
-            # input is stale — abandon the staged output and redo the
-            # whole rewrite from the new latest
-            fs.delete(hpath(f"{path}/_staging/{token}"), True)
-    raise ConcurrentCommitError(
-        f"compaction of {path} lost {_COMMIT_RETRIES} commit races — "
-        "the chain is advancing faster than it can be compacted"
-    )
+        return pb, captures
+
+    if not _has_manifests(spark, path):
+        new = _latest(spark, path) + 1
+        rewrite(new - 1, None, f"v={new}", f"_changes/v={new}")
+        return new
+
+    def attempt(staging, _, new, m):
+        # the whole rewrite is per attempt: a concurrent WRITE that
+        # advanced the chain makes this compaction's input stale
+        if m is None:
+            raise FileNotFoundError(f"no versions under {path}")
+        data_rel, changes_rel = f"{staging}/data", f"{staging}/changes-{new}"
+        pb, captures = rewrite(new - 1, m, data_rel, changes_rel)
+        return {
+            "meta": m.get("meta", {}),
+            "files": _list_rel_parquet(spark, path, data_rel),
+            "changes": (
+                _list_rel_parquet(spark, path, changes_rel) if captures else []
+            ),
+            "base": data_rel,
+            "partition_by": pb,
+            # a layout rewrite materializes a clone (clone_of is
+            # deliberately NOT carried) but keeps the rules
+            "constraints": m.get("constraints"),
+        }, [data_rel, changes_rel] if captures else [data_rel]
+
+    return _commit_with_retry(spark, path, None, attempt)
+
+
+def _write_empty_feed(like: DataFrame, out: str) -> None:
+    """An explicitly EMPTY change feed with ``like``'s columns: what a
+    capture chain records for a commit that changes no row (compaction,
+    metadata) — otherwise ``read_changes`` would self-heal that step
+    with two full snapshot scans."""
+    feed = like.limit(0).withColumn("_change", F.lit("insert"))
+    feed.write.mode("errorifexists").parquet(out)
 
 
 def read_changes(
@@ -1641,10 +1592,7 @@ def read_changes(
     + one exceptAll hash each, then broadcast-size joins on the
     changed rows only)."""
     if to_version is None:
-        vs = _versions(spark, path)
-        if not vs:
-            raise FileNotFoundError(f"no versions under {path}")
-        to_version = vs[-1]
+        to_version = _latest(spark, path)
     lo, hi = sorted((from_version, to_version))
     fs, _ = _hadoop_fs(spark, path)
     jvm = spark.sparkContext._jvm
@@ -1793,11 +1741,10 @@ def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
     membership, decides what survives."""
     import re
 
-    fs, jpath = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(hpath(f"{path}/_manifests")):
+    if not _has_manifests(spark, path):
         raise ValueError(f"{path} is not a manifest chain")
+    fs, jpath = _hadoop_fs(spark, path)
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     committed = set(_versions(spark, path))
     # every directory prefix a committed manifest actually references
     referenced_prefixes: set[str] = set()
@@ -1805,8 +1752,7 @@ def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
         man = _read_manifest(spark, path, n)
         if man is None:
             continue
-        delete_rels = [e["path"] for e in man.get("row_deletes") or []]
-        for rel in man["files"] + man["changes"] + delete_rels:
+        for rel in _manifest_rels(man):
             if rel.startswith("_staging/"):
                 referenced_prefixes.add("/".join(rel.split("/", 2)[:2]))
             elif rel.startswith("_changes/"):
@@ -1877,14 +1823,12 @@ def clone_chain(
     (it starts with the same rules; ``drop_chain_constraint`` on the
     clone never touches the source). Returns the clone's version (0).
     """
-    fs, _ = _hadoop_fs(spark, src)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, jsrc = _hadoop_fs(spark, src)
     # qualify src BEFORE pinning it in clone_of: a relative path would
     # commit verbatim and the clone's delegated reads would silently
     # resolve against whatever working directory the READER runs from
-    src = fs.makeQualified(hpath(src)).toString()
-    if not fs.exists(hpath(f"{src}/_manifests")):
+    src = fs.makeQualified(jsrc).toString()
+    if not _has_manifests(spark, src):
         raise ValueError(
             f"{src} is not a manifest chain — shallow clones pin a "
             "manifest version (directory chains have no atomic state "
@@ -1897,8 +1841,7 @@ def clone_chain(
         n = vs[-1]
     if n not in vs:
         raise FileNotFoundError(f"no version {n} under {src}")
-    dfs, _ = _hadoop_fs(spark, dst)
-    if dfs.exists(hpath(f"{dst}/_manifests")) or _dir_versions(spark, dst):
+    if _has_manifests(spark, dst) or _dir_versions(spark, dst):
         raise ValueError(f"{dst} already holds a chain; clone into a "
                          "fresh path")
     src_m = _read_manifest(spark, src, n) or {}
@@ -1919,17 +1862,14 @@ def chain_constraints(spark: SparkSession, path: str) -> dict:
     """The constraint block active at the chain head:
     ``{"not_null": [col, ...], "check": {name: sql_expr, ...}}``
     (empty dict when none)."""
-    vs = _versions(spark, path)
-    if not vs:
-        raise FileNotFoundError(f"no versions under {path}")
-    m = _read_manifest(spark, path, vs[-1])
+    m = _read_manifest(spark, path, _latest(spark, path))
     if m is None:
         raise ValueError(f"{path} is not a manifest chain")
     return m.get("constraints") or {}
 
 
 def _metadata_commit(spark: SparkSession, path: str, mutate) -> int:
-    """Shared CAS loop of the metadata-only operations (add/drop
+    """Shared commit of the metadata-only operations (add/drop
     constraint, ANALYZE): a commit that reuses every prior data file
     byte-for-byte (same files/seqs/deletes/clone marker; explicitly
     empty change feed on capture chains — a metadata change is not a
@@ -1937,89 +1877,41 @@ def _metadata_commit(spark: SparkSession, path: str, mutate) -> int:
     -> {"constraints": ..., "stats": ...}`` returns. Blocks the mutate
     does not mention CARRY FORWARD (the files are identical, so e.g.
     stats stay valid through a constraints commit); data commits drop
-    ``stats`` naturally because they never pass the kwarg."""
-    fs, _ = _hadoop_fs(spark, path)
-    if not fs.exists(
-        spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/_manifests"
-        )
-    ):
+    ``stats`` naturally because they never set the block."""
+    if not _has_manifests(spark, path):
         raise ValueError(
             f"{path} is not a manifest chain — metadata commits go "
             "through atomic one-file manifests"
         )
-    import uuid
 
-    for _ in range(_COMMIT_RETRIES):
-        vs = _versions(spark, path)
-        if not vs:
-            raise FileNotFoundError(f"no versions under {path}")
-        m = _read_manifest(spark, path, vs[-1])
+    def attempt(staging, _, new, m):
         if m is None:
-            raise ValueError(f"{path} v={vs[-1]} has no manifest")
-        extras = {
-            "constraints": m.get("constraints"),
-            "stats": m.get("stats"),
-        }
-        extras.update(mutate(m))
-        changes_rel = None
+            raise FileNotFoundError(f"no versions under {path}")
+        # every block carries forward in its ORIGINAL form (a single
+        # 'base' remaps to the new version number inside
+        # _manifest_bases, while a seq-keyed 'bases' dict stays keyed by
+        # the carried seqs — both keep partition columns recoverable
+        # through basePath) except type_promotions: a metadata commit
+        # promotes no type
+        blocks = {k: m.get(k) for k in _MANIFEST_BLOCKS if k != "type_promotions"}
+        blocks.update(mutate(m))
+        changes, rels = [], []
         if m["changes"]:
-            # capture chains get an explicitly EMPTY feed (a rule
-            # change is not a data change) — otherwise read_changes
-            # would self-heal this step with two full snapshot scans
-            changes_rel = f"_staging/{uuid.uuid4().hex[:12]}/changes"
-            (
-                read_version(spark, path, vs[-1])
-                .limit(0)
-                .withColumn("_change", F.lit("insert"))
-                .write.mode("errorifexists")
-                .parquet(f"{path}/{changes_rel}")
+            # a rule change is not a data change
+            changes_rel = f"{staging}/changes"
+            _write_empty_feed(
+                read_version(spark, path, new - 1), f"{path}/{changes_rel}"
             )
-        try:
-            _commit_manifest(
-                spark,
-                path,
-                vs[-1] + 1,
-                m.get("meta") or None,
-                files=list(m["files"]),
-                changes=(
-                    _list_rel_parquet(spark, path, changes_rel)
-                    if changes_rel
-                    else []
-                ),
-                # base/bases carry in their ORIGINAL form: a single
-                # 'base' remaps to the new version number inside
-                # _manifest_bases, while a seq-keyed 'bases' dict stays
-                # keyed by the carried seqs — both keep partition
-                # columns recoverable through basePath
-                base=m.get("base"),
-                partition_by=m.get("partition_by"),
-                seqs=m.get("seqs"),
-                row_deletes=m.get("row_deletes"),
-                bases=m.get("bases"),
-                clone_of=m.get("clone_of"),
-                schemas=m.get("schemas"),
-                **extras,
-            )
-            return vs[-1] + 1
-        except ConcurrentCommitError:
-            # drop the staged empty feed before re-deriving against the
-            # advanced head — matching write_versioned/_delta_commit;
-            # abandoning it leaked orphan _staging dirs until vacuum
-            if changes_rel and not fs.delete(
-                spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/{changes_rel}"
-                ),
-                True,
-            ):
-                raise IOError(
-                    f"could not clean stale staging {changes_rel}"
-                )
-            continue  # re-read the advanced head and re-derive
-    raise ConcurrentCommitError(
-        f"gave up committing constraints to {path} after "
-        f"{_COMMIT_RETRIES} lost races"
-    )
+            changes = _list_rel_parquet(spark, path, changes_rel)
+            rels = [changes_rel]
+        return {
+            "meta": m.get("meta") or None,
+            "files": list(m["files"]),
+            "changes": changes,
+            **blocks,
+        }, rels
+
+    return _commit_with_retry(spark, path, None, attempt)
 
 
 def add_chain_constraint(
@@ -2199,10 +2091,6 @@ def chain_stats(
     every DATA commit drops the block, so a manifest either holds
     valid stats or the table changed since the last ANALYZE. The
     block's ``analyzed_version`` records where it was computed."""
-    vs = _versions(spark, path)
-    if not vs:
-        raise FileNotFoundError(f"no versions under {path}")
-    if n is None:
-        n = vs[-1]
-    m = _read_manifest(spark, path, n)
+    latest = _latest(spark, path)
+    m = _read_manifest(spark, path, latest if n is None else n)
     return None if m is None else m.get("stats")

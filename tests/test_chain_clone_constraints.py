@@ -335,18 +335,18 @@ def test_metadata_commit_cleans_staging_on_lost_race(
     monkeypatch.setattr(sinks, "_commit_manifest", flaky)
     v = add_chain_constraint(spark, path, not_null=["k"])
     assert v == 1 and failures["left"] == 0
-    # committed feeds legitimately live under _staging (the manifest
-    # references them); an ORPHAN is a staged dir no manifest mentions
+    # committed files legitimately live under _staging (the manifest
+    # references them); an ORPHAN is a token dir no manifest mentions —
+    # empty ones included (a per-attempt token used to leave one per
+    # lost race)
     referenced = set()
     for ver in sinks._versions(spark, path):
-        for rel in (sinks._read_manifest(spark, path, ver) or {}).get(
-            "changes", []
-        ):
-            referenced.add(rel.split("/changes")[0])
-    staged = {
-        p.replace(f"{path}/", "").split("/changes")[0]
-        for p in glob.glob(f"{path}/_staging/*/changes*")
-    }
+        man = sinks._read_manifest(spark, path, ver)
+        rels = man["files"] + man["changes"] + [
+            e["path"] for e in man.get("row_deletes") or []
+        ]
+        referenced |= {r.split("/")[1] for r in rels if r.startswith("_staging/")}
+    staged = {p.rsplit("/", 1)[1] for p in glob.glob(f"{path}/_staging/*")}
     orphans = staged - referenced
     assert not orphans, f"orphan staging left behind: {orphans}"
 
