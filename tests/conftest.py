@@ -21,3 +21,38 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry_oracle(spark, sf_dir):
+    """``check(name)`` runs registered query ``name`` at ``sf_dir`` and
+    compares it with its DuckDB oracle, once per session: the parity
+    suite covers every query and the demoted-tail suite re-asserts the
+    tail, so the second asks for an outcome already computed instead of
+    re-running the same query on the same data. Returns
+    ``(is_frame, ncols, ok, msg)``; ``ok``/``msg`` are None for
+    rows-only queries (no oracle SQL)."""
+    import duckdb
+    import pandas as pd
+
+    from portfolio1_etl_spark.plans import REGISTRY
+    from portfolio1_etl_spark.schemas import DRIVER_TABLES
+    from tools.check_oracle import _compare
+
+    con = duckdb.connect()
+    for t in DRIVER_TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    outcomes = {}
+
+    def check(name):
+        if name not in outcomes:
+            q = REGISTRY[name]
+            sdf = q.fn(spark, sf_dir).toPandas()
+            ok, msg = (None, None) if q.sql is None else _compare(sdf, con.sql(q.sql).df())
+            outcomes[name] = (isinstance(sdf, pd.DataFrame), sdf.shape[1], ok, msg)
+        return outcomes[name]
+
+    yield check
+    con.close()

@@ -4,35 +4,17 @@ primary correctness gate — SURVEY.md §5.2."""
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 
 from portfolio1_etl_spark.plans import REGISTRY
-from portfolio1_etl_spark.schemas import DRIVER_TABLES
-from tools.check_oracle import _compare
-
-
-@pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb.connect()
-    for t in DRIVER_TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    yield con
-    con.close()
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(name, spark, sf_dir, oracle):
-    q = REGISTRY[name]
-    sdf = q.fn(spark, sf_dir).toPandas()
-    assert isinstance(sdf, pd.DataFrame)
-    if q.sql is None:
+def test_query_matches_oracle(name, registry_oracle):
+    is_frame, ncols, ok, msg = registry_oracle(name)
+    assert is_frame
+    if REGISTRY[name].sql is None:
         # rows-only check (non-SQL-expressible op): plan runs, schema stable
-        assert sdf.shape[1] > 0
+        assert ncols > 0
         return
-    odf = oracle.sql(q.sql).df()
-    ok, msg = _compare(sdf, odf)
     assert ok, f"{name}: {msg}"

@@ -246,13 +246,30 @@ _SANCTIONED_BNLJ = {
 }
 
 
-def test_no_cartesian_product_in_any_registered_query(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """name -> (formatted, simple) explain text of every registered
+    query, each query built and physically planned once for both
+    registry-wide guards below."""
+    simple = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "simple"
+    )
+    plans = {}
+    for name, q in REGISTRY.items():
+        df = q.fn(spark, sf_dir)
+        plans[name] = (
+            _formatted_plan(df),
+            df._jdf.queryExecution().explainString(simple),
+        )
+    return plans
+
+
+def test_no_cartesian_product_in_any_registered_query(registry_plans):
     """No registered query may plan a CartesianProduct (ever) or an
     unsanctioned nested-loop join — at 100 TB either one is a
     run-forever plan."""
     offenders = {}
-    for name, q in REGISTRY.items():
-        plan = _formatted_plan(q.fn(spark, sf_dir))
+    for name, (plan, _) in registry_plans.items():
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in _SANCTIONED_BNLJ:
@@ -491,19 +508,15 @@ _SANCTIONED_TINY_GRAIN_WINDOW = {
 }
 
 
-def test_no_partitionless_window_over_scaling_data(spark, sf_dir):
+def test_no_partitionless_window_over_scaling_data(registry_plans):
     """A Window whose child is Exchange SinglePartition is a
     single-reducer sort of its whole input — the r9 verdict's one
     `weak` (q170/q221/q223 dimension-grain ntile/rank). Those now run
     through operators/ranks.with_exact_rank; this guard keeps the
     pattern from creeping back. Only the sanctioned DOMAIN-bounded
     grains above may plan one."""
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "simple"
-    )
     offenders = {}
-    for name, q in REGISTRY.items():
-        plan = q.fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
+    for name, (_, plan) in registry_plans.items():
         lines = plan.splitlines()
         hits = 0
         for i, line in enumerate(lines):
