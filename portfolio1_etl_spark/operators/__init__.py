@@ -107,18 +107,6 @@ from portfolio1_etl_spark.operators.bpe_train import (
     train_bpe_state,
 )
 from portfolio1_etl_spark.operators.logreg import train_logreg
-from portfolio1_etl_spark.operators.ann_index import (
-    build_ivf_index,
-    ingest_vectors,
-    query_ivf_index,
-)
-from portfolio1_etl_spark.operators.sinks import (
-    prune_versions,
-    read_changes,
-    read_version,
-    write_range_sorted,
-    write_versioned,
-)
 from portfolio1_etl_spark.operators.checkpointing import materialize
 
 __all__ = [

@@ -100,10 +100,10 @@ def compact_parquet(
     calls behind a loud reject on ``://`` paths), so compaction runs
     identically against local disk, ``file://`` URIs, and HDFS.
     Renames are atomic on HDFS/local; on object stores they are
-    copy+delete. For object-store-safe compaction use a MANIFEST
-    chain (``write_versioned(manifest=True)`` +
-    ``compact_versioned``): the rewrite commits through a one-file
-    manifest and never renames a directory at all (r8)."""
+    copy+delete. For object-store-safe compaction use a versioned
+    chain (``write_versioned`` + ``compact_versioned``): the rewrite
+    commits through a one-file manifest and never renames a directory
+    at all (r8)."""
     fs, live = _hadoop_fs(spark, path)
     jvm = spark.sparkContext._jvm
     Path = jvm.org.apache.hadoop.fs.Path
@@ -205,58 +205,61 @@ def write_versioned(
     df: DataFrame,
     path: str,
     capture_changes: bool = False,
-    manifest: bool = False,
+    manifest: bool = True,
     meta: dict | None = None,
     partition_by: list[str] | None = None,
 ) -> int:
     """Versioned snapshot chain — the warehouse-grade form of the
     reference's destructive inventory overwrite (portfolio-etl.py:648
-    loses yesterday's stock forever): each write lands in
-    ``{path}/v=N/`` with N = last + 1 and never touches prior
-    versions, so a bad upstream run is a one-line rollback
-    (``read_version(..., n)``), and the self-overwrite hazard
-    ``write_snapshot`` documents cannot occur — the version being
-    read and the version being written are different directories.
-    Returns the new version number. Retention via ``prune_versions``.
+    loses yesterday's stock forever): each write commits version
+    N = last + 1 and never touches prior versions, so a bad upstream
+    run is a one-line rollback (``read_version(..., n)``), and the
+    self-overwrite hazard ``write_snapshot`` documents cannot occur —
+    the version being read and the version being written are different
+    files. Returns the new version number. Retention via
+    ``prune_versions``.
 
-    Version listing and pruning go through the Hadoop FileSystem API
-    (``_versions``/``_delete_version``), resolved from the path's own
-    scheme — so the chain behaves identically on local disk, HDFS, and
-    object stores (wherever 100 TB actually lives), instead of a
-    driver-local ``glob`` silently seeing zero versions on ``s3a://``
-    and restarting the chain at v=0.
+    A version exists once its MANIFEST ``{path}/_manifests/v=N.json``
+    exists: a single small file listing the version's data files,
+    written LAST. A one-file rename is atomic everywhere (a directory
+    of part files appears gradually on S3-style stores), so a version
+    either exists completely or not at all, and a crash mid-write
+    leaves uncommitted files that are INVISIBLE to every reader and
+    that ``vacuum_chain`` reclaims. Listing, reading and pruning go
+    through the Hadoop FileSystem API resolved from the path's own
+    scheme, so the chain behaves identically on local disk, HDFS, and
+    object stores. ``manifest`` is kept for callers that pass
+    ``manifest=True``; ``manifest=False`` (the pre-manifest chain,
+    where a ``v=N/`` directory's existence was the commit) is refused,
+    and so is a first write onto a path that still holds such
+    directories (old data is neither hidden nor adopted).
 
-    Concurrency (r9): on a MANIFEST chain version allocation is
-    optimistic-concurrency-safe. Each writer stages its data under a
-    uuid-unique ``_staging/{token}/`` directory (no two writers ever
-    contend on a path), then commits with a CREATE-EXCLUSIVE rename
-    of ``_manifests/v=N.json`` — the compare-and-swap, through the
-    same ``_commit_with_retry`` every chain mutation uses. A lost race
+    Concurrency (r9): version allocation is optimistic-concurrency-
+    safe. Each writer stages its data under a uuid-unique
+    ``_staging/{token}/`` directory (no two writers ever contend on a
+    path), then commits with a CREATE-EXCLUSIVE rename of
+    ``_manifests/v=N.json`` — the compare-and-swap, through the same
+    ``_commit_with_retry`` every chain mutation uses. A lost race
     re-reads the latest version, re-derives the constraint check,
     widening audit and change feed against the ACTUAL new
     predecessor, and retries at N+1 (bounded, then loud failure —
     never a silent clobber; two-interleaved-writers test in
     test_sinks_layout). A refused write leaves no staging behind.
-    Non-manifest chains remain
-    single-writer (the batch-job norm) — a multi-writer deployment
-    without manifests needs a lock service in front.
 
-    ``capture_changes=True`` additionally persists the row-level diff
-    against the previous version to ``{path}/_changes/v=N/`` (v=0:
-    every row as ``insert``) — WRITE-TIME change capture, so
-    ``read_changes`` replays tiny delta files instead of re-diffing
-    two full snapshots per read (r8; the r7 read-path diff paid two
-    full-table scans + a full-row hash shuffle per read, which at
-    100 TB defeats the point of publishing deltas). The diff costs the
-    writer two scans of each endpoint (``exceptAll`` in each
-    direction reads both inputs), paid ONCE per commit instead of
-    once per consumer — and both inputs are freshly-written parquet,
-    not the upstream pipeline, so nothing recomputes. The
-    snapshot commits FIRST: a crash before the delta lands leaves a
-    readable version whose feed ``read_changes`` reconstructs by
-    snapshot diff for that step alone (self-healing fallback, tested
-    in test_sinks_layout). The underscore prefix keeps Spark's
-    partition discovery from ever mistaking ``_changes`` for data.
+    ``capture_changes=True`` additionally commits the row-level diff
+    against the previous version with the version (v=0: every row as
+    ``insert``) — WRITE-TIME change capture, so ``read_changes``
+    replays tiny delta files instead of re-diffing two full snapshots
+    per read (r8; the r7 read-path diff paid two full-table scans + a
+    full-row hash shuffle per read, which at 100 TB defeats the point
+    of publishing deltas). The diff costs the writer two scans of each
+    endpoint (``exceptAll`` in each direction reads both inputs), paid
+    ONCE per commit instead of once per consumer — and both inputs are
+    freshly-written parquet, not the upstream pipeline, so nothing
+    recomputes. A version committed without a feed (a write with
+    ``capture_changes=False`` on a capture chain) is reconstructed by
+    ``read_changes`` by snapshot diff for that step alone
+    (self-healing fallback, tested in test_sinks_layout).
 
     ``partition_by`` (r9) lays each version out hive-partitioned on
     the given columns; the manifest records the layout (``base`` +
@@ -274,69 +277,37 @@ def write_versioned(
     own schema. A same-name TYPE change is refused loudly at the
     capture diff — type evolution needs an explicit migration write.
 
-    ``manifest=True`` upgrades the chain to MANIFEST COMMITS (r8):
-    readers resolve a version through ``{path}/_manifests/v=N.json``
-    — a single small file listing the version's data files, written
-    LAST — instead of trusting directory existence. That closes the
-    object-store atomicity gap the plain chain carries: a directory
-    of part files appears gradually on S3-style stores (no atomic
-    directory rename), but a one-file manifest PUT/rename is atomic
-    everywhere, so a version either exists completely or not at all.
-    A crash mid-write leaves an uncommitted data directory that is
-    INVISIBLE to every reader and is swept by the next write's
-    recovery pass. The flag is sticky: once a chain has manifests,
-    later writes commit through them regardless of the argument
-    (mixing would let a non-manifest write publish an invisible
-    version). Crash-injection tested in test_sinks_layout.
-
-    ``meta`` (manifest chains only) rides INSIDE the manifest JSON —
-    committed atomically with the data in the same one-file commit,
-    readable via ``version_meta``. That makes it the right home for
-    writer bookkeeping that must never diverge from the data it
-    describes: a streaming writer records its epoch id here, so
-    exactly-once folding survives restarts with no side channel a
-    crash could leave half-updated (streaming/jobs.py
-    ``versioned_cdc_stream``)."""
-    spark = df.sparkSession
-    has_manifests = _has_manifests(spark, path)
-    if manifest and not has_manifests and _dir_versions(spark, path):
-        raise ValueError(
-            f"{path} already holds non-manifest versions; a chain "
-            "cannot adopt manifest commits mid-life (readers could "
-            "not tell an uncommitted directory from a legacy one)"
-        )
-    manifest = manifest or has_manifests
-    if meta is not None and not manifest:
-        raise ValueError("meta requires a manifest chain (manifest=True)")
-    def _writer(frame: DataFrame):
-        w = frame.write.mode("errorifexists")
-        return w.partitionBy(*partition_by) if partition_by else w
-
-    def _feed(written: DataFrame, new: int) -> DataFrame:
-        # diff the WRITTEN files (cheap re-scan) against the previous
-        # snapshot — never the incoming plan, which would recompute
-        # the upstream pipeline a second time
-        if new == 0:
-            return written.withColumn("_change", F.lit("insert"))
-        return _step_changes(written, read_version(spark, path, new - 1))
-
+    ``meta`` rides INSIDE the manifest JSON — committed atomically
+    with the data in the same one-file commit, readable via
+    ``version_meta``. That makes it the right home for writer
+    bookkeeping that must never diverge from the data it describes: a
+    streaming writer records its epoch id here, so exactly-once
+    folding survives restarts with no side channel a crash could leave
+    half-updated (streaming/jobs.py ``versioned_cdc_stream``)."""
     if not manifest:
-        vs = _versions(spark, path)
-        new = (max(vs) + 1) if vs else 0
-        _writer(df).parquet(f"{path}/v={new}")
-        if capture_changes:
-            feed = _feed(spark.read.parquet(f"{path}/v={new}"), new)
-            feed.write.mode("errorifexists").parquet(f"{path}/_changes/v={new}")
-        return new
+        raise ValueError(
+            "plain (non-manifest) versioned chains were removed; every "
+            "chain commits through _manifests/v=N.json"
+        )
+    spark = df.sparkSession
 
-    # manifest chain: the data stages once (version-independent); each
-    # commit attempt re-derives the rest against its ACTUAL predecessor
+    # the data stages once (version-independent); each commit attempt
+    # re-derives the rest against its ACTUAL predecessor
     def stage(staging):
-        _writer(df).parquet(f"{path}/{staging}/data")
+        w = df.write.mode("errorifexists")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(f"{path}/{staging}/data")
         return spark.read.parquet(f"{path}/{staging}/data")
 
     def attempt(staging, written, new, prev_m):
         promotions = constraints = None
+        if new == 0 and _dir_versions(spark, path):
+            raise ValueError(
+                f"{path} holds pre-manifest v=N directories and no "
+                "_manifests; plain chains were removed — migrate the "
+                "data into a fresh path"
+            )
         if new > 0:
             # constraints ride every manifest and carry forward; a lost
             # race may have ADDED a constraint under this writer's feet
@@ -348,14 +319,20 @@ def write_versioned(
             # answer it without building the predecessor's scan.
             prior_fields = _manifest_head_types(prev_m) or {
                 f.name: f.dataType
-                for f in read_version(spark, path, new - 1).schema.fields
+                for f in _scan_manifest(spark, path, prev_m).schema.fields
             }
             promotions = _type_promotions(written.schema, prior_fields, "column")
         changes, rels = [], []
         if capture_changes:
-            # the feed depends on the predecessor: staged PER ATTEMPT
+            # the feed depends on the predecessor: staged PER ATTEMPT.
+            # Diff the WRITTEN files (cheap re-scan) against the
+            # previous snapshot — never the incoming plan, which would
+            # recompute the upstream pipeline a second time
             changes_rel = f"{staging}/changes-{new}"
-            feed = _feed(written, new)
+            if new == 0:
+                feed = written.withColumn("_change", F.lit("insert"))
+            else:
+                feed = _step_changes(written, _scan_manifest(spark, path, prev_m))
             feed.write.mode("errorifexists").parquet(f"{path}/{changes_rel}")
             changes = _list_rel_parquet(spark, path, changes_rel)
             rels = [changes_rel]
@@ -588,33 +565,10 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def _hive_partition_cols(spark: SparkSession, data_dir: str) -> list[str]:
-    """Partition columns of a hive-laid-out directory, recovered from
-    the ``col=value`` subdirectory chain (walking one branch — hive
-    layouts are uniform by construction). Empty list when the first
-    level holds plain files."""
-    fs, _ = _hadoop_fs(spark, data_dir)
-    jvm = spark.sparkContext._jvm
-    cols: list[str] = []
-    cur = jvm.org.apache.hadoop.fs.Path(data_dir)
-    while fs.exists(cur):
-        nxt = None
-        for st in fs.listStatus(cur):
-            name = st.getPath().getName()
-            if st.isDirectory() and "=" in name and not name.startswith((".", "_")):
-                cols.append(name.split("=", 1)[0])
-                nxt = st.getPath()
-                break
-        if nxt is None:
-            break
-        cur = nxt
-    return cols
-
-
 def _dir_versions(spark: SparkSession, path: str) -> list[int]:
-    """Sorted version numbers under ``path`` by DIRECTORY listing —
-    the legacy (pre-manifest) resolution, still what non-manifest
-    chains use."""
+    """Sorted ``v=N`` directory numbers under ``path``: the layout of
+    the removed pre-manifest chain, probed only so such data is never
+    adopted (``write_versioned``) or swept (``vacuum_chain``)."""
     import re
 
     fs, jpath = _hadoop_fs(spark, path)
@@ -628,27 +582,16 @@ def _dir_versions(spark: SparkSession, path: str) -> list[int]:
     return sorted(vs)
 
 
-def _has_manifests(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` is a manifest chain (its ``_manifests``
-    directory exists)."""
-    fs, _ = _hadoop_fs(spark, path)
-    return fs.exists(
-        spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{path}/_manifests")
-    )
-
-
 def _versions(spark: SparkSession, path: str) -> list[int]:
-    """Committed version numbers. On a manifest chain only versions
-    whose manifest file landed count — an uncommitted data directory
-    from a crashed writer is invisible; elsewhere, directory listing
-    (the two never mix: ``write_versioned`` enforces it)."""
+    """Committed version numbers: only versions whose manifest file
+    landed count — an uncommitted data directory from a crashed writer
+    is invisible, and a path without ``_manifests`` has none."""
     import re
 
     fs, _ = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    mdir = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifests")
+    mdir = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{path}/_manifests")
     if not fs.exists(mdir):
-        return _dir_versions(spark, path)
+        return []
     vs = []
     for status in fs.listStatus(mdir):
         name = status.getPath().getName()
@@ -997,9 +940,9 @@ def _read_manifest(spark: SparkSession, path: str, n: int) -> dict | None:
 def version_meta(spark: SparkSession, path: str, n: int | None = None) -> dict:
     """The writer-supplied ``meta`` committed with version ``n``
     (default: latest) — atomically consistent with the data because it
-    lives in the same manifest file. Empty dict for manifest versions
-    written without meta; raises FileNotFoundError for non-manifest
-    chains/versions (they have no committed metadata)."""
+    lives in the same manifest file. Empty dict for versions written
+    without meta; raises FileNotFoundError for a version with no
+    manifest."""
     if n is None:
         n = _latest(spark, path)
     m = _read_manifest(spark, path, n)
@@ -1080,9 +1023,9 @@ def _manifest_head_types(m: dict) -> dict | None:
 
 def read_version(spark: SparkSession, path: str, n: int | None = None) -> DataFrame:
     """Read snapshot version ``n`` (default: latest) — time travel over
-    the plain-parquet chain. On a manifest chain the scan reads
-    exactly the files the manifest committed — stray files from a
-    crashed writer in the same directory are never picked up.
+    the chain. The scan reads exactly the files the version's manifest
+    committed — stray files from a crashed writer in the same
+    directory are never picked up.
 
     On a chain with ROW-LEVEL DELTA commits (``delete_from_chain`` /
     ``upsert_into_chain``), the manifest additionally carries per-file
@@ -1097,7 +1040,15 @@ def read_version(spark: SparkSession, path: str, n: int | None = None) -> DataFr
         n = _latest(spark, path)
     m = _read_manifest(spark, path, n)
     if m is None:
-        return spark.read.parquet(f"{path}/v={n}")
+        raise FileNotFoundError(f"no version {n} under {path}")
+    return _scan_manifest(spark, path, m)
+
+
+def _scan_manifest(spark: SparkSession, path: str, m: dict) -> DataFrame:
+    """``read_version``'s frame for the already-parsed manifest ``m``
+    of the chain at ``path`` — for commit paths that hold the head
+    manifest (committed manifests never change, so the result is the
+    same as re-reading it)."""
     row_deletes = m.get("row_deletes") or []
     bases = _manifest_bases(m)
     clone = m.get("clone_of")
@@ -1164,11 +1115,11 @@ def read_version_asof(spark: SparkSession, path: str, asof: str) -> DataFrame:
     the 02:00 report saw it" without knowing version numbers. Commit
     times ride in the manifest (``committed_at``, recorded inside the
     same atomic one-file commit, so a version's existence and its
-    timestamp can never disagree). Manifest chains only; raises
-    FileNotFoundError when every commit postdates ``asof`` (or the
-    survivors were pruned — retention bounds how far back asof
-    reads, exactly like any lakehouse). Each version keeps its own
-    schema, same as ``read_version``."""
+    timestamp can never disagree). Raises FileNotFoundError when
+    every commit postdates ``asof`` (or the survivors were pruned —
+    retention bounds how far back asof reads, exactly like any
+    lakehouse). Each version keeps its own schema, same as
+    ``read_version``."""
     from datetime import datetime, timezone
 
     cut = datetime.fromisoformat(asof)
@@ -1177,10 +1128,10 @@ def read_version_asof(spark: SparkSession, path: str, asof: str) -> DataFrame:
     best: int | None = None
     for n in _versions(spark, path):
         m = _read_manifest(spark, path, n)
-        if m is None or "committed_at" not in m:
+        if "committed_at" not in (m or {}):
             raise ValueError(
-                f"{path} v={n} has no committed_at (non-manifest chain "
-                "or pre-r9 commit); asof reads need manifest commits"
+                f"{path} v={n} has no committed_at (pre-r9 commit); "
+                "asof reads need commit times"
             )
         if datetime.fromisoformat(m["committed_at"]) <= cut:
             best = n
@@ -1207,12 +1158,6 @@ def _delta_commit(
     version — the streaming jobs' exactly-once markers need to ride
     O(delta) commits; None keeps the prior version's meta carrying
     forward unchanged (the pre-r13 behavior)."""
-    if not _has_manifests(spark, path):
-        raise ValueError(
-            f"{path} is not a manifest chain — row-level delta commits "
-            "need atomic one-file manifests (write_versioned(..., "
-            "manifest=True) from v=0)"
-        )
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     keys = (keys_df if keys_df is not None else source_df.select(*key_cols))
@@ -1220,11 +1165,9 @@ def _delta_commit(
     # On a hive-partitioned chain the appended rows stage in the SAME
     # layout (partitionBy) so the per-seq basePath read restores the
     # partition columns for every file group uniformly.
-    head = _versions(spark, path)
-    pb0 = None
-    if head:
-        m0 = _read_manifest(spark, path, head[-1])
-        pb0 = (m0 or {}).get("partition_by")
+    pb0 = (_read_manifest(spark, path, _latest(spark, path)) or {}).get(
+        "partition_by"
+    )
 
     # version-independent stages land ONCE; only the change feed
     # (which depends on the actual predecessor) re-stages per attempt.
@@ -1254,12 +1197,7 @@ def _delta_commit(
 
     def attempt(staging, staged, new, m):
         keys_read, appended = staged
-        if m is None:
-            raise FileNotFoundError(
-                f"no versions under {path} — a delta commit needs a base "
-                "snapshot (write_versioned first)"
-            )
-        prior = read_version(spark, path, new - 1)
+        prior = _scan_manifest(spark, path, m)
         missing = [c for c in key_cols if c not in prior.columns]
         if missing:
             raise ValueError(f"key columns {missing} not in {path} schema")
@@ -1398,7 +1336,7 @@ def prune_versions(spark: SparkSession, path: str, keep: int = 3) -> list[int]:
     Deletes go through the same Hadoop FileSystem as the listing, so
     retention is actually enforced on remote stores (a local
     ``shutil.rmtree`` against ``s3a://…`` would silently no-op).
-    On a manifest chain the MANIFEST deletes first — the un-commit —
+    The MANIFEST deletes first — the un-commit —
     so a crash mid-prune leaves unreferenced data files (invisible,
     harmless), never a referenced version with missing data.
 
@@ -1457,8 +1395,8 @@ def compact_versioned(
 ) -> int:
     """Transactional small-file compaction for the versioned chain:
     rewrite the LATEST committed version into ceil(bytes/target) files
-    as a NEW version, committed exactly like any other write — on a
-    manifest chain that means no directory rename at all (the gap
+    as a NEW version, committed exactly like any other write — no
+    directory rename at all (the gap
     ``compact_parquet``'s swap protocol documents on object stores):
     readers resolve the old version until the one-file manifest
     commit lands, and a crash at any point leaves only invisible
@@ -1471,22 +1409,16 @@ def compact_versioned(
     marker and break the durable exactly-once guard).
     Returns the new version number."""
     fs, _ = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
-    def rewrite(latest: int, m: dict | None, data_rel: str, changes_rel: str):
-        """Write version ``latest`` compacted to ``data_rel`` (and an
-        empty feed to ``changes_rel`` on a capture chain); returns the
-        partition columns and whether the chain captures changes."""
-        if m is not None:
-            pb, captures = m.get("partition_by"), bool(m["changes"])
-        else:
-            # non-manifest chains record no layout metadata — recover
-            # the hive partition columns from the directory structure
-            # itself, else compaction silently flattens the layout
-            captures = fs.exists(hpath(f"{path}/_changes/v={latest}"))
-            pb = _hive_partition_cols(spark, f"{path}/v={latest}")
-        src = read_version(spark, path, latest)
+    def attempt(staging, _, new, m):
+        # the whole rewrite is per attempt: a concurrent WRITE that
+        # advanced the chain makes this compaction's input stale
+        if m is None:
+            raise FileNotFoundError(f"no versions under {path}")
+        data_rel, changes_rel = f"{staging}/data", f"{staging}/changes-{new}"
+        pb, captures = m.get("partition_by"), bool(m["changes"])
+        src = _scan_manifest(spark, path, m)
         if pb:
             # preserve the hive layout: cluster rows by partition key
             # so each partition compacts to ~one file (the n_files
@@ -1498,13 +1430,8 @@ def compact_versioned(
                 .parquet(f"{path}/{data_rel}")
             )
         else:
-            rels = (
-                m["files"]
-                if m is not None
-                else _list_rel_parquet(spark, path, f"v={latest}")
-            )
             size = 0
-            for rel in rels:
+            for rel in m["files"]:
                 size += fs.getFileStatus(hpath(f"{path}/{rel}")).getLen()
             n_files = max(1, -(-size // target_file_bytes))
             (
@@ -1512,36 +1439,23 @@ def compact_versioned(
                 .write.mode("errorifexists")
                 .parquet(f"{path}/{data_rel}")
             )
+        changes, rels = [], [data_rel]
         if captures:
             _write_empty_feed(
                 spark.read.parquet(f"{path}/{data_rel}"), f"{path}/{changes_rel}"
             )
-        return pb, captures
-
-    if not _has_manifests(spark, path):
-        new = _latest(spark, path) + 1
-        rewrite(new - 1, None, f"v={new}", f"_changes/v={new}")
-        return new
-
-    def attempt(staging, _, new, m):
-        # the whole rewrite is per attempt: a concurrent WRITE that
-        # advanced the chain makes this compaction's input stale
-        if m is None:
-            raise FileNotFoundError(f"no versions under {path}")
-        data_rel, changes_rel = f"{staging}/data", f"{staging}/changes-{new}"
-        pb, captures = rewrite(new - 1, m, data_rel, changes_rel)
+            changes = _list_rel_parquet(spark, path, changes_rel)
+            rels.append(changes_rel)
         return {
             "meta": m.get("meta", {}),
             "files": _list_rel_parquet(spark, path, data_rel),
-            "changes": (
-                _list_rel_parquet(spark, path, changes_rel) if captures else []
-            ),
+            "changes": changes,
             "base": data_rel,
             "partition_by": pb,
             # a layout rewrite materializes a clone (clone_of is
             # deliberately NOT carried) but keeps the rules
             "constraints": m.get("constraints"),
-        }, [data_rel, changes_rel] if captures else [data_rel]
+        }, rels
 
     return _commit_with_retry(spark, path, None, attempt)
 
@@ -1579,46 +1493,33 @@ def read_changes(
       multiset semantics survive keyed reclassification too.
 
     Scale shape (r8): when the chain was written with
-    ``capture_changes=True``, every step's feed is already persisted
-    under ``_changes/v=N/`` and this read only SCANS DELTA FILES —
-    the net feed over a span folds the per-step feeds with one
-    exceptAll over changed rows only (multiset math: the span diff is
-    the positive/negative part of Σinserts − Σdeletes), so the
-    unchanged 100 TB bulk is never touched. Steps whose delta is
-    missing (pre-capture chains, or a crash between the snapshot and
-    delta commits) self-heal by snapshot diff — for that step alone
-    when the rest of the span is captured, or as one endpoint-pair
-    diff when nothing is (the r7 read-path shape: two snapshot scans
-    + one exceptAll hash each, then broadcast-size joins on the
-    changed rows only)."""
+    ``capture_changes=True``, every step's feed is already committed
+    with its version (the manifest's ``changes`` files) and this read
+    only SCANS DELTA FILES — the net feed over a span folds the
+    per-step feeds with one exceptAll over changed rows only
+    (multiset math: the span diff is the positive/negative part of
+    Σinserts − Σdeletes), so the unchanged 100 TB bulk is never
+    touched. Steps committed without a feed self-heal by snapshot
+    diff — for that step alone when the rest of the span is captured,
+    or as one endpoint-pair diff when nothing is (the r7 read-path
+    shape: two snapshot scans + one exceptAll hash each, then
+    broadcast-size joins on the changed rows only)."""
     if to_version is None:
         to_version = _latest(spark, path)
     lo, hi = sorted((from_version, to_version))
-    fs, _ = _hadoop_fs(spark, path)
-    jvm = spark.sparkContext._jvm
-    # a delta counts as captured when its manifest lists change files
-    # (staged layout, r9 — the manifest is the source of truth), or —
-    # legacy/non-manifest chains — when its _SUCCESS marker landed:
-    # a writer can die mid-delta-write, and trusting directory
-    # existence would read the truncated feed forever
-    feeds: dict[int, list[str] | str] = {}
+    # a step counts as captured when its manifest lists change files
+    # (the manifest is the source of truth: a feed a writer died
+    # mid-writing was never committed)
+    feeds: dict[int, list[str]] = {}
     for v in range(lo + 1, hi + 1):
         m = _read_manifest(spark, path, v)
-        if m is not None:
-            if m["changes"]:
-                feeds[v] = [f"{path}/{rel}" for rel in m["changes"]]
-        elif fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/_changes/v={v}/_SUCCESS")
-        ):
-            feeds[v] = f"{path}/_changes/v={v}"
+        if m is not None and m["changes"]:
+            feeds[v] = [f"{path}/{rel}" for rel in m["changes"]]
     if lo < hi and feeds:
         steps = []
         for v in range(lo + 1, hi + 1):
-            src = feeds.get(v)
-            if isinstance(src, list):
-                steps.append(spark.read.parquet(*src))
-            elif src is not None:
-                steps.append(spark.read.parquet(src))
+            if v in feeds:
+                steps.append(spark.read.parquet(*feeds[v]))
             else:  # self-heal the one missing step by snapshot diff
                 steps.append(
                     _step_changes(
@@ -1714,7 +1615,7 @@ def _classified_feed(
 
 
 def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
-    """Garbage-collect a MANIFEST chain's unreferenced storage:
+    """Garbage-collect a chain's unreferenced storage:
     ``v=N`` / ``_changes/v=N`` directories with no committed manifest.
     Two ways these arise — a writer crash before the manifest commit
     at the HEAD (normally swept when the next write reuses N, but the
@@ -1728,8 +1629,9 @@ def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
     unreferenced by definition until its commit lands (the same
     referenced-set-vs-live-writer contract as any lakehouse VACUUM,
     resolved by scheduling, not by the storage layer).
-    Returns the deleted subpaths. Raises on non-manifest chains —
-    directory existence IS the commit there, so nothing is garbage.
+    Returns the deleted subpaths. A path with no committed version
+    keeps its ``v=N`` directories: they may be a pre-manifest chain's
+    data, where directory existence was the commit.
 
     r9: also sweeps unreferenced ``_staging/{token}`` directories (the
     debris of crashed or commit-race-losing writers under the staged
@@ -1741,8 +1643,6 @@ def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
     membership, decides what survives."""
     import re
 
-    if not _has_manifests(spark, path):
-        raise ValueError(f"{path} is not a manifest chain")
     fs, jpath = _hadoop_fs(spark, path)
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     committed = set(_versions(spark, path))
@@ -1760,13 +1660,13 @@ def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
             else:
                 referenced_prefixes.add(rel.split("/", 1)[0])
     deleted: list[str] = []
-    for sub, pat in (("", r"v=(\d+)"), ("_changes/", r"v=(\d+)")):
+    for sub in ("", "_changes/") if committed else ():
         d = hpath(f"{path}/{sub}") if sub else jpath
         if not fs.exists(d):
             continue
         for st in fs.listStatus(d):
             name = st.getPath().getName()
-            m = re.fullmatch(pat, name)
+            m = re.fullmatch(r"v=(\d+)", name)
             if (
                 m
                 and st.isDirectory()
@@ -1775,7 +1675,7 @@ def vacuum_chain(spark: SparkSession, path: str) -> list[str]:
                 fs.delete(st.getPath(), True)
                 deleted.append(f"{sub}{name}")
     mdir = hpath(f"{path}/_manifests")
-    for st in fs.listStatus(mdir):
+    for st in fs.listStatus(mdir) if fs.exists(mdir) else ():
         name = st.getPath().getName()
         if st.isFile() and name.startswith(".") and name.endswith(".tmp"):
             fs.delete(st.getPath(), False)
@@ -1828,12 +1728,6 @@ def clone_chain(
     # commit verbatim and the clone's delegated reads would silently
     # resolve against whatever working directory the READER runs from
     src = fs.makeQualified(jsrc).toString()
-    if not _has_manifests(spark, src):
-        raise ValueError(
-            f"{src} is not a manifest chain — shallow clones pin a "
-            "manifest version (directory chains have no atomic state "
-            "to reference)"
-        )
     vs = _versions(spark, src)
     if not vs:
         raise FileNotFoundError(f"no versions under {src}")
@@ -1841,7 +1735,7 @@ def clone_chain(
         n = vs[-1]
     if n not in vs:
         raise FileNotFoundError(f"no version {n} under {src}")
-    if _has_manifests(spark, dst) or _dir_versions(spark, dst):
+    if _versions(spark, dst):
         raise ValueError(f"{dst} already holds a chain; clone into a "
                          "fresh path")
     src_m = _read_manifest(spark, src, n) or {}
@@ -1862,9 +1756,7 @@ def chain_constraints(spark: SparkSession, path: str) -> dict:
     """The constraint block active at the chain head:
     ``{"not_null": [col, ...], "check": {name: sql_expr, ...}}``
     (empty dict when none)."""
-    m = _read_manifest(spark, path, _latest(spark, path))
-    if m is None:
-        raise ValueError(f"{path} is not a manifest chain")
+    m = _read_manifest(spark, path, _latest(spark, path)) or {}
     return m.get("constraints") or {}
 
 
@@ -1878,11 +1770,6 @@ def _metadata_commit(spark: SparkSession, path: str, mutate) -> int:
     does not mention CARRY FORWARD (the files are identical, so e.g.
     stats stay valid through a constraints commit); data commits drop
     ``stats`` naturally because they never set the block."""
-    if not _has_manifests(spark, path):
-        raise ValueError(
-            f"{path} is not a manifest chain — metadata commits go "
-            "through atomic one-file manifests"
-        )
 
     def attempt(staging, _, new, m):
         if m is None:
@@ -1900,7 +1787,7 @@ def _metadata_commit(spark: SparkSession, path: str, mutate) -> int:
             # a rule change is not a data change
             changes_rel = f"{staging}/changes"
             _write_empty_feed(
-                read_version(spark, path, new - 1), f"{path}/{changes_rel}"
+                _scan_manifest(spark, path, m), f"{path}/{changes_rel}"
             )
             changes = _list_rel_parquet(spark, path, changes_rel)
             rels = [changes_rel]

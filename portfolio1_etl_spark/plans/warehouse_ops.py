@@ -419,11 +419,11 @@ _V_SQL = {
 def q168_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The manifest-committed versioned chain ON the scoreboard (r8 —
     previously pytest-only): three snapshots of an order-derived state
-    write through ``write_versioned(capture_changes=True,
-    manifest=True)``, then every row of the result is read BACK
-    through the transactional machinery — per-version row counts and
-    value sums via ``read_version`` (time travel resolved through the
-    manifest file lists) and per-step insert/delete counts via
+    write through ``write_versioned(capture_changes=True)``, then
+    every row of the result is read BACK through the transactional
+    machinery — per-version row counts and value sums via
+    ``read_version`` (time travel resolved through the manifest file
+    lists) and per-step insert/delete counts via
     ``read_changes`` (served from the write-time delta files, not a
     snapshot re-diff). The oracle replays all three states and their
     multiset diffs in closed form, so a wrong manifest, a misrouted
@@ -461,7 +461,7 @@ def q168_versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
     for st in states:
-        write_versioned(st, path, capture_changes=True, manifest=True)
+        write_versioned(st, path, capture_changes=True)
     out = None
     for v in range(3):
         agg = read_version(spark, path, v).agg(
@@ -762,8 +762,8 @@ def q185_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = base.filter(F.col("id") % 4 > 0).select(
         "id", "grp", F.col("val1").alias("val")
     )
-    write_versioned(v0, path, capture_changes=True, manifest=True)
-    write_versioned(v1, path, capture_changes=True, manifest=True)
+    write_versioned(v0, path, capture_changes=True)
+    write_versioned(v1, path, capture_changes=True)
     view0 = sum_count_view(read_version(spark, path, 0), ["grp"], "val")
     feed = read_changes(spark, path, 0, 1)
     return apply_delta(view0, feed, ["grp"], "val")
@@ -956,7 +956,7 @@ def q239_merge_into_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_versioned(
         base.filter(F.col("id") % 3 != 0), path,
-        capture_changes=True, manifest=True,
+        capture_changes=True,
     )
     upsert_into_chain(
         spark,
@@ -1091,7 +1091,6 @@ def q240_widened_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         path,
         capture_changes=True,
-        manifest=True,
     )
     write_versioned(
         even.select(
@@ -1104,7 +1103,6 @@ def q240_widened_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         path,
         capture_changes=True,
-        manifest=True,
     )
     # the promotion must actually be on record — fail the query loudly
     # if the manifest lost it (a driver row-count would not catch that)
@@ -1238,7 +1236,7 @@ def q244_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _run():
             for st in states:
                 write_versioned(
-                    st, f"{base}/{sub}", capture_changes=True, manifest=True
+                    st, f"{base}/{sub}", capture_changes=True
                 )
         return _run
 
@@ -1358,7 +1356,7 @@ def q263_joinview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     # other instead of serializing; within each chain the commits
     # stay strictly ordered
     def _chain_a():
-        write_versioned(a0, f"{base}/a", capture_changes=True, manifest=True)
+        write_versioned(a0, f"{base}/a", capture_changes=True)
         delete_from_chain(
             spark,
             f"{base}/a",
@@ -1368,7 +1366,7 @@ def q263_joinview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_into_chain(spark, f"{base}/a", upsert_src, ["id"])
 
     def _chain_b():
-        write_versioned(b0, f"{base}/b", capture_changes=True, manifest=True)
+        write_versioned(b0, f"{base}/b", capture_changes=True)
         upsert_into_chain(
             spark,
             f"{base}/b",
@@ -1471,7 +1469,7 @@ def q288_aggview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("grp"),
         cents.alias("cents"),
     )
-    write_versioned(a0, f"{base}/a", capture_changes=True, manifest=True)
+    write_versioned(a0, f"{base}/a", capture_changes=True)
     delete_from_chain(
         spark, f"{base}/a", a0.filter(F.col("id") % 10 == 3).select("id"), ["id"]
     )
@@ -1570,7 +1568,7 @@ def q289_distinctview_row_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("grp"),
         F.col("o_custkey").alias("ck"),
     )
-    write_versioned(a0, f"{base}/a", capture_changes=True, manifest=True)
+    write_versioned(a0, f"{base}/a", capture_changes=True)
     delete_from_chain(
         spark, f"{base}/a", a0.filter(F.col("id") % 10 == 5).select("id"), ["id"]
     )

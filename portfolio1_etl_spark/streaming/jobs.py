@@ -828,7 +828,7 @@ def versioned_cdc_stream(events: DataFrame, path: str, stream_id: str = "default
             F.col("n").cast("long").alias("n"),
         )
         write_versioned(
-            state, path, capture_changes=True, manifest=True,
+            state, path, capture_changes=True,
             meta={"epoch": epoch_id, "stream_id": stream_id},
         )
 
@@ -966,7 +966,6 @@ def joinview_maintenance_stream(
             write_versioned(
                 view,
                 view_path,
-                manifest=True,
                 meta={
                     "fact_v": fact_v,
                     "dim_v": dim_v,
@@ -1012,7 +1011,6 @@ def joinview_maintenance_stream(
         write_versioned(
             refreshed,
             view_path,
-            manifest=True,
             meta={"fact_v": fact_v, "dim_v": dim_v, "stream_id": stream_id},
         )
 
@@ -1067,7 +1065,6 @@ def aggview_maintenance_stream(
             write_versioned(
                 agg_view(head, keys, val),
                 view_path,
-                manifest=True,
                 meta={"base_v": base_v, "stream_id": stream_id},
             )
             return
@@ -1085,7 +1082,6 @@ def aggview_maintenance_stream(
         write_versioned(
             refreshed,
             view_path,
-            manifest=True,
             meta={"base_v": base_v, "stream_id": stream_id},
         )
 
@@ -1147,13 +1143,11 @@ def distinctview_maintenance_stream(
             write_versioned(
                 aux,
                 aux_path,
-                manifest=True,
                 meta={"base_v": base_v, "stream_id": stream_id},
             )
             write_versioned(
                 view,
                 view_path,
-                manifest=True,
                 meta={"base_v": base_v, "stream_id": stream_id},
             )
             return
@@ -1176,7 +1170,6 @@ def distinctview_maintenance_stream(
             write_versioned(
                 view,
                 view_path,
-                manifest=True,
                 meta={"base_v": va, "stream_id": stream_id},
             )
             return
@@ -1196,13 +1189,11 @@ def distinctview_maintenance_stream(
         write_versioned(
             aux_new,
             aux_path,
-            manifest=True,
             meta={"base_v": base_v, "stream_id": stream_id},
         )
         write_versioned(
             view_new,
             view_path,
-            manifest=True,
             meta={"base_v": base_v, "stream_id": stream_id},
         )
 
@@ -1279,13 +1270,11 @@ def neardup_ingest_stream(
             write_versioned(
                 pairs,
                 pairs_path,
-                manifest=True,
                 meta={"base_v": base_v, "stream_id": stream_id},
             )
             write_versioned(
                 sigs,
                 sig_path,
-                manifest=True,
                 meta={"base_v": base_v, "stream_id": stream_id},
             )
             return

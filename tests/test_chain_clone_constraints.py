@@ -158,10 +158,6 @@ def test_clone_of_clone_and_bad_inputs(spark, tmp_path, src_chain):
         clone_chain(spark, src_chain, dst)
     with pytest.raises(FileNotFoundError, match="no version 9"):
         clone_chain(spark, src_chain, str(tmp_path / "dst9"), n=9)
-    plain = str(tmp_path / "plain")
-    write_versioned(_mk(spark, [(1, "a")]), plain)
-    with pytest.raises(ValueError, match="not a manifest chain"):
-        clone_chain(spark, plain, str(tmp_path / "dstp"))
 
 
 # --- constraints ------------------------------------------------------------

@@ -230,6 +230,84 @@ def test_ambiguous_commit_error_keeps_staging(spark, chain, monkeypatch):
     ]
 
 
+class _WriterKilled(BaseException):
+    """Stands in for the process dying: not an ``Exception``, so no
+    handler meant for errors can swallow it."""
+
+
+def test_writer_killed_between_staging_and_manifest(spark, chain, monkeypatch):
+    """A writer dies after staging its data and feed but before its
+    manifest lands: the head, time travel and the change feed read
+    exactly as before, the next write commits the version number the
+    dead writer was aiming for, and ``vacuum_chain`` deletes exactly
+    the dead writer's ``_staging/{token}`` and nothing a manifest
+    references."""
+    upsert_into_chain(spark, chain, _mk(spark, [(2, "x")]), ["k"])
+    head = _rows(read_version(spark, chain))
+    feed = _rows(read_changes(spark, chain, 0, 1))
+    real = sinks._commit_manifest
+    aimed = []
+
+    def killed(spark_, path_, n, meta=None, **kwargs):
+        aimed.append((n, kwargs["files"][0].split("/")[1]))
+        raise _WriterKilled()
+
+    monkeypatch.setattr(sinks, "_commit_manifest", killed)
+    with pytest.raises(_WriterKilled):
+        write_versioned(_mk(spark, [(7, "g")]), chain, capture_changes=True)
+    monkeypatch.setattr(sinks, "_commit_manifest", real)
+    [(dead_n, dead_token)] = aimed
+    assert dead_n == 2
+    assert os.path.isdir(os.path.join(chain, "_staging", dead_token, "data"))
+    assert sinks._versions(spark, chain) == [0, 1]
+    assert _rows(read_version(spark, chain)) == head
+    assert _rows(read_changes(spark, chain, 0, 1)) == feed
+    assert _rows(read_changes(spark, chain, 0)) == feed
+
+    assert write_versioned(_mk(spark, [(8, "h")]), chain, capture_changes=True) == dead_n
+    orphans = {"/".join(o.split("/")[:2]) for o in _orphan_staging(spark, chain)}
+    assert orphans == {f"_staging/{dead_token}"}
+    assert sinks.vacuum_chain(spark, chain) == [f"_staging/{dead_token}"]
+    assert not _orphan_staging(spark, chain)
+    for n in sinks._versions(spark, chain):
+        man = sinks._read_manifest(spark, chain, n)
+        for rel in man["files"] + man["changes"]:
+            assert os.path.isfile(os.path.join(chain, rel)), rel
+    assert _rows(read_version(spark, chain, 1)) == head
+    assert _rows(read_version(spark, chain)) == [(8, "h")]
+
+
+@pytest.mark.parametrize("kind", ["upsert", "delete"])
+def test_delta_commit_reads_head_once_per_phase(spark, chain, monkeypatch, kind):
+    """An upsert or delete on a capture chain lists the versions and
+    reads the head manifest once before staging (the partition layout)
+    and once in its commit attempt — the attempt builds the
+    predecessor's scan from the head it already holds."""
+    counts = {"_read_manifest": 0, "_versions": 0}
+
+    def counted(name):
+        real = getattr(sinks, name)
+
+        def wrapper(*args, **kwargs):
+            counts[name] += 1
+            return real(*args, **kwargs)
+
+        return wrapper
+
+    for name in counts:
+        monkeypatch.setattr(sinks, name, counted(name))
+    if kind == "upsert":
+        upsert_into_chain(spark, chain, _mk(spark, [(2, "x"), (5, "e")]), ["k"])
+    else:
+        delete_from_chain(spark, chain, _mk(spark, [(2,)], "k int"), ["k"])
+    assert counts == {"_read_manifest": 2, "_versions": 2}
+    monkeypatch.undo()
+    assert _rows(read_changes(spark, chain, 0, 1)) == {
+        "upsert": [(2, "b", "delete"), (2, "x", "insert"), (5, "e", "insert")],
+        "delete": [(2, "b", "delete")],
+    }[kind]
+
+
 # --- manifest format ------------------------------------------------------------
 
 #: sorted top-level manifest keys per commit kind

@@ -167,13 +167,6 @@ def test_compaction_materializes_and_drops_vectors(spark, tmp_path):
 
 
 def test_delta_commit_guardrails(spark, tmp_path):
-    plain = str(tmp_path / "plain")
-    df = spark.createDataFrame([(1, 1)], "k long, v long")
-    write_versioned(df, plain)  # non-manifest
-    with pytest.raises(ValueError, match="manifest"):
-        delete_from_chain(
-            spark, plain, spark.createDataFrame([(1,)], "k long"), ["k"]
-        )
     path = str(tmp_path / "chain")
     _base(spark, path, n=5)
     with pytest.raises(ValueError, match="schema"):

@@ -5,6 +5,7 @@ filter must actually skip files."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -126,24 +127,27 @@ def test_versioned_chain_on_scheme_qualified_uri(spark, sf_dir, tmp_path):
     ``file:///…`` (and would for ``s3a://…``), silently restarting the
     chain at v=0 and never enforcing retention."""
     from portfolio1_etl_spark.operators.sinks import (
+        _read_manifest,
         prune_versions,
         read_version,
         write_versioned,
     )
 
     nation = catalog.load(spark, sf_dir, "nation")
-    uri = (tmp_path / "nation_uri_versions").as_uri()  # file:///…
+    local = tmp_path / "nation_uri_versions"
+    uri = local.as_uri()  # file:///…
     assert uri.startswith("file://")
     assert write_versioned(nation.limit(4), uri) == 0
     # the second write must SEE v=0 through the scheme, not restart
     assert write_versioned(nation.limit(9), uri) == 1
     assert read_version(spark, uri).count() == 9
     assert read_version(spark, uri, 0).count() == 4
+    v0_token = _read_manifest(spark, uri, 0)["files"][0].split("/")[1]
+    assert (local / "_staging" / v0_token).is_dir()
     # retention actually deletes through the scheme'd filesystem
     assert prune_versions(spark, uri, keep=1) == [0]
-    import glob as _g
-
-    assert not _g.glob(str(tmp_path / "nation_uri_versions" / "v=0"))
+    assert not (local / "_manifests" / "v=0.json").exists()
+    assert not (local / "_staging" / v0_token).exists()
     assert read_version(spark, uri).count() == 9
 
 
@@ -352,6 +356,25 @@ def _feed_set(df):
     return {(r.id, r.qty, r._change) for r in df.collect()}
 
 
+def _captured_feed_files(spark, path):
+    """Absolute paths of every change-feed file the chain's manifests
+    commit."""
+    from portfolio1_etl_spark.operators.sinks import _read_manifest, _versions
+
+    return {
+        os.path.join(path, rel)
+        for n in _versions(spark, path)
+        for rel in _read_manifest(spark, path, n)["changes"]
+    }
+
+
+def _local_files(df):
+    """``df.inputFiles()`` as local paths."""
+    import urllib.parse
+
+    return [urllib.parse.urlparse(f).path for f in df.inputFiles()]
+
+
 def test_write_time_cdc_capture_matches_snapshot_diff(spark, tmp_path):
     """r8: chains written with capture_changes=True publish per-step
     delta files, and read_changes over a fully-captured span must (a)
@@ -386,12 +409,13 @@ def test_write_time_cdc_capture_matches_snapshot_diff(spark, tmp_path):
         assert write_versioned(f, cap, capture_changes=True) in (0, 1, 2)
         write_versioned(f, ref)
 
+    feed_files = _captured_feed_files(spark, cap)
     for args in [(0, 1), (0, 2), (1, 2), (2, 0)]:
         got = read_changes(spark, cap, *args)
         want = read_changes(spark, ref, *args)
         assert _feed_set(got) == _feed_set(want), args
-        files = got.inputFiles()
-        assert files and all("/_changes/" in f for f in files), args
+        files = _local_files(got)
+        assert files and set(files) <= feed_files, args
     # keyed reclassification over the captured span
     keyed = _feed_set(read_changes(spark, cap, 0, 2, key_cols=["id"]))
     assert keyed == {
@@ -406,12 +430,12 @@ def test_write_time_cdc_capture_matches_snapshot_diff(spark, tmp_path):
 
 
 def test_write_time_cdc_self_heals_missing_step(spark, tmp_path):
-    """A crash between the snapshot commit and the delta commit leaves
-    one step uncaptured: the span read must reconstruct THAT step by
-    snapshot diff and still use the persisted deltas for the rest."""
-    import shutil
-
+    """A middle write committed without a feed (capture_changes=False
+    on a capture chain) leaves one step uncaptured: the span read must
+    reconstruct THAT step by snapshot diff and still use the committed
+    deltas for the rest."""
     from portfolio1_etl_spark.operators.sinks import (
+        _read_manifest,
         read_changes,
         write_versioned,
     )
@@ -422,20 +446,22 @@ def test_write_time_cdc_self_heals_missing_step(spark, tmp_path):
         [(1, 10), (2, 20)],
         [(1, 11), (2, 20)],
     ]
-    for rs in rows:
+    for i, rs in enumerate(rows):
         write_versioned(
             spark.createDataFrame(rs, "id int, qty int"), path,
-            capture_changes=True,
+            capture_changes=i != 1,  # step 1 commits no feed
         )
-    shutil.rmtree(f"{path}/_changes/v=1")  # simulated crash at step 1
+    assert _read_manifest(spark, path, 1)["changes"] == []
     feed = {
         (r.id, r.qty, r._change)
         for r in read_changes(spark, path, 0, 2).collect()
     }
     assert feed == {(2, 20, "insert"), (1, 11, "insert"), (1, 10, "delete")}
-    # the surviving step's read is still delta-only
-    files = read_changes(spark, path, 1, 2).inputFiles()
-    assert files and all("/_changes/" in f for f in files)
+    # step 1 alone is rebuilt from the two snapshots
+    assert _feed_set(read_changes(spark, path, 0, 1)) == {(2, 20, "insert")}
+    # the captured step's read is still delta-only
+    files = _local_files(read_changes(spark, path, 1, 2))
+    assert files and set(files) <= _captured_feed_files(spark, path)
 
 
 # --- manifest commit protocol (r8) -----------------------------------------
@@ -443,7 +469,7 @@ def test_write_time_cdc_self_heals_missing_step(spark, tmp_path):
 
 def test_manifest_chain_commits_and_reads(spark, tmp_path):
     """Basic manifest chain: versions resolve through _manifests, the
-    flag is sticky across writes, and reads match the plain chain."""
+    flag is sticky across writes, and reads return each version."""
     from portfolio1_etl_spark.operators.sinks import (
         read_version,
         write_versioned,
@@ -525,18 +551,42 @@ def test_manifest_read_ignores_stray_files(spark, tmp_path):
     assert [r.id for r in read_version(spark, path, 0).collect()] == [1]
 
 
-def test_manifest_rejected_on_legacy_chain(spark, tmp_path):
-    """A chain created without manifests cannot adopt them mid-life."""
+def test_legacy_layout_is_refused_and_kept(spark, tmp_path):
+    """A path holding pre-manifest ``v=N/`` directories and no
+    ``_manifests/`` is neither adopted nor swept: ``write_versioned``
+    refuses it and leaves no file behind, ``vacuum_chain`` keeps the
+    old data, and ``manifest=False`` is refused outright."""
     import pytest
 
-    from portfolio1_etl_spark.operators.sinks import write_versioned
+    from portfolio1_etl_spark.operators.sinks import (
+        vacuum_chain,
+        write_versioned,
+    )
 
-    path = str(tmp_path / "legacy")
-    write_versioned(spark.createDataFrame([(1,)], "id int"), path)
-    with pytest.raises(ValueError, match="manifest"):
-        write_versioned(
-            spark.createDataFrame([(2,)], "id int"), path, manifest=True
+    path = tmp_path / "legacy"
+    spark.createDataFrame([(1,)], "id int").write.parquet(str(path / "v=0"))
+
+    def tree():
+        return sorted(
+            os.path.relpath(os.path.join(root, f), path)
+            for root, _, files in os.walk(path)
+            for f in files
         )
+
+    before = tree()
+    with pytest.raises(ValueError, match="pre-manifest"):
+        write_versioned(spark.createDataFrame([(2,)], "id int"), str(path))
+    assert tree() == before
+    assert not (path / "_manifests").exists()
+    assert vacuum_chain(spark, str(path)) == []
+    assert tree() == before
+    assert [r.id for r in spark.read.parquet(str(path / "v=0")).collect()] == [1]
+    with pytest.raises(ValueError, match="plain"):
+        write_versioned(
+            spark.createDataFrame([(2,)], "id int"), str(tmp_path / "fresh"),
+            manifest=False,
+        )
+    assert not (tmp_path / "fresh").exists()
 
 
 def test_compact_versioned_transactional(spark, tmp_path):
@@ -581,6 +631,7 @@ def test_manifest_prune_uncommits_first(spark, tmp_path):
     import os
 
     from portfolio1_etl_spark.operators.sinks import (
+        _read_manifest,
         _versions,
         prune_versions,
         read_version,
@@ -593,12 +644,16 @@ def test_manifest_prune_uncommits_first(spark, tmp_path):
             spark.createDataFrame([(i,)], "id int"), path,
             capture_changes=True, manifest=True,
         )
+    tokens = [
+        _read_manifest(spark, path, n)["files"][0].split("/")[1]
+        for n in range(4)
+    ]
     assert prune_versions(spark, path, keep=2) == [0, 1]
     assert _versions(spark, path) == [2, 3]
     listed = [f for f in os.listdir(f"{path}/_manifests") if not f.startswith(".")]
     assert sorted(listed) == ["v=2.json", "v=3.json"]
-    assert not os.path.exists(f"{path}/v=0")
-    assert not os.path.exists(f"{path}/_changes/v=1")
+    # each pruned version's staged data and feed go with its token dir
+    assert sorted(os.listdir(f"{path}/_staging")) == sorted(tokens[2:])
     assert [r.id for r in read_version(spark, path).collect()] == [3]
 
 
@@ -622,46 +677,12 @@ def test_compact_versioned_carries_meta_forward(spark, tmp_path):
     assert version_meta(spark, path, new) == {"epoch": 7}
 
 
-def test_partial_delta_dir_falls_back_to_snapshot_diff(spark, tmp_path):
-    """Review regression (r8): a _changes directory without its
-    _SUCCESS marker (writer died mid-delta-write on a plain chain) is
-    NOT trusted — the span read reconstructs that step by snapshot
-    diff instead of reading a truncated feed."""
-    import os
-
-    from portfolio1_etl_spark.operators.sinks import (
-        read_changes,
-        write_versioned,
-    )
-
-    path = str(tmp_path / "partialdelta")
-    write_versioned(
-        spark.createDataFrame([(1, 10)], "id int, qty int"), path,
-        capture_changes=True,
-    )
-    write_versioned(
-        spark.createDataFrame([(1, 10), (2, 20)], "id int, qty int"), path,
-        capture_changes=True,
-    )
-    # simulate the mid-write crash: marker gone, stale partial content
-    os.remove(f"{path}/_changes/v=1/_SUCCESS")
-    feed = {
-        (r.id, r.qty, r._change)
-        for r in read_changes(spark, path, 0, 1).collect()
-    }
-    assert feed == {(2, 20, "insert")}
-    files = read_changes(spark, path, 0, 1).inputFiles()
-    assert files and all("/_changes/" not in f for f in files)
-
-
 def test_vacuum_chain_reclaims_unreferenced_versions(spark, tmp_path):
     """vacuum_chain deletes data/changes directories with no committed
     manifest — the crashed-prune leak (below head, never swept by
     number reuse) and the crashed-write head orphan — and leaves every
     committed version intact."""
     import os
-
-    import pytest
 
     from portfolio1_etl_spark.operators.sinks import (
         read_version,
@@ -689,11 +710,6 @@ def test_vacuum_chain_reclaims_unreferenced_versions(spark, tmp_path):
     assert not os.path.exists(f"{path}/v=7")
     assert [r.id for r in read_version(spark, path, 1).collect()] == [1]
     assert [r.id for r in read_version(spark, path, 2).collect()] == [2]
-    # plain chains refuse: directory existence IS the commit there
-    plain = str(tmp_path / "plainvac")
-    write_versioned(spark.createDataFrame([(1,)], "id int"), plain)
-    with pytest.raises(ValueError, match="manifest"):
-        vacuum_chain(spark, plain)
 
 
 def test_cas_primitive_create_exclusive(spark, tmp_path):
@@ -927,11 +943,6 @@ def test_read_version_asof_timestamp_time_travel(spark, tmp_path):
     assert [r.id for r in read_version_asof(spark, path, after_all).collect()] == [1]
     with pytest.raises(FileNotFoundError):
         read_version_asof(spark, path, before_all)
-    # non-manifest chains refuse loudly
-    plain = str(tmp_path / "asof_plain")
-    write_versioned(spark.createDataFrame([(9,)], "id int"), plain)
-    with pytest.raises(ValueError, match="committed_at"):
-        read_version_asof(spark, plain, after_all)
 
 
 def test_partitioned_versioned_chain_prunes_and_compacts(spark, sf_dir, tmp_path):
@@ -1028,26 +1039,3 @@ def test_vacuum_sweeps_tmp_debris_and_reused_number_orphans(spark, tmp_path):
     assert not os.path.exists(f"{path}/v=1")
     assert [r.id for r in read_version(spark, path, 1).collect()] == [2]
     assert [r.id for r in read_version(spark, path, 0).collect()] == [1]
-
-
-def test_compact_preserves_hive_layout_on_plain_chain(spark, sf_dir, tmp_path):
-    """Review r9: non-manifest chains record no layout metadata, so
-    compact recovers the partition columns from the directory
-    structure itself instead of silently flattening the layout."""
-    import glob as _g
-
-    from portfolio1_etl_spark import catalog
-    from portfolio1_etl_spark.operators.sinks import (
-        compact_versioned,
-        read_version,
-        write_versioned,
-    )
-
-    orders = catalog.load(spark, sf_dir, "orders").limit(300)
-    path = str(tmp_path / "plain_part")
-    write_versioned(orders, path, partition_by=["o_orderpriority"])
-    v1 = compact_versioned(spark, path)
-    assert _g.glob(f"{path}/v={v1}/o_orderpriority=*"), (
-        "compacted version must keep the hive layout"
-    )
-    assert read_version(spark, path, v1).count() == 300
