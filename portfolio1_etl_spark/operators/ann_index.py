@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from portfolio1_etl_spark.catalog import read_parquet
 from portfolio1_etl_spark.operators.clustering import assign_cells, lloyd_kmeans
 from portfolio1_etl_spark.operators.similarity import DOT, cosine
 
@@ -178,7 +179,7 @@ def query_ivf_index(
     plan-asserted in tests/test_ann_index.py. With n_probe = #cells
     the result equals the exact brute force (also asserted)."""
     path = _index_root(spark, path)
-    cent = spark.read.parquet(f"{path}/centroids")
+    cent = read_parquet(spark, f"{path}/centroids")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -204,7 +205,7 @@ def query_ivf_index(
         .filter(F.col("prn") <= n_probe)
         .select("query_id", "qv", "qnrm", F.col("c_id").alias("cell"))
     )
-    vectors = spark.read.parquet(f"{path}/vectors")
+    vectors = read_parquet(spark, f"{path}/vectors")
     cand = vectors.join(probes, "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
@@ -227,7 +228,7 @@ def cell_stats(spark: SparkSession, path: str) -> tuple[int, float]:
     hot cell's share up and narrow-probe recall down (queries near the
     hot region burn their whole probe budget on one overgrown cell)."""
     sizes = (
-        spark.read.parquet(f"{_index_root(spark, path)}/vectors")
+        read_parquet(spark, f"{_index_root(spark, path)}/vectors")
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(
@@ -340,7 +341,7 @@ def rebalance_index(
             return False
 
     root = path if gen is None else f"{path}/gen={gen}"
-    vecs = spark.read.parquet(f"{root}/vectors").select("vec_id", "v", "nrm")
+    vecs = read_parquet(spark, f"{root}/vectors").select("vec_id", "v", "nrm")
     assigned, cent = lloyd_kmeans(
         vecs, k=k, iters=iters, train_fraction=train_fraction,
         checkpoint_mode=checkpoint_mode,
@@ -390,7 +391,7 @@ def ingest_vectors(
     consistent prefix of the ingest — the same contract as the flat
     layout)."""
     root = _index_root(spark, path)
-    cent = spark.read.parquet(f"{root}/centroids")
+    cent = read_parquet(spark, f"{root}/centroids")
     assigned = assign_cells(new_vecs.select("vec_id", "v"), cent)
     (
         _with_nrm(assigned)
@@ -417,8 +418,8 @@ def ingest_vectors_ivfpq(
     desync it from the build."""
     from portfolio1_etl_spark.operators.pq import _assign, split_subspaces
 
-    cent = spark.read.parquet(f"{path}/centroids")
-    pq_cent = spark.read.parquet(f"{path}/pq_codebook")
+    cent = read_parquet(spark, f"{path}/centroids")
+    pq_cent = read_parquet(spark, f"{path}/pq_codebook")
     n_sub, sub_dim = (
         pq_cent.selectExpr(
             "max(sub) + 1 AS ns", "max(size(cvec)) AS sd"
@@ -540,8 +541,8 @@ def query_ivfpq_index(
     exact-cosine re-rank only those (full vectors read DPP-pruned from
     the probed cells). Queries must be corpus members carrying
     (vec_id, v, nrm) — the pq_topk precondition."""
-    cent = spark.read.parquet(f"{path}/centroids")
-    pq_cent = spark.read.parquet(f"{path}/pq_codebook")
+    cent = read_parquet(spark, f"{path}/centroids")
+    pq_cent = read_parquet(spark, f"{path}/pq_codebook")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -587,7 +588,7 @@ def query_ivfpq_index(
         F.col("c_id").alias("code"),
         subdist.cast("decimal(18,6)").alias("qd"),
     )
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = read_parquet(spark, f"{path}/codes")
     adc = (
         codes.join(probes, "cell")
         .join(F.broadcast(qdist), ["query_id", "sub", "code"])
@@ -607,7 +608,7 @@ def query_ivfpq_index(
         .filter(F.col("srn") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-    vectors = spark.read.parquet(f"{path}/vectors")
+    vectors = read_parquet(spark, f"{path}/vectors")
     # the re-rank reads full vectors ONLY within the probed cells —
     # the same DPP prune as the code scan (shortlist ids live there
     # by construction)

@@ -21,6 +21,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from portfolio1_etl_spark.catalog import footer_schema, read_parquet
+
 #: bounded optimistic-concurrency retries for manifest-chain commits —
 #: enough to ride out a burst of interleaved writers, small enough that
 #: pathological contention fails loudly instead of spinning
@@ -126,7 +128,7 @@ def compact_parquet(
         if st.getPath().getName().endswith(".parquet"):
             size += st.getLen()
     n_files = max(1, -(-size // target_file_bytes))
-    df = spark.read.parquet(path).repartition(n_files)
+    df = read_parquet(spark, path).repartition(n_files)
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
     df.write.mode("overwrite").parquet(str(staged))
@@ -298,9 +300,10 @@ def write_versioned(
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(f"{path}/{staging}/data")
-        return spark.read.parquet(f"{path}/{staging}/data")
+        return _read_back(spark, path, f"{staging}/data")
 
-    def attempt(staging, written, new, prev_m):
+    def attempt(staging, staged, new, prev_m):
+        written, files = staged
         promotions = constraints = None
         if new == 0 and _dir_versions(spark, path):
             raise ValueError(
@@ -338,7 +341,7 @@ def write_versioned(
             rels = [changes_rel]
         return {
             "meta": meta,
-            "files": _list_rel_parquet(spark, path, f"{staging}/data"),
+            "files": files,
             "changes": changes,
             "base": f"{staging}/data",
             "partition_by": partition_by or None,
@@ -628,6 +631,24 @@ def _list_rel_parquet(spark: SparkSession, path: str, sub: str) -> list[str]:
     return sorted(out)
 
 
+def _read_back(
+    spark: SparkSession, path: str, sub: str
+) -> tuple[DataFrame, list[str]]:
+    """``(frame, rels)`` for what a commit just wrote under
+    ``{path}/{sub}``: ``rels`` is ``_list_rel_parquet``'s one listing
+    (the manifest's file list), and ``frame`` reads the directory with
+    the schema of the first listed file's footer, resolved on the
+    driver (``catalog.footer_schema``: no inference job, no second
+    listing). Every file of one write carries the same footer schema;
+    hive partition columns come back from the paths. A write that left
+    no file (an empty partitioned frame) reads without a schema, which
+    raises Spark's usual error."""
+    rels = _list_rel_parquet(spark, path, sub)
+    schema = footer_schema(spark, f"{path}/{rels[0]}") if rels else None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{path}/{sub}"), rels
+
+
 def _read_small_file(spark: SparkSession, path: str) -> str | None:
     """Contents of a small control file via the path's own Hadoop FS,
     or None when absent — the shared read half of the one-file commit
@@ -649,6 +670,48 @@ class ConcurrentCommitError(RuntimeError):
     caller either retries against the new latest
     (``_commit_with_retry``) or aborts loudly — never silently
     clobbers the winner's commit."""
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """The POSIX path of ``path`` when Hadoop resolves it to the local
+    FS, else None. An explicit file:// scheme is definitively local; a
+    schemeless path resolves against fs.defaultFS, so Hadoop is asked —
+    on a cluster with defaultFS=hdfs:// the schemeless path is NOT
+    local, or the write and read halves of the commit protocol would
+    talk to different stores."""
+    parsed = urllib.parse.urlparse(path)
+    if parsed.scheme == "file":
+        return parsed.path
+    if parsed.scheme == "" and _hadoop_fs(spark, path)[0].getUri().getScheme() == "file":
+        return path
+    return None
+
+
+def _rmdir_if_empty(spark: SparkSession, path: str) -> None:
+    """Remove directory ``path`` only if it is empty, atomically: a
+    concurrent writer that has put anything in it keeps it. Local
+    paths use ``os.rmdir`` (Hadoop's local non-recursive delete checks
+    emptiness, then deletes recursively); other stores use a
+    non-recursive ``FileSystem.delete``, which refuses a non-empty
+    directory."""
+    import errno
+
+    from py4j.protocol import Py4JJavaError
+
+    local = _local_path(spark, path)
+    if local is not None:
+        try:
+            os.rmdir(local)
+        except OSError as e:
+            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST, errno.ENOENT):
+                raise
+        return
+    fs, jpath = _hadoop_fs(spark, path)
+    try:
+        fs.delete(jpath, False)
+    except Py4JJavaError as e:
+        if "PathIsNotEmptyDirectory" not in e.java_exception.getClass().getName():
+            raise
 
 
 def _write_small_file_atomic(
@@ -697,19 +760,8 @@ def _write_small_file_atomic(
 
     from py4j.protocol import Py4JJavaError
 
-    parsed = urllib.parse.urlparse(path)
-    # POSIX branch ONLY when Hadoop resolves the path to the local FS.
-    # An explicit file:// scheme is definitively local; a schemeless
-    # path resolves against fs.defaultFS, so ask Hadoop — on a cluster
-    # with defaultFS=hdfs:// the schemeless path MUST take the
-    # FileContext branch or the write and read halves of the commit
-    # protocol would talk to different stores.
-    is_local = parsed.scheme == "file" or (
-        parsed.scheme == ""
-        and _hadoop_fs(spark, path)[0].getUri().getScheme() == "file"
-    )
-    if is_local:
-        local = parsed.path if parsed.scheme == "file" else path
+    local = _local_path(spark, path)
+    if local is not None:
         tmp_local = os.path.join(
             os.path.dirname(local),
             f".{os.path.basename(local)}.{uuid.uuid4().hex[:12]}.tmp",
@@ -819,8 +871,8 @@ _MANIFEST_BLOCKS = (
     "clone_of",
     "constraints",
     "stats",
-    # per-seq read-back schemas (see _recorded_schema): readers skip
-    # footer-inference jobs for every group recorded here
+    # per-seq read-back schemas (see _recorded_schema): readers open
+    # no footer for a group recorded here
     "schemas",
 )
 
@@ -888,7 +940,8 @@ def _commit_with_retry(spark: SparkSession, path: str, stage, attempt) -> int:
     Cleanup rule: when the call fails and nothing can have committed —
     a refusal raised while staging or deriving an attempt, or giving
     up after the last lost race — the whole ``staging`` directory is
-    deleted. Any other error out of ``_commit_manifest`` is ambiguous
+    deleted, and ``_staging`` itself when that leaves it empty. Any
+    other error out of ``_commit_manifest`` is ambiguous
     (the manifest may have landed before e.g. the tmp-file removal
     failed), so staging stays and ``vacuum_chain`` decides by
     referencedness. A ``ConcurrentCommitError`` raised by ``attempt``
@@ -925,6 +978,10 @@ def _commit_with_retry(spark: SparkSession, path: str, stage, attempt) -> int:
         if not committing:
             # False only when nothing was staged yet
             fs.delete(hpath(f"{path}/{staging}"), True)
+            # a refused first write (e.g. onto pre-manifest data) must
+            # not leave an empty _staging/ behind; a concurrent writer's
+            # token directory keeps it
+            _rmdir_if_empty(spark, f"{path}/_staging")
         raise
 
 
@@ -973,23 +1030,42 @@ def _manifest_bases(m: dict) -> dict[str, str]:
 def _recorded_schema(doc: dict | None):
     """``StructType`` from a recorded-schema JSON dict, or None.
 
-    r14: every Spark ``read.parquet`` WITHOUT an explicit schema runs
-    a footer-inference JOB (~0.25 s of scheduler fixed cost) before
-    the read is even planned — a manifest-chain replay pays that per
-    file group per ``read_version``. Commit paths therefore CAPTURE
-    the inference result they already compute (the post-write
-    read-back, which is footer-faithful by construction — including
-    partition-column type inference on hive-laid-out groups) into the
-    manifest, and every reader passes it back explicitly: zero
-    inference jobs on the read side, byte-identical schema to what
-    inference would return because it IS an inference result. File
-    groups without a recorded schema (pre-r14 manifests, compaction
-    rewrites) fall back to inference exactly as before."""
+    Commit paths record the schema of each file group they write (the
+    post-write read-back's schema, partition columns included, see
+    ``_read_back``) in the manifest, and readers pass it back
+    explicitly, so a chain read opens no footer at all. A group
+    without a recorded schema (manifests written before schemas were
+    recorded) reads through ``catalog.read_parquet``, which resolves
+    the schema from one footer on the driver."""
     if not doc:
         return None
     from pyspark.sql import types as T
 
     return T.StructType.fromJson(doc)
+
+
+def _read_recorded(
+    spark: SparkSession, files: list[str], doc: dict | None, reader=None
+) -> DataFrame:
+    """``files`` read with the recorded schema ``doc``, or through
+    ``read_parquet`` when none was recorded."""
+    sch = _recorded_schema(doc)
+    if sch is None:
+        return read_parquet(spark, *files, reader=reader)
+    return (reader or spark.read).schema(sch).parquet(*files)
+
+
+def _manifest_schemas(m: dict) -> dict:
+    """Per-seq recorded schemas of manifest ``m`` (see
+    ``_recorded_schema``). Without ``seqs`` every file is one group,
+    read as the manifest's own version: a metadata commit carries the
+    single entry forward under the version that wrote it, so it is
+    re-keyed here the way ``_manifest_bases`` re-keys a single
+    ``base``."""
+    schemas = dict(m.get("schemas") or {})
+    if not m.get("seqs") and len(schemas) == 1:
+        return {str(m["version"]): next(iter(schemas.values()))}
+    return schemas
 
 
 def _manifest_head_types(m: dict) -> dict | None:
@@ -1002,7 +1078,7 @@ def _manifest_head_types(m: dict) -> dict | None:
     read_version plan altogether."""
     if not m or "version" not in m:
         return None
-    schemas = m.get("schemas") or {}
+    schemas = _manifest_schemas(m)
     if m.get("clone_of") is not None:
         return None  # delegated base: schema lives in the source chain
     seqs = m.get("seqs") or {}
@@ -1053,20 +1129,17 @@ def _scan_manifest(spark: SparkSession, path: str, m: dict) -> DataFrame:
     bases = _manifest_bases(m)
     clone = m.get("clone_of")
 
-    schemas = m.get("schemas") or {}
+    schemas = _manifest_schemas(m)
 
     def _scan(rels: list[str], seq: int):
         reader = spark.read
-        sch = _recorded_schema(schemas.get(str(seq)))
-        if sch is not None:
-            # recorded at commit time from the post-write inference
-            # read — skips the per-group footer-inference job
-            reader = reader.schema(sch)
         if str(seq) in bases:
             # basePath recovers hive-partition columns from the staged
             # file paths; a filter on them prunes at PLAN time
             reader = reader.option("basePath", f"{path}/{bases[str(seq)]}")
-        return reader.parquet(*[f"{path}/{rel}" for rel in rels])
+        return _read_recorded(
+            spark, [f"{path}/{rel}" for rel in rels], schemas.get(str(seq)), reader
+        )
 
     if not row_deletes:
         if clone is not None:
@@ -1095,11 +1168,9 @@ def _scan_manifest(spark: SparkSession, path: str, m: dict) -> DataFrame:
     key_cols = row_deletes[0]["key_cols"]
     dels = None
     for entry in row_deletes:
-        reader = spark.read
-        ksch = _recorded_schema(entry.get("schema"))
-        if ksch is not None:
-            reader = reader.schema(ksch)
-        d = reader.parquet(f"{path}/{entry['path']}").select(
+        d = _read_recorded(
+            spark, [f"{path}/{entry['path']}"], entry.get("schema")
+        ).select(
             *[F.col(c).alias(f"_del_{c}") for c in entry["key_cols"]]
         ).withColumn("_dseq", F.lit(int(entry["seq"])))
         dels = d if dels is None else dels.unionByName(d)
@@ -1172,31 +1243,30 @@ def _delta_commit(
     # version-independent stages land ONCE; only the change feed
     # (which depends on the actual predecessor) re-stages per attempt.
     # The keys and data stagings land under distinct paths with no
-    # dependency — write both (and their footer read-backs) from
-    # driver threads (guide §2.6). The read-back inference results are
-    # captured into the manifest (_recorded_schema) and reused below
-    # for constraint checks and the change feed, so every later
-    # read_version of this commit skips its inference jobs entirely.
+    # dependency — write both (and their read-backs) from driver
+    # threads (guide §2.6). The read-back schemas are recorded in the
+    # manifest (_recorded_schema) and the frames reused below for
+    # constraint checks and the change feed.
     def stage(staging):
         def _stage_keys():
             keys.write.mode("errorifexists").parquet(f"{path}/{staging}/rowdel")
-            return spark.read.parquet(f"{path}/{staging}/rowdel")
+            return _read_back(spark, path, f"{staging}/rowdel")
 
         def _stage_data():
             if source_df is None:
-                return None
+                return None, []
             w = source_df.write.mode("errorifexists")
             if pb0:
                 w = w.partitionBy(*pb0)
             w.parquet(f"{path}/{staging}/data")
-            return spark.read.parquet(f"{path}/{staging}/data")
+            return _read_back(spark, path, f"{staging}/data")
 
         from portfolio1_etl_spark.parallelism import overlap_jobs
 
         return overlap_jobs(_stage_keys, _stage_data)
 
     def attempt(staging, staged, new, m):
-        keys_read, appended = staged
+        (keys_read, key_files), (appended, new_files) = staged
         prior = _scan_manifest(spark, path, m)
         missing = [c for c in key_cols if c not in prior.columns]
         if missing:
@@ -1248,9 +1318,8 @@ def _delta_commit(
         }
         files = list(m["files"])
         bases = _manifest_bases(m)
-        schemas = dict(m.get("schemas") or {})
+        schemas = _manifest_schemas(m)
         if appended is not None:
-            new_files = _list_rel_parquet(spark, path, f"{staging}/data")
             files += new_files
             seqs.update({rel: new for rel in new_files})
             bases[str(new)] = f"{staging}/data"
@@ -1263,7 +1332,7 @@ def _delta_commit(
                 "key_cols": list(key_cols),
                 "schema": kschema,
             }
-            for rel in _list_rel_parquet(spark, path, f"{staging}/rowdel")
+            for rel in key_files
         ]
         return {
             "meta": meta if meta is not None else (m.get("meta") or None),
@@ -1439,22 +1508,23 @@ def compact_versioned(
                 .write.mode("errorifexists")
                 .parquet(f"{path}/{data_rel}")
             )
+        written, files = _read_back(spark, path, data_rel)
         changes, rels = [], [data_rel]
         if captures:
-            _write_empty_feed(
-                spark.read.parquet(f"{path}/{data_rel}"), f"{path}/{changes_rel}"
-            )
+            _write_empty_feed(written, f"{path}/{changes_rel}")
             changes = _list_rel_parquet(spark, path, changes_rel)
             rels.append(changes_rel)
         return {
             "meta": m.get("meta", {}),
-            "files": _list_rel_parquet(spark, path, data_rel),
+            "files": files,
             "changes": changes,
             "base": data_rel,
             "partition_by": pb,
             # a layout rewrite materializes a clone (clone_of is
             # deliberately NOT carried) but keeps the rules
             "constraints": m.get("constraints"),
+            # later scans of the rewritten group open no footer
+            "schemas": {str(new): written.schema.jsonValue()},
         }, rels
 
     return _commit_with_retry(spark, path, None, attempt)
@@ -1519,7 +1589,7 @@ def read_changes(
         steps = []
         for v in range(lo + 1, hi + 1):
             if v in feeds:
-                steps.append(spark.read.parquet(*feeds[v]))
+                steps.append(read_parquet(spark, *feeds[v]))
             else:  # self-heal the one missing step by snapshot diff
                 steps.append(
                     _step_changes(

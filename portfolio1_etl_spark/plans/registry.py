@@ -48,3 +48,18 @@ def query(name: str, sql: str | None = None, operators: tuple[str, ...] = ()):
         return fn
 
     return deco
+
+
+def resolve(name: str) -> str:
+    """The registered name ``name`` stands for: itself when registered,
+    else the one query named ``{name}_*`` (``q46`` →
+    ``q46_scd2_intervals``). An unknown or ambiguous name raises
+    ``KeyError`` naming the candidates."""
+    if name in REGISTRY:
+        return name
+    hits = [n for n in REGISTRY if n.startswith(f"{name}_")]
+    if not hits:
+        raise KeyError(f"query {name!r} is not registered")
+    if len(hits) > 1:
+        raise KeyError(f"query {name!r} is ambiguous: {', '.join(hits)}")
+    return hits[0]

@@ -40,14 +40,16 @@ def _raw_events_schema(ts_type: T.DataType) -> T.StructType:
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """events as a file-source stream (parquet landing zone). A
     streaming source needs a declared schema, so the footer's ``ts``
-    encoding is probed ONCE with a batch metadata read (driver-only,
-    no data scan) and the stream adapts: nanos-as-long converts with
-    integer division exactly like catalog.load; native micros NTZ
-    passes through. Hardcoding either encoding breaks when the
-    landing-zone writer changes its timestamp unit. An empty landing
-    zone (stream started before the first file lands) can't be probed,
-    so the probe falls back to native micros NTZ — the writer's current
-    encoding — rather than refusing to start.
+    encoding is probed ONCE from one footer on the driver
+    (``catalog.footer_schema``: no job, no data scan) and the stream
+    adapts: nanos-as-long converts with integer division exactly like
+    catalog.load; native micros NTZ passes through. Hardcoding either
+    encoding breaks when the landing-zone writer changes its timestamp
+    unit. An empty or not yet created landing zone (stream started
+    before the first file lands) can't be probed, so the probe falls
+    back to native micros NTZ — the writer's current encoding — rather
+    than refusing to start; a corrupt footer or a file without ``ts``
+    raises.
 
     SESSION-GLOBAL SIDE EFFECT (shared package contract): like
     ``catalog.load``, this pins ``spark.sql.session.timeZone=UTC`` and
@@ -57,12 +59,12 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     parquet, which nothing else reads. A host application that needs a
     different session zone for its own queries must use a separate
     SparkSession rather than interleave with this package's jobs."""
+    from portfolio1_etl_spark.catalog import footer_schema
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        probed = spark.read.parquet(path).schema["ts"].dataType
-    except Exception:  # empty dir → "unable to infer schema"
-        probed = T.TimestampNTZType()
+    landed = footer_schema(spark, path)
+    probed = T.TimestampNTZType() if landed is None else landed["ts"].dataType
     raw = (
         spark.readStream.schema(_raw_events_schema(probed))
         .option("maxFilesPerTrigger", 1)

@@ -327,19 +327,19 @@ _MANIFEST_KEYS = {
     ],
     "compact": [
         "base", "changes", "committed_at", "files", "meta", "partition_by",
-        "version",
+        "schemas", "version",
     ],
     "add-constraint": [
         "base", "changes", "committed_at", "constraints", "files", "meta",
-        "partition_by", "version",
+        "partition_by", "schemas", "version",
     ],
     "analyze": [
         "base", "changes", "committed_at", "constraints", "files", "meta",
-        "partition_by", "stats", "version",
+        "partition_by", "schemas", "stats", "version",
     ],
     "drop-constraint": [
         "base", "changes", "committed_at", "files", "meta", "partition_by",
-        "stats", "version",
+        "schemas", "stats", "version",
     ],
     "clone": ["changes", "clone_of", "committed_at", "files", "meta", "version"],
 }

@@ -554,7 +554,7 @@ def test_manifest_read_ignores_stray_files(spark, tmp_path):
 def test_legacy_layout_is_refused_and_kept(spark, tmp_path):
     """A path holding pre-manifest ``v=N/`` directories and no
     ``_manifests/`` is neither adopted nor swept: ``write_versioned``
-    refuses it and leaves no file behind, ``vacuum_chain`` keeps the
+    refuses it and leaves no file or directory behind, ``vacuum_chain`` keeps the
     old data, and ``manifest=False`` is refused outright."""
     import pytest
 
@@ -577,6 +577,8 @@ def test_legacy_layout_is_refused_and_kept(spark, tmp_path):
     with pytest.raises(ValueError, match="pre-manifest"):
         write_versioned(spark.createDataFrame([(2,)], "id int"), str(path))
     assert tree() == before
+    # no empty _staging/ directory either
+    assert sorted(os.listdir(path)) == ["v=0"]
     assert not (path / "_manifests").exists()
     assert vacuum_chain(spark, str(path)) == []
     assert tree() == before

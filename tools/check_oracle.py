@@ -5,6 +5,9 @@ DuckDB oracle SQL over the same parquet tables, then compare
 row count, sorted column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Query names may be short (``q46`` for ``q46_scd2_intervals``); an
+unknown or ambiguous name aborts before anything runs.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import pandas as pd
 
 from portfolio1_etl_spark import get_spark
 from portfolio1_etl_spark.plans import REGISTRY
+from portfolio1_etl_spark.plans.registry import resolve
 from portfolio1_etl_spark.schemas import DRIVER_TABLES
 
 
@@ -45,6 +49,7 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def run_check(sf_dir: str, names: list[str] | None = None) -> int:
+    todo = [resolve(n) for n in names] if names else list(REGISTRY)
     spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in DRIVER_TABLES:
@@ -53,7 +58,6 @@ def run_check(sf_dir: str, names: list[str] | None = None) -> int:
         )
 
     failures = 0
-    todo = names or list(REGISTRY)
     for name in todo:
         q = REGISTRY[name]
         t0 = time.time()

@@ -11,6 +11,12 @@ drift in a double fold is caught even when DuckDB would still agree).
 Usage:
     python tools/result_hash.py --out=FILE [--sf=DIR] [q1 q2 ...]
     python tools/result_hash.py --compare A.json B.json
+
+Names may be short (``q46`` for ``q46_scd2_intervals``); an unknown or
+ambiguous name aborts before anything runs. A query that raises is
+recorded as ``{"error": ...}`` and makes the run exit 1; ``--compare``
+counts an entry with an error on either side as a mismatch, so two
+identical failures never pass as identical results.
 """
 
 from __future__ import annotations
@@ -80,7 +86,10 @@ def main() -> None:
         da, db = json.load(open(a)), json.load(open(b))
         bad = 0
         for name in sorted(set(da) & set(db)):
-            if da[name] != db[name]:
+            if "error" in da[name] or "error" in db[name]:
+                bad += 1
+                print(f"ERROR {name}: {da[name]} vs {db[name]}")
+            elif da[name] != db[name]:
                 bad += 1
                 print(f"MISMATCH {name}: {da[name]} != {db[name]}")
         only = set(da) ^ set(db)
@@ -91,11 +100,12 @@ def main() -> None:
 
     from portfolio1_etl_spark import get_spark
     from portfolio1_etl_spark.plans import REGISTRY
+    from portfolio1_etl_spark.plans.registry import resolve
 
     sf_dir = opts.get("--sf", os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     out = opts.get("--out") or "/tmp/result_hash.json"
+    names = [resolve(a) for a in args] or list(REGISTRY)
     spark = get_spark(app_name="result-hash")
-    names = args or list(REGISTRY)
     res: dict[str, dict] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"hash:{name}")
@@ -108,8 +118,10 @@ def main() -> None:
         spark.catalog.clearCache()
     with open(out, "w") as f:
         json.dump(res, f, indent=1, sort_keys=True)
-    print(f"# wrote {out} ({len(res)} queries)")
+    failed = sum("error" in r for r in res.values())
+    print(f"# wrote {out} ({len(res)} queries, {failed} failed)")
     spark.stop()
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":
