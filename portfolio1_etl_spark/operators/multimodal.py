@@ -6,9 +6,15 @@ Spark-side design (all real and tested):
   the schema a 100 TB media lake actually uses (content inline for
   small objects, or a reference path for large ones);
 - ingestion via ``spark.read.format('binaryFile')``;
-- decode / feature-extraction runs in ``mapInPandas`` — Arrow batches
-  of binary columns in, Arrow batches of features out, so the Python
-  boundary is crossed per *batch*, never per row;
+- every decode / feature-extraction pass crosses the Python boundary
+  through ONE helper, :func:`map_rows` — Arrow record batches of
+  binary columns in, Arrow record batches of features out, so the
+  boundary is crossed per *batch*, never per row. Each operator is a
+  per-row function; the helper owns batching, output assembly and the
+  one survival rule: a row whose codec raises one of
+  :data:`DECODE_ERRORS` becomes the operator's marked fallback row
+  (``undecodable`` / NULLs / pass-through), and any other exception
+  fails the task;
 - NO repartition before the map: every decode/resize/featurize pass
   dispatches per row on magic bytes, so mixed-modality batches are
   fine and the pass is a pure narrow map over however many partitions
@@ -48,13 +54,72 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: What a codec raises on content it cannot decode: malformed headers
+#: and values (ValueError), a documented format boundary
+#: (NotImplementedError), a stream shorter than its own length fields
+#: (IndexError, struct.error) and a corrupt deflate stream (zlib.error).
+#: The one decode-error rule of every media pass. Never widen it to
+#: ``Exception``: a bug in the per-row code must fail the task, not
+#: turn the whole corpus into marked rows.
+DECODE_ERRORS = (ValueError, NotImplementedError, IndexError, struct.error, zlib.error)
+
+
+def map_rows(
+    df: DataFrame,
+    fn: Callable[..., tuple],
+    schema: T.StructType | str,
+    cols: Sequence[str],
+    on_error: Callable[..., tuple] | None = None,
+) -> DataFrame:
+    """Apply ``fn(*row)`` to the ``cols`` values of every row of ``df``
+    and return one output row per input row, typed by ``schema`` (a
+    ``StructType`` or a DDL string).
+
+    Runs as one Arrow-batched ``mapInArrow`` narrow map: inputs are
+    read with ``to_pylist()`` and each output column is built with
+    ``pa.array(values, type=...)`` from the Arrow form of ``schema``,
+    so a nullable ``long`` stays exact (pandas would turn ``[1, None]``
+    into float64). When ``fn`` raises one of :data:`DECODE_ERRORS` the
+    row becomes ``on_error(*row)``, or the error propagates when
+    ``on_error`` is None; any other exception fails the task.
+
+    Fan-out stays one row in, one row out: return an ``array<struct>``
+    column and expand it with ``F.inline`` — an empty array drops the
+    row, a one-element array of nulls gives one NULL row."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+
+    def op(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out_schema = to_arrow_schema(schema)
+        for batch in batches:
+            rows = []
+            for row in zip(*(c.to_pylist() for c in batch.columns)):
+                try:
+                    rows.append(fn(*row))
+                except DECODE_ERRORS:
+                    if on_error is None:
+                        raise
+                    rows.append(on_error(*row))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([r[i] for r in rows], type=field.type)
+                    for i, field in enumerate(out_schema)
+                ],
+                schema=out_schema,
+            )
+
+    return df.select(*cols).mapInArrow(op, schema)
+
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -516,36 +581,28 @@ def decode_media_features(media: DataFrame) -> DataFrame:
     """REAL decode pass: parse each binary object (PPM/WAV via the
     native codecs), then aggregate the decoded pixel/sample values to
     per-object features — unit count, dims string ('8x8' / '8000Hz'),
-    mean value, RMS. Arrow batches in/out via mapInPandas; sums run in
-    int64 (exact up to ~2^33 PCM16 samples per object), so the final
-    double division and sqrt are bit-reproducible across engines."""
+    mean value, RMS. A :func:`map_rows` narrow map; sums run in int64
+    (exact up to ~2^33 PCM16 samples per object), so the final double
+    division and sqrt are bit-reproducible across engines. One
+    undecodable object must not kill a corpus-wide job: its row
+    survives with its input modality, ``dims='undecodable'`` and zero
+    features."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in DECODED_FEATURES_SCHEMA}
-            for path, in_modality, content in zip(
-                pdf["path"], pdf["modality"], pdf["content"]
-            ):
-                b = bytes(content)
-                try:
-                    modality, vals, dims = decode_media(b)
-                    n = len(vals)
-                    s = int(vals.sum())
-                    s2 = int((vals * vals).sum())
-                except (ValueError, NotImplementedError, struct.error, IndexError):
-                    # one undecodable object must not kill a corpus-wide
-                    # job; the row survives, attributably marked.
-                    modality, n, s, s2, dims = in_modality, 0, 0, 0, "undecodable"
-                rows["path"].append(path)
-                rows["modality"].append(modality)
-                rows["n_bytes"].append(len(b))
-                rows["n_units"].append(n)
-                rows["dims"].append(dims)
-                rows["mean_val"].append(s / n if n else 0.0)
-                rows["rms"].append(float(np.sqrt(s2 / n)) if n else 0.0)
-            yield pd.DataFrame(rows)
+    def _features(path, in_modality, content):
+        modality, vals, dims = decode_media(content)
+        n = len(vals)
+        s, s2 = int(vals.sum()), int((vals * vals).sum())
+        mean = s / n if n else 0.0
+        rms = float(np.sqrt(s2 / n)) if n else 0.0
+        return path, modality, len(content), n, dims, mean, rms
 
-    return media.mapInPandas(op, DECODED_FEATURES_SCHEMA)
+    def _undecodable(path, modality, content):
+        return path, modality, len(content), 0, "undecodable", 0.0, 0.0
+
+    return map_rows(
+        media, _features, DECODED_FEATURES_SCHEMA,
+        ["path", "modality", "content"], on_error=_undecodable,
+    )
 
 
 def _fake_features(content: bytes, dim: int = 8) -> list[float]:
@@ -601,14 +658,15 @@ def resize_ppm(b: bytes, target_px: int) -> bytes:
 
 
 def resize_media(media: DataFrame, target_px: int = 256) -> DataFrame:
-    """Resize/transcode pass over a media column via mapInPandas.
+    """Resize/transcode pass over a media column via :func:`map_rows`.
     PPM, RGB PNG, baseline JPEG, GIF, and BMP images resize for REAL
     (decode → nearest-neighbor downsample → re-encode in the SAME
     format, r7); remaining formats fall back to a deterministic
     byte-decimation stand-in (MP3/MP4 need soundfile/av, absent in
     this image). The Spark-side contract — binary in / smaller binary
     out per Arrow batch, metadata struct rewritten — is identical on
-    both paths."""
+    both paths. Each format's decode error (:data:`DECODE_ERRORS`)
+    falls through to the next path, so no object kills the task."""
 
     def _shrink(pixels: np.ndarray, w: int, h: int) -> np.ndarray | None:
         """Nearest-neighbor downsample to ≤ target_px on the long
@@ -626,7 +684,7 @@ def resize_media(media: DataFrame, target_px: int = 256) -> DataFrame:
         if b[:2] == b"P6":
             try:
                 return resize_ppm(b, target_px)
-            except (ValueError, IndexError):
+            except DECODE_ERRORS:
                 pass  # malformed P6 → fall through, don't kill the job
         if b[:8] == _PNG_SIG:
             try:
@@ -634,8 +692,7 @@ def resize_media(media: DataFrame, target_px: int = 256) -> DataFrame:
                 if pixels.shape[2] == 3:  # RGB re-encodes natively
                     small = _shrink(pixels, w, h)
                     return b if small is None else encode_png(small)
-            except (ValueError, NotImplementedError, zlib.error,
-                    struct.error, IndexError):
+            except DECODE_ERRORS:
                 pass  # unsupported/malformed PNG → stand-in path
         if b[:2] == b"\xff\xd8":
             try:
@@ -647,7 +704,7 @@ def resize_media(media: DataFrame, target_px: int = 256) -> DataFrame:
                 pixels, w, h = decode_jpeg(b)
                 small = _shrink(pixels, w, h)
                 return b if small is None else encode_jpeg(small, quality=85)
-            except (ValueError, NotImplementedError, struct.error, IndexError):
+            except DECODE_ERRORS:
                 pass  # corrupt JPEG → stand-in path
         if b[:6] in (b"GIF87a", b"GIF89a"):
             try:
@@ -660,14 +717,14 @@ def resize_media(media: DataFrame, target_px: int = 256) -> DataFrame:
                 small = _shrink(pixels, w, h)
                 # a pixel subset of a palette image stays ≤256 colors
                 return b if small is None else encode_gif(small)
-            except (ValueError, IndexError):
+            except DECODE_ERRORS:
                 pass
         if b[:2] == b"BM":
             try:
                 pixels, w, h = decode_bmp(b)
                 small = _shrink(pixels, w, h)
                 return b if small is None else encode_bmp(small)
-            except (ValueError, NotImplementedError, struct.error, IndexError):
+            except DECODE_ERRORS:
                 pass
         if b[:4] in (b"II*\x00", b"MM\x00*"):
             try:
@@ -679,38 +736,26 @@ def resize_media(media: DataFrame, target_px: int = 256) -> DataFrame:
                 pixels, w, h = decode_tiff(b)
                 small = _shrink(pixels, w, h)
                 return b if small is None else encode_tiff(small)
-            except (ValueError, NotImplementedError, struct.error, IndexError):
+            except DECODE_ERRORS:
                 pass
         # deterministic stand-in for codec-backed formats: a resize
         # produces smaller content derived from the original.
         return bytes(b[::2])
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = pdf["content"].map(lambda b: _resize_one(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "modality": pdf["modality"],
-                    "content": resized,
-                    "meta": [
-                        {
-                            "length": len(rb),
-                            "mime": m["mime"],
-                            "target_px": target_px,
-                        }
-                        for rb, m in zip(resized, pdf["meta"])
-                    ],
-                }
-            )
+    def _row(path, modality, content, meta):
+        small = _resize_one(content)
+        return path, modality, small, (len(small), meta["mime"], target_px)
 
-    return media.mapInPandas(op, RESIZED_SCHEMA)
+    return map_rows(
+        media, _row, RESIZED_SCHEMA, ["path", "modality", "content", "meta"]
+    )
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Frame sampling for video/audio: one media row fans out to
-    ``n_frames`` rows via mapInPandas (batch iterator in, exploded
-    batch out — the one-to-many UDF shape). Two REAL paths (r7):
+    ``n_frames`` rows — :func:`map_rows` returns one ``array<struct>``
+    of frames per object and ``F.inline`` expands it (the one-to-many
+    shape). Two REAL paths (r7):
     WAV audio splits the PCM stream into ``n_frames`` equal windows,
     each re-encoded as a standalone WAV clip; ANIMATED GIF decodes
     and composites its frame sequence (``gif.decode_gif_frames``) and
@@ -721,9 +766,9 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     (``extract_mp4_samples``) — the compressed sample payloads a
     downstream decoder consumes; decoding them stays the library
     boundary. Files whose structure cannot be resolved (no moov, a
-    census-only fixture without stco, a malformed table) fall back to
-    fixed-stride byte chunks; the fan-out schema and batching are
-    identical on every path."""
+    census-only fixture without stco, a malformed table — any of
+    :data:`DECODE_ERRORS`) fall back to fixed-stride byte chunks; the
+    fan-out schema and batching are identical on every path."""
 
     def _frames_of(b: bytes) -> list[bytes]:
         # the LAST frame always extends to the end so the frames cover
@@ -741,7 +786,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
                         _bounds(len(samples), i) for i in range(n_frames)
                     )
                 ]
-            except (ValueError, NotImplementedError, struct.error):
+            except DECODE_ERRORS:
                 pass  # malformed WAV → byte chunks
         if b[:6] in (b"GIF87a", b"GIF89a"):
             try:
@@ -758,7 +803,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
                     for i in range(take)
                 ]
                 return [encode_gif(frames[p]) for p in picks]
-            except (ValueError, IndexError):
+            except DECODE_ERRORS:
                 pass  # malformed GIF → byte chunks
         if len(b) >= 8 and b[4:8] == b"ftyp":
             try:
@@ -768,47 +813,36 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
                     (i * (n - 1)) // max(take - 1, 1) for i in range(take)
                 ]
                 return extract_mp4_samples(b, track=1, indices=picks)
-            except (ValueError, IndexError, struct.error):
+            except DECODE_ERRORS:
                 pass  # unresolvable structure → byte chunks
         return [
             b[lo:hi] for lo, hi in (_bounds(len(b), i) for i in range(n_frames))
         ]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"path": [], "frame_no": [], "frame": [], "n_bytes": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for i, frame in enumerate(_frames_of(bytes(content))):
-                    rows["path"].append(path)
-                    rows["frame_no"].append(i)
-                    rows["frame"].append(frame)
-                    rows["n_bytes"].append(len(frame))
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        return path, [(i, f, len(f)) for i, f in enumerate(_frames_of(content))]
 
-    return media.mapInPandas(op, FRAMES_SCHEMA)
+    # one row per object: path + the FRAMES_SCHEMA frame fields as an array
+    frame = T.StructType(FRAMES_SCHEMA.fields[1:])
+    per_object = T.StructType(
+        [FRAMES_SCHEMA["path"], T.StructField("frames", T.ArrayType(frame))]
+    )
+    frames = map_rows(media, _row, per_object, ["path", "content"])
+    return frames.select("path", F.inline("frames"))
 
 
 def featurize_media(media: DataFrame) -> DataFrame:
-    """Feature-extract every media row via mapInPandas: Arrow batches
-    in, Arrow batches out — a pure narrow map, no pre-shuffle (the
-    digest featurizer is modality-agnostic)."""
+    """Feature-extract every media row via :func:`map_rows`: Arrow
+    batches in, Arrow batches out — a pure narrow map, no pre-shuffle
+    (the digest featurizer is modality-agnostic and never fails)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = pdf["content"]
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "modality": pdf["modality"],
-                    "n_bytes": content.map(len).astype("int64"),
-                    "content_sha256": content.map(
-                        lambda b: hashlib.sha256(bytes(b)).hexdigest()
-                    ),
-                    "feature": content.map(lambda b: _fake_features(bytes(b))),
-                }
-            )
+    def _row(path, modality, content):
+        digest = hashlib.sha256(content).hexdigest()
+        return path, modality, len(content), digest, _fake_features(content)
 
-    return media.mapInPandas(op, MEDIA_FEATURES_SCHEMA)
+    return map_rows(
+        media, _row, MEDIA_FEATURES_SCHEMA, ["path", "modality", "content"]
+    )
 
 
 def dhash_bits(pixels: np.ndarray) -> tuple[int, int]:
@@ -838,7 +872,7 @@ def dhash_bits(pixels: np.ndarray) -> tuple[int, int]:
 
 def dhash_media(media: DataFrame) -> DataFrame:
     """(path, modality, dh_hi, dh_lo): perceptual dHash per media row
-    via Arrow-batched ``mapInPandas`` over the real decoders (PNG and
+    via :func:`map_rows` over the real decoders (PNG and
     PPM by signature). Narrow map, no shuffle — hashing 100 TB of
     thumbnails is embarrassingly parallel; the 64-bit outputs then
     feed the SAME pigeonhole-blocked Hamming join machinery as the
@@ -846,42 +880,21 @@ def dhash_media(media: DataFrame) -> DataFrame:
     index serves text and images. Undecodable rows yield NULL halves
     (malformed media must not kill the job — resize_media contract)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            his, los = [], []
-            for b in pdf["content"]:
-                raw = bytes(b)
-                try:
-                    if raw[:8] == _PNG_SIG:
-                        px, _w, _h = decode_png(raw)
-                    elif raw[:2] == b"P6":
-                        px, _w, _h = decode_ppm(raw)
-                    else:
-                        raise ValueError("not a decodable image")
-                    hi, lo = dhash_bits(px)
-                except (ValueError, NotImplementedError, zlib.error,
-                        struct.error, IndexError):
-                    hi = lo = None
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "modality": pdf["modality"],
-                    "dh_hi": pd.array(his, dtype="Int64"),
-                    "dh_lo": pd.array(los, dtype="Int64"),
-                }
-            )
+    def _row(path, modality, content):
+        if content[:8] == _PNG_SIG:
+            px = decode_png(content)[0]
+        elif content[:2] == b"P6":
+            px = decode_ppm(content)[0]
+        else:
+            raise ValueError("not a decodable image")
+        return (path, modality, *dhash_bits(px))
 
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modality", T.StringType()),
-            T.StructField("dh_hi", T.LongType()),
-            T.StructField("dh_lo", T.LongType()),
-        ]
+    return map_rows(
+        media, _row,
+        "path string, modality string, dh_hi bigint, dh_lo bigint",
+        ["path", "modality", "content"],
+        on_error=lambda path, modality, content: (path, modality, None, None),
     )
-    return media.mapInPandas(op, schema)
 
 
 # --------------------------------------------------------------------------
@@ -985,35 +998,19 @@ IMAGE_METADATA_SCHEMA = T.StructType(
 
 def image_metadata_media(media: DataFrame) -> DataFrame:
     """(path, format, width, height, channels) per media row via
-    Arrow-batched ``mapInPandas`` over :func:`probe_image_dimensions`.
+    :func:`map_rows` over :func:`probe_image_dimensions`.
     Narrow map, bytes-in/5-scalars-out — the resolution census that
     feeds size-bucketed partitioning and data cards at any corpus
     size. Unrecognized/malformed rows yield NULL metadata (a corrupt
     object must not kill a 100 TB census — the dhash_media contract)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, cs = [], [], [], []
-            for b in pdf["content"]:
-                try:
-                    fmt, w, h, ch = probe_image_dimensions(bytes(b))
-                except (ValueError, struct.error, IndexError):
-                    fmt = w = h = ch = None
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-                cs.append(ch)
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int64"),
-                    "height": pd.array(hs, dtype="Int64"),
-                    "channels": pd.array(cs, dtype="Int64"),
-                }
-            )
-
-    return media.mapInPandas(op, IMAGE_METADATA_SCHEMA)
+    return map_rows(
+        media,
+        lambda path, content: (path, *probe_image_dimensions(content)),
+        IMAGE_METADATA_SCHEMA,
+        ["path", "content"],
+        on_error=lambda path, content: (path, None, None, None, None),
+    )
 
 
 ANIMATION_CENSUS_SCHEMA = T.StructType(
@@ -1030,36 +1027,25 @@ def animation_census_media(media: DataFrame) -> DataFrame:
     """Frame census over ANIMATED media (r7): decode + composite every
     GIF frame (``gif.decode_gif_frames`` — offsets, transparency,
     disposal methods) and reduce to (frame count, total decoded
-    values, mean value) per object. Arrow-batched narrow map, sums in
-    int64 so the one double division is bit-reproducible across
-    engines. Non-GIF and malformed rows survive as (0, 0, 0.0) — a
-    corrupt clip must not kill a corpus-wide census."""
+    values, mean value) per object. A :func:`map_rows` narrow map,
+    sums in int64 so the one double division is bit-reproducible
+    across engines. Non-GIF and malformed rows survive as (0, 0, 0.0)
+    — a corrupt clip must not kill a corpus-wide census."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _row(path, content):
+        if content[:6] not in (b"GIF87a", b"GIF89a"):
+            return path, 0, 0, 0.0
         from portfolio1_etl_spark.operators.gif import decode_gif_frames
 
-        for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in ANIMATION_CENSUS_SCHEMA}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                n_frames = n_units = 0
-                mean = 0.0
-                if b[:6] in (b"GIF87a", b"GIF89a"):
-                    try:
-                        frames, _, _ = decode_gif_frames(b)
-                        n_frames = int(frames.shape[0])
-                        n_units = int(frames.size)
-                        mean = int(frames.astype(np.int64).sum()) / n_units
-                    except (ValueError, IndexError):
-                        n_frames = n_units = 0
-                        mean = 0.0
-                rows["path"].append(path)
-                rows["n_frames"].append(n_frames)
-                rows["n_units"].append(n_units)
-                rows["mean_val"].append(mean)
-            yield pd.DataFrame(rows)
+        frames = decode_gif_frames(content)[0]
+        n_units = int(frames.size)
+        mean = int(frames.astype(np.int64).sum()) / n_units
+        return path, int(frames.shape[0]), n_units, mean
 
-    return media.mapInPandas(op, ANIMATION_CENSUS_SCHEMA)
+    return map_rows(
+        media, _row, ANIMATION_CENSUS_SCHEMA, ["path", "content"],
+        on_error=lambda path, content: (path, 0, 0, 0.0),
+    )
 
 
 def transcode_media(media: DataFrame, target: str = "png") -> DataFrame:
@@ -1071,8 +1057,14 @@ def transcode_media(media: DataFrame, target: str = "png") -> DataFrame:
     decode the corpus will ever pay), so a census over the transcoded
     corpus hashes identically to one over the originals (q146 vs
     q142). Audio/video and undecodable objects pass through
-    unchanged (survival, not task death). Arrow-batched narrow map;
-    metadata struct rewritten to the new byte length and mime."""
+    unchanged (survival, not task death) — the ENCODE step counts
+    too: an image that decodes but cannot re-encode in the target
+    (e.g. gray+alpha → BMP) passes through. A :func:`map_rows` narrow
+    map; metadata struct rewritten to the new byte length and mime.
+    The transcode FLAG, not a byte compare, decides the mime (a
+    deterministic re-encode can be byte-identical); genuine
+    pass-throughs keep the input's (``application/octet-stream`` when
+    the input carries no ``meta`` column)."""
     if target not in ("png", "bmp"):
         raise ValueError("target must be 'png' or 'bmp'")
     mime = {"png": "image/png", "bmp": "image/bmp"}[target]
@@ -1100,59 +1092,30 @@ def transcode_media(media: DataFrame, target: str = "png") -> DataFrame:
             return px[:, :, None] if px.ndim == 2 else px
         return None
 
-    def _one(b: bytes) -> tuple[bytes, bool]:
-        """(content, transcoded?) — the ENCODE step sits inside the
-        try too: an image that decodes but cannot re-encode in the
-        target (e.g. gray+alpha → BMP) must pass through, not kill
-        the task (the survival contract)."""
-        try:
-            px = _decode_image(b)
-            if px is None:
-                return b, False  # not an image (audio/video/unknown)
-            if target == "png":
-                return encode_png(px), True
+    has_meta = "meta" in media.columns
+
+    def _keep(path, modality, content, meta=None):
+        in_mime = meta["mime"] if has_meta else "application/octet-stream"
+        return path, modality, content, (len(content), in_mime)
+
+    def _row(path, modality, content, meta=None):
+        px = _decode_image(content)
+        if px is None:  # not an image (audio/video/unknown)
+            return _keep(path, modality, content, meta)
+        if target == "png":
+            out = encode_png(px)
+        else:
             if px.shape[2] == 1:
                 px = np.repeat(px, 3, axis=2)
             elif px.shape[2] == 2:  # gray+alpha: replicate luma
                 px = np.repeat(px[:, :, :1], 3, axis=2)
             elif px.shape[2] == 4:
                 px = px[:, :, :3]
-            return encode_bmp(np.ascontiguousarray(px)), True
-        except (ValueError, NotImplementedError, zlib.error,
-                struct.error, IndexError):
-            return b, False  # undecodable → pass through, attributable
+            out = encode_bmp(np.ascontiguousarray(px))
+        return path, modality, out, (len(out), mime)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        has_meta = None
-        for pdf in batches:
-            if has_meta is None:
-                has_meta = "meta" in pdf.columns
-            results = [_one(bytes(b)) for b in pdf["content"]]
-            in_mimes = (
-                [m["mime"] for m in pdf["meta"]]
-                if has_meta
-                else ["application/octet-stream"] * len(results)
-            )
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "modality": pdf["modality"],
-                    "content": [c for c, _ in results],
-                    "meta": [
-                        {
-                            "length": len(c),
-                            # the transcode FLAG (not a byte compare —
-                            # a deterministic re-encode can be byte-
-                            # identical) decides the mime; genuine
-                            # pass-throughs keep the input's
-                            "mime": mime if did else im,
-                        }
-                        for (c, did), im in zip(results, in_mimes)
-                    ],
-                }
-            )
-
-    return media.mapInPandas(op, MEDIA_SCHEMA)
+    cols = ["path", "modality", "content"] + (["meta"] if has_meta else [])
+    return map_rows(media, _row, MEDIA_SCHEMA, cols, on_error=_keep)
 
 
 def probe_mp4_metadata(content: bytes) -> tuple[int, int, int, int]:

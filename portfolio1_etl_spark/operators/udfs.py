@@ -11,7 +11,8 @@ needs a real Python library or stateful per-group computation:
 - ``scalar pandas_udf``  — batch-vectorized column function
 - ``grouped-agg pandas_udf`` (UDAF) — Series in, scalar out per group
 - ``applyInPandas``      — grouped-map (whole group in, whole group out)
-- ``mapInPandas``        — per-partition batch stream (see multimodal)
+- ``mapInArrow``         — per-partition batch stream (see
+  ``multimodal.map_rows``)
 - ``applyInPandasWithState`` — streaming state (see streaming.jobs)
 
 Each demo here has a built-in twin; tests assert equality so the UDF

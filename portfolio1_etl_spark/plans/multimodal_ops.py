@@ -1,6 +1,5 @@
-"""[ext] Multimodal-column query: the Arrow-batched ``mapInPandas``
-featurization path (operators/multimodal) driven end-to-end and
-oracle-checked.
+"""[ext] Multimodal-column queries: the Arrow-batched media passes of
+operators/multimodal driven end-to-end and oracle-checked.
 
 The driver testdata ships no media files, so the binary column is
 synthesized deterministically from ``documents.text`` (UTF-8 encode) —
@@ -9,25 +8,25 @@ its digest features are pure functions of the bytes, and DuckDB can
 recompute them in SQL (sha256 + hex arithmetic). The float32 snap of
 each feature is reproduced with an explicit FLOAT round-trip cast.
 
-This is the one *Python* data-path operator in the engine, and it
-still gets the full differential gate — batch boundaries, Arrow
-conversion, and the UDF body are all under test.
+Every synthesizer and census here is a per-row function run through
+``operators.multimodal.map_rows`` — the engine's one Python data-path
+boundary — so it still gets the full differential gate: batch
+boundaries, Arrow conversion, and the row bodies are all under test.
+The survival rule is the helper's: a row whose codec or probe raises
+one of ``DECODE_ERRORS`` becomes the query's marked fallback row
+(``undecodable`` / ``corrupt`` / NULLs); any other exception fails
+the task.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import struct
-
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-
 from portfolio1_etl_spark import catalog
 from portfolio1_etl_spark.operators.multimodal import (
+    DECODE_ERRORS,
     MEDIA_SCHEMA,
     decode_media_features,
     dhash_media,
@@ -35,6 +34,7 @@ from portfolio1_etl_spark.operators.multimodal import (
     encode_ppm,
     encode_wav,
     featurize_media,
+    map_rows,
 )
 from portfolio1_etl_spark.plans.registry import query
 
@@ -65,7 +65,7 @@ def _feature_sql(i: int) -> str:
 def q90_multimodal_featurize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column featurization through the real multimodal
     plumbing: typed media rows (path/modality/content/meta) →
-    ``mapInPandas`` digest features (a narrow map — no pre-shuffle) →
+    ``map_rows`` digest features (a narrow map — no pre-shuffle) →
     typed feature rows. Python sees Arrow batches only; the oracle
     recomputes every output from the same bytes in SQL."""
     docs = catalog.load(spark, sf_dir, "documents")
@@ -112,46 +112,54 @@ def _spread_ids(docs):
 
     Applied SELECTIVELY by measurement (r13 A/B at sf0.1): kept where
     full pixel/sample decode dominates (PNG, dHash thumbs, JPEG
-    lossy/transcode, GIF animation, TIFF unpack, ADPCM, MP3 frame
-    walks, MP4 payload extraction — 1.4-3.2× faster); REVERTED to the
-    raw scan for light header-walk censuses (q91 PPM/WAV features,
+    lossy/transcode, GIF animation, TIFF unpack, MP4 payload
+    extraction — 1.4-3.2× faster); REVERTED to the raw scan for light
+    header-walk censuses (q91 PPM/WAV features,
     q137/q149/q162/q164/q241/q264/q278 metadata/sample walks, mu-law
     table lookups) where the extra exchange + per-partition Python
     dispatch exceeded the decode work (measured up to 4.9× slower
-    spread)."""
+    spread). The r14 interleaved A/B moved ADPCM (q144) and the MP3
+    frame walks (q152/q194) back to the raw scan too: there the
+    spread was a consistent 12-14% LOSS (nibble tables and frame
+    walks are too light to amortize the exchange at fixture scale;
+    at production scale spread_rows self-skips anyway)."""
     from portfolio1_etl_spark.parallelism import spread_rows
 
     return spread_rows(docs.select("doc_id"))
 
 
+def _blobs(ids, modality, one):
+    """doc_id → ``(path, modality, content)`` rows, ``content =
+    one(doc_id)``: the shared shape of the synthesizers below. ``ids``
+    is the raw documents scan or ``_spread_ids(docs)`` — each caller
+    keeps its measured choice."""
+    return map_rows(
+        ids,
+        lambda d: (str(d), modality, one(d)),
+        "path string, modality string, content binary",
+        ["doc_id"],
+    )
+
 
 def _synthesize_media(docs):
-    """doc_id → real media bytes (PPM P6 / WAV PCM16) via mapInPandas.
-    The pixel/sample generators are pure integer functions of
-    (doc_id, index), mirroring the oracle's generate_series twin."""
+    """doc_id → real media bytes (PPM P6 / WAV PCM16). The pixel/sample
+    generators are pure integer functions of (doc_id, index),
+    mirroring the oracle's generate_series twin."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"path": [], "modality": [], "content": [], "meta": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    i = np.arange(_IMG_N, dtype=np.int64)
-                    px = ((d * 7 + i * 13) % 256).astype(np.uint8)
-                    content = encode_ppm(px.reshape(8, 8, 3))
-                    modality, mime = "image", "image/x-portable-pixmap"
-                else:
-                    i = np.arange(_AUD_N, dtype=np.int64)
-                    smp = (((d * 31 + i * 17) % 65536) - 32768).astype(np.int16)
-                    content = encode_wav(smp, sample_rate=8000)
-                    modality, mime = "audio", "audio/wav"
-                rows["path"].append(str(d))
-                rows["modality"].append(modality)
-                rows["content"].append(content)
-                rows["meta"].append({"length": len(content), "mime": mime})
-            yield pd.DataFrame(rows)
+    def _row(d):
+        if d % 2 == 0:
+            i = np.arange(_IMG_N, dtype=np.int64)
+            px = ((d * 7 + i * 13) % 256).astype(np.uint8)
+            content = encode_ppm(px.reshape(8, 8, 3))
+            modality, mime = "image", "image/x-portable-pixmap"
+        else:
+            i = np.arange(_AUD_N, dtype=np.int64)
+            smp = (((d * 31 + i * 17) % 65536) - 32768).astype(np.int16)
+            content = encode_wav(smp, sample_rate=8000)
+            modality, mime = "audio", "audio/wav"
+        return str(d), modality, content, (len(content), mime)
 
-    return docs.select("doc_id").mapInPandas(op, MEDIA_SCHEMA)
+    return map_rows(docs, _row, MEDIA_SCHEMA, ["doc_id"])
 
 
 @query(
@@ -193,7 +201,7 @@ def q91_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     image or WAV (PCM16) file per document, then parse it back with the
     dependency-free codecs (header walk + numpy frombuffer) and reduce
     the decoded pixels/samples to features (count, dims, mean, RMS) —
-    all inside Arrow-batched ``mapInPandas``. The oracle recomputes
+    all inside Arrow-batched ``map_rows``. The oracle recomputes
     every feature analytically from the integer generators, so a
     single wrong header byte, stride, or endianness flip fails the
     hash gate. Compressed formats (JPEG/MP3) remain a documented
@@ -221,25 +229,15 @@ _PNG_N = 8 * 8 * 3
 
 
 def _synthesize_png(docs):
-    """doc_id → real zlib-compressed PNG bytes via mapInPandas."""
+    """doc_id → real zlib-compressed PNG bytes."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"path": [], "modality": [], "content": [], "meta": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                i = np.arange(_PNG_N, dtype=np.int64)
-                px = ((d * 11 + i * 19) % 256).astype(np.uint8)
-                content = encode_png(
-                    px.reshape(8, 8, 3), filters=[0, 1, 2, 3, 4]
-                )
-                rows["path"].append(str(d))
-                rows["modality"].append("image")
-                rows["content"].append(content)
-                rows["meta"].append({"length": len(content), "mime": "image/png"})
-            yield pd.DataFrame(rows)
+    def _row(d):
+        i = np.arange(_PNG_N, dtype=np.int64)
+        px = ((d * 11 + i * 19) % 256).astype(np.uint8)
+        content = encode_png(px.reshape(8, 8, 3), filters=[0, 1, 2, 3, 4])
+        return str(d), "image", content, (len(content), "image/png")
 
-    return _spread_ids(docs).mapInPandas(op, MEDIA_SCHEMA)
+    return map_rows(_spread_ids(docs), _row, MEDIA_SCHEMA, ["doc_id"])
 
 
 @query(
@@ -268,7 +266,7 @@ def q102_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     zlib-compressed PNG is synthesized per document (rows cycle
     through all five PNG filter types), then parsed back by
     ``decode_png`` (chunk walk + CRC check + inflate + unfilter)
-    inside Arrow-batched ``mapInPandas``, and the decoded pixels
+    inside Arrow-batched ``map_rows``, and the decoded pixels
     reduce to analytic features. The oracle recomputes mean/RMS from
     the integer pixel generator — any inflate, unfilter, or stride bug
     fails the hash gate. (Byte length is NOT part of the contract:
@@ -301,26 +299,18 @@ _DH_N = _DH_W * _DH_H * 3
 
 def _synthesize_thumbs(docs):
     """doc_id → real 9×8 RGB PNG thumbnail (filters cycle all 5 types,
-    as q102) via mapInPandas."""
+    as q102)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"path": [], "modality": [], "content": [], "meta": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                i = np.arange(_DH_N, dtype=np.int64)
-                bump = np.where(i // 3 == 7 + (d % 4) * 17, 60, 0)
-                px = (((d // 4) * 23 + i * 19 + bump) % 256).astype(np.uint8)
-                content = encode_png(
-                    px.reshape(_DH_H, _DH_W, 3), filters=[0, 1, 2, 3, 4]
-                )
-                rows["path"].append(str(d))
-                rows["modality"].append("image")
-                rows["content"].append(content)
-                rows["meta"].append({"length": len(content), "mime": "image/png"})
-            yield pd.DataFrame(rows)
+    def _row(d):
+        i = np.arange(_DH_N, dtype=np.int64)
+        bump = np.where(i // 3 == 7 + (d % 4) * 17, 60, 0)
+        px = (((d // 4) * 23 + i * 19 + bump) % 256).astype(np.uint8)
+        content = encode_png(
+            px.reshape(_DH_H, _DH_W, 3), filters=[0, 1, 2, 3, 4]
+        )
+        return str(d), "image", content, (len(content), "image/png")
 
-    return _spread_ids(docs).mapInPandas(op, MEDIA_SCHEMA)
+    return map_rows(_spread_ids(docs), _row, MEDIA_SCHEMA, ["doc_id"])
 
 
 #: DuckDB replay of the dHash: integer grayscale per pixel from the
@@ -366,7 +356,7 @@ def q111_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image hash census: real 9×8 PNG thumbnails (all five
     filter types on the decode path, as q102) → ``decode_png`` →
     integer grayscale → 64-bit dHash as two 32-bit halves, all inside
-    one Arrow-batched mapInPandas — a narrow map; hashing never
+    one Arrow-batched ``map_rows`` — a narrow map; hashing never
     shuffles. The oracle rebuilds every bit from the pixel generator,
     so the whole decode→grayscale→compare→pack chain is value-exact.
     Unlike content digests (q90), dHash is PERCEPTUAL: global
@@ -560,19 +550,7 @@ def _synthesize_mixed_media(docs):
             + bytes(6)
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "image",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "image", _one)
 
 
 @query(
@@ -676,19 +654,7 @@ def _synthesize_lossy_media(docs):
         return _enc_bmp(px, top_down=bool(doc_id % 2),
                         bpp=24 if doc_id % 4 < 2 else 32)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "image",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _spread_ids(docs).mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(_spread_ids(docs), "image", _one)
 
 
 @query(
@@ -784,19 +750,7 @@ def _synthesize_mulaw_media(docs):
         codes = ((doc_id * 7 + np.arange(n) * 13) % 256).astype(np.uint8)
         return encode_wav_mulaw_raw(codes, rate)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 #: closed-form G.711 mu-law decode of code byte ``c`` as SQL (the
@@ -863,23 +817,7 @@ def _synthesize_adpcm_media(docs):
         nib = ((doc_id + np.arange(n_nib) * 5) % 16).astype(np.uint8)
         return encode_wav_adpcm(nib, pred0, index0, 8000)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    # r14 interleaved A/B: the spread is a consistent 12-14% LOSS here
-    # (header/frame walks and nibble tables are too light to amortize
-    # the exchange + per-partition Python dispatch at fixture scale;
-    # at production scale spread_rows self-skips anyway) - raw scan.
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 def _adpcm_oracle_sql() -> str:
@@ -995,19 +933,7 @@ def _synthesize_animations(docs):
             return enc[: len(enc) * 2 // 3]  # truncated mid-stream
         return enc
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "video",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _spread_ids(docs).mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(_spread_ids(docs), "video", _one)
 
 
 @query(
@@ -1146,19 +1072,7 @@ def _synthesize_exif_tiff_media(docs):
         jpg = _enc_jpeg(np.full((h, w), v, dtype=np.uint8), quality=75)
         return _with_exif(jpg, 1 + doc_id % 8, big_endian=bool(doc_id % 4 == 1))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "image",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _spread_ids(docs).mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(_spread_ids(docs), "image", _one)
 
 
 _UPRIGHT_SCHEMA = (
@@ -1171,44 +1085,31 @@ def _upright_census(media):
     census the result — the orientation-normalization pass a training
     pipeline runs before any visual model sees a pixel."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from portfolio1_etl_spark.operators.jpeg import decode_jpeg
-        from portfolio1_etl_spark.operators.tiff import (
-            decode_tiff,
-            exif_orientation,
-            orient_pixels,
-        )
+    from portfolio1_etl_spark.operators.jpeg import decode_jpeg
+    from portfolio1_etl_spark.operators.tiff import (
+        decode_tiff,
+        exif_orientation,
+        orient_pixels,
+    )
 
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "orientation": [], "dims": [],
-                "n_units": [], "mean_val": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                try:
-                    o = exif_orientation(b)
-                    if b[:2] == b"\xff\xd8":
-                        px = decode_jpeg(b)[0]
-                    elif b[:4] in (b"II*\x00", b"MM\x00*"):
-                        px = decode_tiff(b)[0]
-                    else:
-                        raise ValueError("unexpected format in census")
-                    px = orient_pixels(px, o)
-                    h2, w2 = px.shape[:2]
-                    n = int(px.size)
-                    mean = int(px.astype(np.int64).sum()) / n
-                    dims = f"{w2}x{h2}"
-                except (ValueError, NotImplementedError, IndexError):
-                    o, dims, n, mean = 0, "undecodable", 0, 0.0
-                rows["doc_id"].append(int(path))
-                rows["orientation"].append(o)
-                rows["dims"].append(dims)
-                rows["n_units"].append(n)
-                rows["mean_val"].append(mean)
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        o = exif_orientation(content)
+        if content[:2] == b"\xff\xd8":
+            px = decode_jpeg(content)[0]
+        elif content[:4] in (b"II*\x00", b"MM\x00*"):
+            px = decode_tiff(content)[0]
+        else:
+            raise ValueError("unexpected format in census")
+        px = orient_pixels(px, o)
+        h2, w2 = px.shape[:2]
+        n = int(px.size)
+        mean = int(px.astype(np.int64).sum()) / n
+        return int(path), o, f"{w2}x{h2}", n, mean
 
-    return media.mapInPandas(op, _UPRIGHT_SCHEMA)
+    return map_rows(
+        media, _row, _UPRIGHT_SCHEMA, ["path", "content"],
+        on_error=lambda path, content: (int(path), 0, "undecodable", 0, 0.0),
+    )
 
 
 @query(
@@ -1278,19 +1179,7 @@ def _synthesize_mp4_media(docs):
             n_tracks=1 + doc_id % 3,
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "video",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "video", _one)
 
 
 @query(
@@ -1322,27 +1211,12 @@ def q149_video_metadata_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _synthesize_mp4_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "duration_ms": [], "width": [],
-                "height": [], "n_tracks": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    dur, w, h, nt = probe_mp4_metadata(bytes(content))
-                except (ValueError, IndexError, struct.error):
-                    dur = w = h = nt = None
-                rows["doc_id"].append(int(path))
-                rows["duration_ms"].append(dur)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_tracks"].append(nt)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media,
+        lambda path, content: (int(path), *probe_mp4_metadata(content)),
         "doc_id long, duration_ms long, width long, height long, n_tracks long",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), None, None, None, None),
     )
 
 
@@ -1377,23 +1251,7 @@ def _synthesize_mp3_media(docs):
             id3v1=doc_id % 7 == 0,
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    # r14 interleaved A/B: the spread is a consistent 12-14% LOSS here
-    # (header/frame walks and nibble tables are too light to amortize
-    # the exchange + per-partition Python dispatch at fixture scale;
-    # at production scale spread_rows self-skips anyway) - raw scan.
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 @query(
@@ -1443,30 +1301,13 @@ def q152_audio_bitrate_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _synthesize_mp3_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "bitrate_kbps": [], "sample_rate": [],
-                "n_frames": [], "duration_ms": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    kbps, rate, nf, dur, _layer = probe_mp3_metadata(
-                        bytes(content)
-                    )
-                except (ValueError, IndexError, struct.error):
-                    kbps = rate = nf = dur = None
-                rows["doc_id"].append(int(path))
-                rows["bitrate_kbps"].append(kbps)
-                rows["sample_rate"].append(rate)
-                rows["n_frames"].append(nf)
-                rows["duration_ms"].append(dur)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media,
+        lambda path, content: (int(path), *probe_mp3_metadata(content)[:4]),
         "doc_id long, bitrate_kbps long, sample_rate long, "
         "n_frames long, duration_ms long",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), None, None, None, None),
     )
 
 
@@ -1497,19 +1338,7 @@ def _synthesize_wav_media(docs):
         block = np.concatenate([np.zeros(L, dtype=np.int64), tone])
         return encode_wav(np.tile(block, n).astype(np.int16))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 @query(
@@ -1546,49 +1375,31 @@ def q162_wav_silence_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact small integers, so mean = the same rational both ways,
     and sqrt is correctly rounded in every IEEE engine — the oracle's
     closed forms are bit-identical before the defensive 4 dp round."""
-    import numpy as np
-
     from portfolio1_etl_spark.operators.multimodal import decode_wav
 
     media = _synthesize_wav_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "n_samples": [], "rms": [],
-                "silence_ratio": [], "longest_silence_run": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    x, _rate = decode_wav(bytes(content))
-                    xi = x.astype(np.int64)
-                    n = len(xi)
-                    if n == 0:
-                        raise ValueError("empty waveform")
-                    rms = round(float(np.sqrt(np.sum(xi * xi) / n)), 4)
-                    quiet = np.abs(xi) < 256
-                    ratio = round(float(np.sum(quiet) / n), 4)
-                    # longest run of quiet samples: diff over padded
-                    # transitions gives each run's length
-                    pad = np.concatenate(([False], quiet, [False]))
-                    edges = np.flatnonzero(pad[1:] != pad[:-1])
-                    run = int((edges[1::2] - edges[0::2]).max()) if len(edges) else 0
-                    vals = (n, rms, ratio, run)
-                except (ValueError, NotImplementedError, struct.error,
-                        IndexError):
-                    vals = (None, None, None, None)
-                rows["doc_id"].append(int(path))
-                for k, v in zip(
-                    ("n_samples", "rms", "silence_ratio",
-                     "longest_silence_run"), vals,
-                ):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        xi = decode_wav(content)[0].astype(np.int64)
+        n = len(xi)
+        if n == 0:
+            raise ValueError("empty waveform")
+        rms = round(float(np.sqrt(np.sum(xi * xi) / n)), 4)
+        quiet = np.abs(xi) < 256
+        ratio = round(float(np.sum(quiet) / n), 4)
+        # longest run of quiet samples: diff over padded transitions
+        # gives each run's length
+        pad = np.concatenate(([False], quiet, [False]))
+        edges = np.flatnonzero(pad[1:] != pad[:-1])
+        run = int((edges[1::2] - edges[0::2]).max()) if len(edges) else 0
+        return int(path), n, rms, ratio, run
 
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media, _row,
         "doc_id long, n_samples long, rms double, "
         "silence_ratio double, longest_silence_run long",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), None, None, None, None),
     )
 
 
@@ -1623,19 +1434,7 @@ def _synthesize_exif_media(docs):
             + b"\xff\xda" + bytes([doc_id % 251]) * 16
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "image",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "image", _one)
 
 
 @query(
@@ -1669,30 +1468,18 @@ def q164_exif_privacy_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _synthesize_exif_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "had_gps": [], "gps_after": [],
-                "orientation": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    clean, had_gps, _ori = scrub_exif(bytes(content))
-                    _clean2, gps_after, ori_after = scrub_exif(clean)
-                    # 0/1 longs, not booleans: nullable bools normalize
-                    # differently across the two engines' result paths
-                    vals = (int(had_gps), int(gps_after), ori_after)
-                except (ValueError, IndexError, struct.error):
-                    vals = (None, None, None)
-                rows["doc_id"].append(int(path))
-                rows["had_gps"].append(vals[0])
-                rows["gps_after"].append(vals[1])
-                rows["orientation"].append(vals[2])
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        clean, had_gps, _ori = scrub_exif(content)
+        _clean2, gps_after, ori_after = scrub_exif(clean)
+        # 0/1 longs, not booleans: nullable bools normalize differently
+        # across the two engines' result paths
+        return int(path), int(had_gps), int(gps_after), ori_after
 
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media, _row,
         "doc_id long, had_gps long, gps_after long, orientation long",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), None, None, None),
     )
 
 
@@ -1723,23 +1510,7 @@ def _synthesize_mp3_vbr_media(docs):
             id3v2_bytes=(13 + doc_id % 40) if doc_id % 5 == 0 else 0,
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    # r14 interleaved A/B: the spread is a consistent 12-14% LOSS here
-    # (header/frame walks and nibble tables are too light to amortize
-    # the exchange + per-partition Python dispatch at fixture scale;
-    # at production scale spread_rows self-skips anyway) - raw scan.
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 @query(
@@ -1802,7 +1573,7 @@ def q194_mp3_vbr_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the walk is the only correct accounting for header-less VBR.
     Framing-corrupt objects surface as 'corrupt'/NULL rows. Scale
     shape: synthesis and probe are one narrow Arrow-batched
-    mapInPandas chain over doc_id — embarrassingly parallel, no
+    ``map_rows`` chain over doc_id — embarrassingly parallel, no
     shuffle; payload decode stays the documented codec boundary."""
     from portfolio1_etl_spark.operators.audio import (
         probe_mp3_metadata,
@@ -1811,35 +1582,20 @@ def q194_mp3_vbr_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _synthesize_mp3_vbr_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "vbr_method": [], "declared_frames": [],
-                "declared_bytes": [], "walked_frames": [],
-                "duration_ms": [], "mean_kbps": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                try:
-                    kbps, _rate, walked, dur, _layer = probe_mp3_metadata(b)
-                    method, df_, db_ = probe_mp3_vbr_info(b)
-                except (ValueError, IndexError, struct.error):
-                    method, df_, db_ = "corrupt", None, None
-                    kbps = walked = dur = None
-                rows["doc_id"].append(int(path))
-                rows["vbr_method"].append(method)
-                rows["declared_frames"].append(df_)
-                rows["declared_bytes"].append(db_)
-                rows["walked_frames"].append(walked)
-                rows["duration_ms"].append(dur)
-                rows["mean_kbps"].append(kbps)
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        kbps, _rate, walked, dur, _layer = probe_mp3_metadata(content)
+        method, df_, db_ = probe_mp3_vbr_info(content)
+        return int(path), method, df_, db_, walked, dur, kbps
 
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media, _row,
         "doc_id long, vbr_method string, declared_frames long, "
         "declared_bytes long, walked_frames long, duration_ms long, "
         "mean_kbps long",
+        ["path", "content"],
+        on_error=lambda path, content: (
+            int(path), "corrupt", None, None, None, None, None
+        ),
     )
 
 
@@ -1887,19 +1643,7 @@ def _synthesize_mixed_audio_media(docs):
             blocks_per_frame=1 + doc_id % 2,
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 @query(
@@ -1955,7 +1699,7 @@ def q241_adts_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-block ADTS), sample rate, and the AAC profile/channel
     config from the fixed header. Framing-corrupt objects surface as
     'corrupt'/NULL rows, never a crash. Scale shape: synthesis and
-    probe are one narrow Arrow-batched mapInPandas chain — no
+    probe are one narrow Arrow-batched ``map_rows`` chain — no
     shuffle; AAC/MP3 payload decode stays the documented boundary."""
     from portfolio1_etl_spark.operators.audio import (
         probe_adts_metadata,
@@ -1965,47 +1709,23 @@ def q241_adts_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _synthesize_mixed_audio_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "codec": [], "vbr_method": [], "n_frames": [],
-                "duration_ms": [], "sample_rate": [], "profile": [],
-                "channels": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                codec = method = profile = None
-                nf = dur = rate = chans = None
-                try:
-                    profile, rate, chans, nf, _blocks, dur = (
-                        probe_adts_metadata(b)
-                    )
-                    codec = "aac-adts"
-                except (ValueError, IndexError, struct.error):
-                    try:
-                        _kbps, rate, nf, dur, _layer = probe_mp3_metadata(b)
-                        method, _df, _db = probe_mp3_vbr_info(b)
-                        codec = "mpeg-audio"
-                        if method in ("info",):
-                            method = "none"
-                    except (ValueError, IndexError, struct.error):
-                        codec = "corrupt"
-                        rate = nf = dur = None
-                        method = None
-                rows["doc_id"].append(int(path))
-                rows["codec"].append(codec)
-                rows["vbr_method"].append(method)
-                rows["n_frames"].append(nf)
-                rows["duration_ms"].append(dur)
-                rows["sample_rate"].append(rate)
-                rows["profile"].append(profile)
-                rows["channels"].append(chans)
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        try:  # ADTS first; a framing error falls through to MPEG audio
+            profile, rate, chans, nf, _blocks, dur = probe_adts_metadata(content)
+            return int(path), "aac-adts", None, nf, dur, rate, profile, chans
+        except DECODE_ERRORS:
+            pass
+        _kbps, rate, nf, dur, _layer = probe_mp3_metadata(content)
+        method = probe_mp3_vbr_info(content)[0]
+        method = "none" if method == "info" else method
+        return int(path), "mpeg-audio", method, nf, dur, rate, None, None
 
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media, _row,
         "doc_id long, codec string, vbr_method string, n_frames long, "
         "duration_ms long, sample_rate long, profile string, channels long",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), "corrupt") + (None,) * 6,
     )
 
 
@@ -2052,19 +1772,7 @@ def _synthesize_mp4_stbl_media(docs):
             data = data[: i + 4] + b"\x00\x01\x00\x00" + data[i + 8 :]
         return data
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "video",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "video", _one)
 
 
 @query(
@@ -2106,41 +1814,26 @@ def q264_mp4_sample_table_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     track; box-corrupt (every 31st) and table-corrupt (every 37th —
     an stts run count lying about the bytes present, caught by the
     probe's full-consistency rule) objects surface as single NULL
-    rows. Narrow mapInPandas over synthesized containers; the oracle
-    replays the synthesis as doc_id arithmetic (q137/q149 pattern)."""
+    rows: ``map_rows`` returns each object's tracks as one array and
+    ``F.inline`` expands it. A narrow map over synthesized containers;
+    the oracle replays the synthesis as doc_id arithmetic (q137/q149
+    pattern)."""
     from portfolio1_etl_spark.operators.multimodal import (
         probe_mp4_sample_tables,
     )
 
     media = _synthesize_mp4_stbl_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "track_idx": [], "codec": [],
-                "n_samples": [], "total_bytes": [], "duration_ms": [],
-                "bitrate_bps": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    tracks = probe_mp4_sample_tables(bytes(content))
-                except (ValueError, IndexError, struct.error):
-                    tracks = [(None, None, None, None, None, None)]
-                for ti, codec, ns, tb, dur, bps in tracks:
-                    rows["doc_id"].append(int(path))
-                    rows["track_idx"].append(ti)
-                    rows["codec"].append(codec)
-                    rows["n_samples"].append(ns)
-                    rows["total_bytes"].append(tb)
-                    rows["duration_ms"].append(dur)
-                    rows["bitrate_bps"].append(bps)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        op,
-        "doc_id long, track_idx long, codec string, n_samples long, "
-        "total_bytes long, duration_ms long, bitrate_bps long",
+    tracks = map_rows(
+        media,
+        lambda path, content: (int(path), probe_mp4_sample_tables(content)),
+        "doc_id long, tracks array<struct<track_idx: bigint, codec: string,"
+        " n_samples: bigint, total_bytes: bigint, duration_ms: bigint,"
+        " bitrate_bps: bigint>>",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), [(None,) * 6]),
     )
+    return tracks.select("doc_id", F.inline("tracks"))
 
 
 # ---------------------------------------------------------------------------
@@ -2170,19 +1863,7 @@ def _synthesize_flac_media(docs):
             padding=4 if doc_id % 5 == 0 else 0,
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "modality": "audio",
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        op, "path string, modality string, content binary"
-    )
+    return _blobs(docs, "audio", _one)
 
 
 @query(
@@ -2212,7 +1893,7 @@ def _synthesize_flac_media(docs):
            END AS blocks
     FROM documents
     """,
-    operators=("X-multimodal", "X-flac-probe", "UDF-mapInPandas"),
+    operators=("X-multimodal", "X-flac-probe", "UDF-map_rows"),
 )
 def q278_flac_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC container census (r11) — the lossless-audio member of the
@@ -2227,44 +1908,23 @@ def q278_flac_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     census catches per-object (the q149 pattern), never a crash.
     Audio-frame decode stays the documented loud boundary
     (operators/audio.py). Scale shape: synthesis and probe are one
-    narrow Arrow-batched mapInPandas chain over the corpus — zero
+    narrow Arrow-batched ``map_rows`` chain over the corpus — zero
     shuffles; the oracle replays the id arithmetic in closed form."""
     from portfolio1_etl_spark.operators.audio import probe_flac_streaminfo
 
     media = _synthesize_flac_media(catalog.load(spark, sf_dir, "documents"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "status": [], "sample_rate": [],
-                "channels": [], "bits_per_sample": [], "total_samples": [],
-                "duration_ms": [], "blocks": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rate = chans = bits = total = dur = names = None
-                status = "ok"
-                try:
-                    rate, chans, bits, total, dur, blist = (
-                        probe_flac_streaminfo(bytes(content))
-                    )
-                    names = ",".join(blist)
-                except (ValueError, IndexError):
-                    status = "corrupt"
-                rows["doc_id"].append(int(path))
-                rows["status"].append(status)
-                rows["sample_rate"].append(rate)
-                rows["channels"].append(chans)
-                rows["bits_per_sample"].append(bits)
-                rows["total_samples"].append(total)
-                rows["duration_ms"].append(dur)
-                rows["blocks"].append(names)
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        *info, blocks = probe_flac_streaminfo(content)
+        return (int(path), "ok", *info, ",".join(blocks))
 
-    return media.mapInPandas(
-        op,
+    return map_rows(
+        media, _row,
         "doc_id long, status string, sample_rate long, channels long, "
         "bits_per_sample long, total_samples long, duration_ms long, "
         "blocks string",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), "corrupt") + (None,) * 6,
     )
 
 
@@ -2299,18 +1959,7 @@ def _synthesize_mp4_payload_media(docs):
         ]
         return encode_mp4_sample_tables([track], payloads=[payloads])
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["doc_id"].astype(str),
-                    "content": [_one(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return _spread_ids(docs).mapInPandas(
-        op, "path string, content binary"
-    )
+    return _blobs(_spread_ids(docs), "video", _one)
 
 
 @query(
@@ -2361,36 +2010,20 @@ def q290_mp4_sample_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         catalog.load(spark, sf_dir, "documents")
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_no": [], "sample_no": [],
-                "n_bytes": [], "first_byte": [], "byte_sum": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                b = bytes(content)
-                try:
-                    n = 6 + int(path) % 9
-                    picks = [(i * (n - 1)) // 3 for i in range(4)]
-                    samples = extract_mp4_samples(b, track=1, indices=picks)
-                    for i, (p, s) in enumerate(zip(picks, samples)):
-                        rows["doc_id"].append(int(path))
-                        rows["frame_no"].append(i)
-                        rows["sample_no"].append(p)
-                        rows["n_bytes"].append(len(s))
-                        rows["first_byte"].append(s[0] if s else None)
-                        rows["byte_sum"].append(sum(s))
-                except (ValueError, IndexError, struct.error):
-                    rows["doc_id"].append(int(path))
-                    for c in (
-                        "frame_no", "sample_no", "n_bytes",
-                        "first_byte", "byte_sum",
-                    ):
-                        rows[c].append(None)
-            yield pd.DataFrame(rows)
+    def _row(path, content):
+        n = 6 + int(path) % 9
+        picks = [(i * (n - 1)) // 3 for i in range(4)]
+        samples = extract_mp4_samples(content, track=1, indices=picks)
+        return int(path), [
+            (i, p, len(s), s[0] if s else None, sum(s))
+            for i, (p, s) in enumerate(zip(picks, samples))
+        ]
 
-    return media.mapInPandas(
-        op,
-        "doc_id long, frame_no long, sample_no long, n_bytes long, "
-        "first_byte long, byte_sum long",
+    frames = map_rows(
+        media, _row,
+        "doc_id long, frames array<struct<frame_no: bigint, sample_no: bigint,"
+        " n_bytes: bigint, first_byte: bigint, byte_sum: bigint>>",
+        ["path", "content"],
+        on_error=lambda path, content: (int(path), [(None,) * 5]),
     )
+    return frames.select("doc_id", F.inline("frames"))

@@ -839,7 +839,7 @@ def test_random_images_roundtrip_and_dhash(spark, seed):
       and channel counts — bit-exact pixels back;
     - corruption: truncation and a flipped byte must raise cleanly
       (CRC/length checks), never return garbage pixels;
-    - dHash: the Spark mapInPandas path (dhash_media) must agree with
+    - dHash: the Spark map_rows path (dhash_media) must agree with
       an independent per-pixel reference recomputation on every random
       thumbnail, and corrupted rows must yield NULL halves instead of
       killing the job.

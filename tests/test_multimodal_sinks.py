@@ -369,19 +369,34 @@ def test_wav_frames_cover_non_divisible_streams(spark, tmp_path):
 
 
 def test_decode_features_survive_undecodable_content(spark, tmp_path):
-    """A WebP (RIFF but not WAVE) and a truncated P6 must not kill the
-    featurize job — rows come back marked undecodable."""
+    """A WebP (RIFF but not WAVE), a truncated P6 and a PNG whose chunk
+    CRCs are valid but whose IDAT is not a deflate stream (zlib.error)
+    must not kill the featurize job — rows come back marked
+    undecodable."""
+    import struct
+    import zlib
+
     import numpy as np
 
     from portfolio1_etl_spark.operators.multimodal import (
-        decode_media, decode_media_features, encode_wav, read_media_dir,
+        _PNG_SIG, _png_chunk, decode_media, decode_media_features,
+        encode_wav, read_media_dir,
     )
 
     with pytest.raises(NotImplementedError):
         decode_media(b"RIFF\x04\x00\x00\x00WEBPfake")
+    bad_idat = (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0))
+        + _png_chunk(b"IDAT", b"not a deflate stream")
+        + _png_chunk(b"IEND", b"")
+    )
+    with pytest.raises(zlib.error):
+        decode_media(bad_idat)
     d = tmp_path / "mixed"; d.mkdir()
     (d / "bad.wav").write_bytes(b"RIFF\x04\x00\x00\x00WEBPfake")
     (d / "trunc.ppm").write_bytes(b"P6\n9999 9999\n255\n\x00\x01")
+    (d / "bad_idat.png").write_bytes(bad_idat)
     (d / "good.wav").write_bytes(
         encode_wav((np.arange(10) * 7 % 100).astype("int16"), 8000)
     )
@@ -390,6 +405,109 @@ def test_decode_features_survive_undecodable_content(spark, tmp_path):
     assert rows["good.wav"].n_units == 10 and rows["good.wav"].dims == "8000Hz"
     assert rows["bad.wav"].dims == "undecodable" and rows["bad.wav"].n_units == 0
     assert rows["trunc.ppm"].dims == "undecodable"
+    assert rows["bad_idat.png"].dims == "undecodable"
+    assert rows["bad_idat.png"].modality == "image"
+    assert rows["bad_idat.png"].n_bytes == len(bad_idat)
+
+
+def _ids(spark, n=4):
+    return spark.createDataFrame([(k,) for k in range(n)], "k long")
+
+
+def test_map_rows_keeps_nullable_longs_exact(spark):
+    """A nullable long above 2^53 comes back exact beside a None (a
+    pandas column would have turned it into float64)."""
+    from portfolio1_etl_spark.operators.multimodal import map_rows
+
+    big = (1 << 60) + 1
+    out = map_rows(
+        _ids(spark), lambda k: (k, None if k % 2 else big + k),
+        "k long, v long", ["k"],
+    ).collect()
+    assert sorted((r.k, r.v) for r in out) == [
+        (0, big), (1, None), (2, big + 2), (3, None)
+    ]
+
+
+def test_map_rows_builds_struct_binary_and_array_columns(spark):
+    from portfolio1_etl_spark.operators.multimodal import map_rows
+
+    out = map_rows(
+        _ids(spark),
+        lambda k: (k, (2 * k, f"m{k}"), bytes([k]) * k, [0.5 * k, 0.25]),
+        "k long, s struct<a: bigint, b: string>, b binary, f array<float>",
+        ["k"],
+    )
+    assert out.schema.simpleString() == (
+        "struct<k:bigint,s:struct<a:bigint,b:string>,b:binary,"
+        "f:array<float>>"
+    )
+    for r in out.collect():
+        assert (r.s.a, r.s.b) == (2 * r.k, f"m{r.k}")
+        assert bytes(r.b) == bytes([r.k]) * r.k
+        assert r.f == [0.5 * r.k, 0.25]
+
+
+def test_map_rows_error_rule(spark):
+    """Only DECODE_ERRORS become on_error rows; any other exception —
+    and a decode error with no on_error — fails the job."""
+    import zlib
+
+    from portfolio1_etl_spark.operators.multimodal import (
+        DECODE_ERRORS, map_rows,
+    )
+
+    assert Exception not in DECODE_ERRORS and zlib.error in DECODE_ERRORS
+
+    def decode(k):
+        if k == 1:
+            raise zlib.error("corrupt deflate stream")
+        if k == 2:
+            raise ValueError("malformed header")
+        return k, "ok"
+
+    marked = map_rows(
+        _ids(spark), decode, "k long, status string", ["k"],
+        on_error=lambda k: (k, "undecodable"),
+    ).collect()
+    assert sorted((r.k, r.status) for r in marked) == [
+        (0, "ok"), (1, "undecodable"), (2, "undecodable"), (3, "ok")
+    ]
+    # rows 1 and 2 may sit in different tasks: either error may win
+    with pytest.raises(Exception, match="malformed header|corrupt deflate"):
+        map_rows(_ids(spark), decode, "k long, status string", ["k"]).collect()
+
+    def buggy(k):
+        raise TypeError("bug in the row code")
+
+    with pytest.raises(Exception, match="bug in the row code"):
+        map_rows(
+            _ids(spark), buggy, "k long, status string", ["k"],
+            on_error=lambda k: (k, "undecodable"),
+        ).collect()
+
+
+def test_map_rows_fanout_through_inline(spark):
+    """The fan-out shape: an array<struct> column expanded by
+    F.inline — an empty array drops the row, a one-element fallback
+    of nulls gives one NULL row."""
+    from pyspark.sql import functions as F
+
+    from portfolio1_etl_spark.operators.multimodal import map_rows
+
+    def items(k):
+        if k == 3:
+            raise ValueError("unresolvable structure")
+        return k, [(i, bytes([i])) for i in range(k)]
+
+    out = map_rows(
+        _ids(spark), items, "k long, items array<struct<i: int, b: binary>>",
+        ["k"], on_error=lambda k: (k, [(None, None)]),
+    ).select("k", F.inline("items"))
+    got = sorted(
+        (r.k, r.i, None if r.b is None else bytes(r.b)) for r in out.collect()
+    )
+    assert got == [(1, 0, b"\x00"), (2, 0, b"\x00"), (2, 1, b"\x01"), (3, None, None)]
 
 
 def test_compact_parquet_recovers_from_crashed_swap(spark, sf_dir, tmp_path):

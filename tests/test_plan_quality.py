@@ -529,6 +529,34 @@ def test_no_partitionless_window_over_scaling_data(registry_plans):
     assert not offenders, f"partitionless WindowExec over scaling data: {offenders}"
 
 
+def test_plans_md_rows_match_current_plans(registry_plans):
+    """PLANS.md is the reviewed plan audit: each row's node counts and
+    pushed-filter mark must equal what tools/plan_audit.py derives from
+    today's plan, so a plan change cannot drift past review
+    unnoticed. Counted from the shared registry build — no extra
+    query builds."""
+    import os
+
+    from tools.plan_audit import NODES, plan_cells
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rows = {}
+    with open(os.path.join(root, "PLANS.md")) as f:
+        for line in f:
+            cells = [c.strip() for c in line.strip().strip("|").split("|")]
+            if len(cells) == len(NODES) + 2:
+                rows[cells[0]] = cells[1:]
+    stale = {
+        name: {"PLANS.md": rows.get(name), "now": plan_cells(plan)}
+        for name, (plan, _) in registry_plans.items()
+        if rows.get(name) != plan_cells(plan)
+    }
+    assert not stale, (
+        f"PLANS.md rows differ from the current plans: {stale}; "
+        "regenerate with `python tools/plan_audit.py`"
+    )
+
+
 def test_doubling_loops_truncate_lineage(spark, sf_dir):
     """The path-doubling closures (q243 ancestor closure, q259
     survivorship linkage) materialize their round state via

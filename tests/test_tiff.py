@@ -412,7 +412,7 @@ def test_mp4_extract_samples_fails_loudly():
 
 
 def test_sample_frames_mp4_returns_real_samples(spark):
-    """The mapInPandas fan-out returns the muxed compressed samples
+    """The map_rows fan-out returns the muxed compressed samples
     for MP4 (evenly spaced, always including the last), and falls back
     to byte chunks for an unresolvable census-only file."""
     from portfolio1_etl_spark.operators.multimodal import sample_frames

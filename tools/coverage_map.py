@@ -62,7 +62,7 @@ MODULE_COVERAGE = {
     "UDF-pandas": "operators.udfs.token_count_udf (pandas_udf, pinned to built-in twin) (tests/test_udfs.py)",
     "UDF-groupedmap": "operators.udfs.zscore_per_group (applyInPandas, pinned to window twin) (tests/test_udfs.py)",
     "UDF-UDAF": "operators.udfs.geometric_mean_udaf (grouped-agg pandas_udf, pinned to exp(avg(ln)) twin) (tests/test_udfs.py::test_grouped_agg_udaf_matches_expression_twin)",
-    "UDF-mapInPandas": "operators.multimodal.featurize_media + q90 (oracle-checked)",
+    "UDF-map_rows": "operators.multimodal.map_rows (mapInArrow: the one Python row map under every media synthesizer, codec and census pass; tests/test_multimodal_sinks.py) + q90/q278 (oracle-checked)",
     "UDF-state": "streaming.running_user_totals_stream (applyInPandasWithState)",
 }
 

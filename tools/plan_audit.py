@@ -39,6 +39,22 @@ NODES = [
 ]
 
 
+def plan_cells(plan: str) -> list[str]:
+    """The PLANS.md cells of one formatted plan: a count per ``NODES``
+    entry (blank for zero), then ``yes`` when parquet scans carry
+    pushed filters. Nodes are counted in the plan TREE section only,
+    where each node appears once."""
+    tree = plan.split("\n\n")[0]
+    # whole-token match: 'Exchange' must not count 'BroadcastExchange',
+    # 'HashAggregate' must not count 'ObjectHashAggregate'
+    counts = [
+        len(re.findall(rf"(?<![A-Za-z]){node}(?![A-Za-z])", tree))
+        for node, _ in NODES
+    ]
+    pushed = "PushedFilters: [" in plan and "PushedFilters: []" not in plan
+    return [str(c) if c else "" for c in counts] + ["yes" if pushed else ""]
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="plan-audit", cpus=8)
@@ -61,21 +77,10 @@ def main() -> None:
     totals = dict.fromkeys([n for n, _ in NODES], 0)
     for name, q in REGISTRY.items():
         df = q.fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(jvm_mode)
-        tree = plan.split("\n\n")[0]
-        # whole-token match: 'Exchange' must not count 'BroadcastExchange',
-        # 'HashAggregate' must not count 'ObjectHashAggregate'
-        counts = [
-            len(re.findall(rf"(?<![A-Za-z]){node}(?![A-Za-z])", tree))
-            for node, _ in NODES
-        ]
-        for (node, _), c in zip(NODES, counts):
-            totals[node] += c
-        pushed = "yes" if "PushedFilters: [" in plan and "PushedFilters: []" not in plan else ""
-        lines.append(
-            f"| {name} | " + " | ".join(str(c) if c else "" for c in counts)
-            + f" | {pushed} |"
-        )
+        cells = plan_cells(df._jdf.queryExecution().explainString(jvm_mode))
+        for (node, _), c in zip(NODES, cells):
+            totals[node] += int(c or 0)
+        lines.append(f"| {name} | " + " | ".join(cells) + " |")
     lines += [
         "",
         "Totals: " + ", ".join(f"{label}={totals[node]}" for node, label in NODES)
