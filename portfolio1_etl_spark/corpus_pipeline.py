@@ -15,7 +15,7 @@ oracle-checked queries (q71, q77+q89, q97, q96+q62 semantics,
 functions.redact); the pipeline adds only wiring plus a decision-log
 column so every dropped document is attributable. The shingle table is
 computed ONCE and shared by the near-dup and decontamination stages
-(the same localCheckpoint discipline as q72/q73).
+(the same materialize discipline as q72/q73).
 """
 
 from __future__ import annotations
@@ -55,7 +55,6 @@ def prepare_corpus(
     out_path: str | None = None,
     docs: DataFrame | None = None,
     count_rows: bool = True,
-    checkpoint_mode: str = "local",
 ) -> CorpusPrepResult:
     """Run the full prep over ``documents``. Order matters and is the
     production order: exact dedup first (cheapest, biggest win),
@@ -84,12 +83,12 @@ def prepare_corpus(
     # shingles — an eval doc dropped as an exact duplicate still
     # contaminates the surviving copy of its text. (Shingling only
     # survivors would let such text leak into the training output.)
-    sh_all = materialize(shingle_hashes(docs, "text"), checkpoint_mode)
+    sh_all = materialize(shingle_hashes(docs, "text"))
     sh_surv = sh_all.join(exact_keep, "doc_id", "left_semi")
 
     # -- stage 2: near-dup clusters over survivors (q77 + q89) ----------
     pairs = jaccard_pairs(sh_surv, jaccard_threshold, df_cap=df_cap)
-    cc = connected_components(pairs, checkpoint_mode=checkpoint_mode)
+    cc = connected_components(pairs)
     near_dupes = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
@@ -138,7 +137,7 @@ def prepare_corpus(
             .alias("drop_reason"),
         )
     )
-    decisions = materialize(decisions, checkpoint_mode)
+    decisions = materialize(decisions)
 
     # -- stage 5: redact + sink -----------------------------------------
     kept = (

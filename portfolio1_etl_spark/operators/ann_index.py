@@ -13,7 +13,7 @@ to (new vectors assign + append to their cell partition).
 
 Build reuses the oracle-checked k-means machinery
 (operators/clustering.py: folded-argmin assignment, sampled training,
-checkpoint modes).
+per-round materialization).
 """
 
 from __future__ import annotations
@@ -104,7 +104,6 @@ def build_ivf_index(
     k: int = 8,
     iters: int = 3,
     train_fraction: float | None = None,
-    checkpoint_mode: str = "local",
     generational: bool = False,
 ) -> None:
     """Train a k-cell codebook on ``vecs`` (vec_id, v, nrm — from
@@ -143,8 +142,7 @@ def build_ivf_index(
             )
     root = f"{path}/gen=0" if generational else path
     assigned, cent = lloyd_kmeans(
-        vecs, k=k, iters=iters, train_fraction=train_fraction,
-        checkpoint_mode=checkpoint_mode,
+        vecs, k=k, iters=iters, train_fraction=train_fraction
     )
     # the two persisted outputs are independent of each other — submit
     # both writes concurrently so the tiny codebook write back-fills
@@ -247,7 +245,6 @@ def rebalance_index(
     iters: int = 3,
     train_fraction: float | None = None,
     skew_threshold: float | None = None,
-    checkpoint_mode: str = "local",
 ) -> bool:
     """Index maintenance: re-train the codebook on the CURRENT vector
     population and rewrite the cell layout, restoring the narrow-probe
@@ -343,8 +340,7 @@ def rebalance_index(
     root = path if gen is None else f"{path}/gen={gen}"
     vecs = read_parquet(spark, f"{root}/vectors").select("vec_id", "v", "nrm")
     assigned, cent = lloyd_kmeans(
-        vecs, k=k, iters=iters, train_fraction=train_fraction,
-        checkpoint_mode=checkpoint_mode,
+        vecs, k=k, iters=iters, train_fraction=train_fraction
     )
     rebuilt = _with_nrm(assigned)
     if gen is not None:
@@ -453,7 +449,6 @@ def build_ivfpq_index(
     n_sub: int = 8,
     sub_dim: int = 8,
     n_cent: int = 16,
-    checkpoint_mode: str = "local",
 ) -> None:
     """The COMPOSED billion-vector layout (r11 — faiss's IVF-PQ): the
     IVF half partitions the corpus into cells (this module's DPP probe
@@ -494,15 +489,13 @@ def build_ivfpq_index(
     # paid ~6 driver-serialized action groups; overlapped it pays the
     # longest chain (PQ train → encode → codes write).
     def _ivf_half():
-        assigned, cent = lloyd_kmeans(
-            vecs, k=k_cells, iters=iters, checkpoint_mode=checkpoint_mode
-        )
+        assigned, cent = lloyd_kmeans(vecs, k=k_cells, iters=iters)
         cent.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
         return assigned
 
     def _pq_half():
         sub = split_subspaces(vecs, n_sub, sub_dim)
-        pq_cent = train_codebook(sub, n_cent, checkpoint_mode=checkpoint_mode)
+        pq_cent = train_codebook(sub, n_cent)
         pq_cent.coalesce(1).write.mode("overwrite").parquet(
             f"{path}/pq_codebook"
         )

@@ -71,14 +71,13 @@ def train_bpe_state(
     rounds: int,
     word_col: str = "word",
     freq_col: str = "freq",
-    checkpoint_mode: str = checkpointing.LOCAL,
 ) -> tuple[DataFrame, DataFrame]:
     """(merges, trained_words): the per-round merge rows of
     :func:`train_bpe_merges` plus the final word table — each word's
     LEARNED segmentation as its wrapped-piece encoding, which is the
     tokenizer's application artifact (tokenizing a corpus under the
     trained vocab = joining its words to this table)."""
-    return _train(words, rounds, word_col, freq_col, checkpoint_mode)
+    return _train(words, rounds, word_col, freq_col)
 
 
 def train_bpe_merges(
@@ -86,7 +85,6 @@ def train_bpe_merges(
     rounds: int,
     word_col: str = "word",
     freq_col: str = "freq",
-    checkpoint_mode: str = checkpointing.LOCAL,
 ) -> DataFrame:
     """Learn ``rounds`` merges; returns one row per round:
     (round, l, r, merged, cnt, n_pieces_after).
@@ -100,9 +98,9 @@ def train_bpe_merges(
 
     Scale: each round is two tiny aggregates over the word table (pair
     count + census) and a broadcast of the 1-row winner into a narrow
-    map; per-round state is materialized via ``checkpoint_mode`` like
+    map; per-round state goes through ``checkpointing.materialize`` like
     every iterative operator here."""
-    return _train(words, rounds, word_col, freq_col, checkpoint_mode)[0]
+    return _train(words, rounds, word_col, freq_col)[0]
 
 
 def _train(
@@ -110,7 +108,6 @@ def _train(
     rounds: int,
     word_col: str,
     freq_col: str,
-    checkpoint_mode: str,
 ) -> tuple[DataFrame, DataFrame]:
     wt = words.select(
         F.col(word_col).alias("word"),
@@ -133,8 +130,7 @@ def _train(
                     f"concat('{MARKER}', l, r, '{MARKER}'))"
                 ).alias("enc"),
                 "freq",
-            ),
-            checkpoint_mode,
+            )
         )
         census = wt.agg(
             F.sum(F.col("freq") * F.size(F.expr(PIECES))).alias("n_pieces_after")

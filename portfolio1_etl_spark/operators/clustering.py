@@ -12,7 +12,7 @@ hash-partitioned (the earlier revision ranked a k×n crossJoin with a
 ``row_number`` window on vec_id, which shuffled n·k rows every
 round). The update is one explode + groupBy (cell, dim) aggregate
 whose map-side partial aggregation caps shuffle traffic at k·dim rows
-per partition. Centroids are localCheckpoint-ed each round (k·dim
+per partition. Centroids are materialized each round (k·dim
 values — tiny) so the unrolled lineage never re-executes earlier
 rounds.
 
@@ -114,7 +114,6 @@ def lloyd_kmeans(
     k: int = 8,
     iters: int = 3,
     train_fraction: float | None = None,
-    checkpoint_mode: str = "local",
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iters`` Lloyd rounds from the deterministic seed set (the
     k smallest vec_ids — computed, not assumed: id spaces need not be
@@ -137,7 +136,7 @@ def lloyd_kmeans(
     )
     assigned = assign_cells(train, cent)
     for _ in range(iters - 1):
-        cent = materialize(update_centroids(assigned), checkpoint_mode)
+        cent = materialize(update_centroids(assigned))
         assigned = assign_cells(train, cent)
     if train is not vecs:  # sampled: assignment must cover every vector
         assigned = assign_cells(vecs, cent)

@@ -20,7 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from portfolio1_etl_spark.operators.checkpointing import materialize_counted
+from portfolio1_etl_spark.operators.checkpointing import (
+    materialize,
+    materialize_counted,
+)
 
 #: Deterministic 48-bit hash of a string column (identical in DuckDB
 #: as ``('0x' || substr(md5(c),1,12))::BIGINT``).
@@ -225,9 +228,7 @@ def prefix_jaccard_pairs(
     Verification uses the SET form (``verify_candidates_sets``): the
     lossless candidate list is orders of magnitude denser than LSH
     survivors, so the array shape's |cand|-row shuffle wins there."""
-    cand = prefix_candidates(sh, t_num, t_den, id_col=id_col).localCheckpoint(
-        eager=True
-    )
+    cand = materialize(prefix_candidates(sh, t_num, t_den, id_col=id_col))
     return verify_candidates_sets(sh, cand, t_num / t_den, id_col=id_col)
 
 
@@ -357,8 +358,9 @@ def lsh_candidates(
 ) -> DataFrame:
     """(doc_a, doc_b) pairs agreeing on at least one full band
     signature. The join key is (band, signature) — a pure equi-join;
-    the result is eagerly materialized (localCheckpoint) because LSH
-    survivor sets are tiny and always feed multiple consumers.
+    the result is eagerly materialized (``checkpointing.materialize``)
+    because LSH survivor sets are tiny and always feed multiple
+    consumers.
 
     ``bucket_cap`` drops (band, signature) buckets holding more than
     ``bucket_cap`` documents before the self-join — the band-join
@@ -376,7 +378,7 @@ def lsh_candidates(
         )
         bands = bands.join(F.broadcast(hot), ["band", "sig"], "left_anti")
     ba, bb = bands.alias("ba"), bands.alias("bb")
-    return (
+    return materialize(
         ba.join(
             bb,
             (F.col("ba.band") == F.col("bb.band"))
@@ -387,7 +389,6 @@ def lsh_candidates(
             F.col(f"ba.{id_col}").alias("doc_a"), F.col(f"bb.{id_col}").alias("doc_b")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -405,7 +406,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """(node, component) for every node appearing in ``pairs``; the
     component label is the minimum node id in its connected component
@@ -419,11 +419,10 @@ def connected_components(
     propagation needs O(diameter) rounds, which on a chain-shaped
     cluster (common with boilerplate docs: A~B~C~... without A~C) is
     a scale-killer; the star algorithm contracts paths exponentially.
-    Each round's edge set is eagerly materialized to truncate lineage;
-    ``checkpoint_mode`` picks the storage (``'local'`` = executor-local
-    localCheckpoint for the test harness, ``'reliable'`` = the
-    SparkContext checkpoint dir so a lost executor cannot kill a
-    multi-hour run — see ``operators.checkpointing``). The edge count
+    Each round's edge set is eagerly materialized to truncate lineage
+    (into the session's checkpoint directory when one is set, so a
+    lost executor cannot kill a multi-hour run — see
+    ``operators.checkpointing``). The edge count
     of every materialized set is observed inside its checkpoint action
     (``checkpointing.materialize_counted``), not by a separate job.
 
@@ -453,8 +452,7 @@ def connected_components(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
     )
     id_type = e.schema["u"].dataType
     finish_on_driver = isinstance(id_type, IntegralType) or id_type == StringType()
@@ -498,8 +496,7 @@ def connected_components(
         e, cnt = materialize_counted(
             ss.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            checkpoint_mode,
+            .distinct()
         )
         if cnt == prev_cnt and e.exceptAll(prev_e).isEmpty():
             break
@@ -584,7 +581,7 @@ def verify_candidates(
     shape was duplicate-tolerant; this one is not). By default the
     pair list is defensively distinct-ed here; callers whose
     candidates are distinct BY CONSTRUCTION (``lsh_candidates`` ends
-    in ``.distinct().localCheckpoint()``; the prefix join now routes
+    in a materialized ``.distinct()``; the prefix join now routes
     through ``prefix_candidates``'s groupBy-distinct and verifies via
     ``verify_candidates_sets`` instead of this function) pass
     ``assume_pair_distinct=True`` to skip the redundant shuffle —

@@ -8,7 +8,7 @@ graphs derived from relational data — see ``plans/graph_ops``).
 Scale shape per iteration: one join of the rank vector onto the edge
 list (equi-join on the source key) + one grouped sum on the
 destination — two shuffles, both on uniform entity keys; the rank
-vector is localCheckpoint-ed per round so the unrolled lineage never
+vector is materialized per round so the unrolled lineage never
 replays earlier rounds. O(iters) rounds with no driver-side data
 movement (ranks stay distributed; only the loop counter lives on the
 driver). Optional dangling-mass redistribution adds one tiny 1-row
@@ -40,7 +40,6 @@ def pagerank(
     damping: float = 0.85,
     redistribute_dangling: bool = False,
     stop_when_stable: bool = True,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """(node, rank): weighted PageRank after at most ``iters``
     synchronous rounds from a uniform start. ``edges`` is
@@ -68,8 +67,7 @@ def pagerank(
     nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -84,8 +82,7 @@ def pagerank(
     contrib_edges = materialize(
         edges.join(ow, "src").select(
             "src", "dst", (F.col("w") / F.col("outw")).alias("share")
-        ),
-        checkpoint_mode,
+        )
     )
     if redistribute_dangling:
         # flag dangling nodes ONCE (the leaky variant never reads
@@ -96,8 +93,7 @@ def pagerank(
                 ow.select(F.col("src").alias("node"), F.lit(True).alias("dang")),
                 "node",
                 "left",
-            ).select("node", F.col("dang").isNull().alias("dang")),
-            checkpoint_mode,
+            ).select("node", F.col("dang").isNull().alias("dang"))
         )
         ranks = nodes.select(
             "node", "dang", F.round(F.lit(1.0 / n_nodes), 10).alias("rank")
@@ -127,8 +123,7 @@ def pagerank(
                     F.lit(base) + F.lit(damping) * inflow_term,
                     10,
                 ).alias("rank"),
-            ),
-            checkpoint_mode,
+            )
         )
         # the check is pointless after the final round (we return
         # new_ranks either way) and can't fire after round 0 on any
@@ -144,7 +139,7 @@ def pagerank(
     return ranks.select("node", "rank")
 
 
-def triangle_counts(edges: DataFrame, checkpoint_mode: str = "local") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected graph given as
     canonical DISTINCT edges (u, v) with u < v. Degree-oriented
     counting (the standard scalable algorithm): re-orient every edge
@@ -169,9 +164,9 @@ def triangle_counts(edges: DataFrame, checkpoint_mode: str = "local") -> DataFra
     pipeline runs once and the triangle join runs over tiny
     checkpointed leaves (edge sets are small relative to the corpus
     they summarize — the same size argument as read_changes' keyed
-    path). ``checkpoint_mode='reliable'`` routes the cut through the
-    durable checkpoint dir on real clusters."""
-    edges = materialize(edges, checkpoint_mode)
+    path). With a session checkpoint directory the cuts are durable
+    (see ``operators.checkpointing``)."""
+    edges = materialize(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -192,7 +187,7 @@ def triangle_counts(edges: DataFrame, checkpoint_mode: str = "local") -> DataFra
         )
         .select("o.a", "o.b")
     )
-    e = materialize(e, checkpoint_mode)
+    e = materialize(e)
     w = (
         e.alias("x")
         .join(e.alias("y"), F.col("x.b") == F.col("y.a"))
@@ -225,7 +220,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int = 2,
     rounds: int | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """k-core peeling over an undirected edge list (u, v): repeatedly
     drop nodes with degree < ``k`` (each drop lowers neighbors'
@@ -243,9 +237,7 @@ def kcore_peel(
     iterative-state pattern as PageRank/k-means. Rounds are bounded
     by the peeling depth, which is tiny on real graphs (the cascade
     usually settles in a handful of rounds)."""
-    from portfolio1_etl_spark.operators.checkpointing import materialize
-
-    e = materialize(edges.select("u", "v"), mode=checkpoint_mode)
+    e = materialize(edges.select("u", "v"))
     # carried edge count (r13): the fixpoint probe compares |e2| to
     # |e|, and e was already counted when IT was the round's e2 —
     # re-counting the unchanged checkpoint was one redundant job/round
@@ -264,7 +256,7 @@ def kcore_peel(
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
         )
-        e2 = materialize(e2, mode=checkpoint_mode)
+        e2 = materialize(e2)
         if rounds is None:
             e2_cnt = e2.count()
             if e2_cnt == e_cnt:
@@ -286,7 +278,6 @@ def bfs_levels(
     edges: DataFrame,
     source: DataFrame,
     max_depth: int,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Breadth-first search levels from ``source`` nodes over an
     UNDIRECTED edge list (u, v): returns (node, level) where level is
@@ -303,12 +294,11 @@ def bfs_levels(
     sym = edges.select("u", "v").unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    sym = materialize(sym, checkpoint_mode)
+    sym = materialize(sym)
     visited = materialize(
         source.select(F.col("node")).distinct().withColumn(
             "level", F.lit(0).cast("long")
-        ),
-        checkpoint_mode,
+        )
     )
     frontier = visited.select("node")
     for depth in range(1, max_depth + 1):
@@ -319,8 +309,8 @@ def bfs_levels(
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("level", F.lit(depth).cast("long"))
         )
-        nxt = materialize(nxt, checkpoint_mode)
-        visited = materialize(visited.unionByName(nxt), checkpoint_mode)
+        nxt = materialize(nxt)
+        visited = materialize(visited.unionByName(nxt))
         frontier = nxt.select("node")
     return visited
 
@@ -330,7 +320,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """(node, rank): personalized PageRank — the teleport vector
     concentrates on ``seeds`` (one column ``node``) instead of the
@@ -350,16 +339,14 @@ def personalized_pagerank(
     nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
     )
     flagged = materialize(
         nodes.join(
             seeds.select("node").distinct().withColumn("s", F.lit(True)),
             "node",
             "left",
-        ).select("node", F.coalesce("s", F.lit(False)).alias("is_seed")),
-        checkpoint_mode,
+        ).select("node", F.coalesce("s", F.lit(False)).alias("is_seed"))
     )
     n_seeds = flagged.filter(F.col("is_seed")).count()
     if n_seeds == 0:
@@ -381,8 +368,7 @@ def personalized_pagerank(
     contrib_edges = materialize(
         edges.join(ow, "src").select(
             "src", "dst", (F.col("w") / F.col("outw")).alias("share")
-        ),
-        checkpoint_mode,
+        )
     )
     for _ in range(iters):
         contribs = (
@@ -403,7 +389,6 @@ def personalized_pagerank(
                     * F.coalesce("inflow", F.lit(0.0)),
                     10,
                 ).alias("rank"),
-            ),
-            checkpoint_mode,
+            )
         )
     return ranks.select("node", "rank")

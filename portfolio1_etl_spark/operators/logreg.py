@@ -29,7 +29,6 @@ def train_logreg(
     feats: DataFrame,
     rounds: int = 10,
     lr: float = 2.0,
-    checkpoint_mode: str = checkpointing.LOCAL,
 ) -> DataFrame:
     """Train on ``feats`` (x0, x1, x2, y) and emit one row per round:
     (round, w0, w1, w2, n_correct) — the 8-dp-rounded weights after
@@ -39,7 +38,7 @@ def train_logreg(
     Scale: the feature table is materialized once; each round is ONE
     1-row mean-gradient aggregate broadcast back into the update —
     O(rounds) cheap passes, weights never touch the driver."""
-    f = checkpointing.materialize(feats, checkpoint_mode)
+    f = checkpointing.materialize(feats)
     # weights live in the data path as a 1-row DataFrame (never the
     # driver), exactly like the k-means codebook
     spark = feats.sparkSession
@@ -65,8 +64,7 @@ def train_logreg(
                 )
                 .cast("long")
                 .alias("n_correct"),
-            ),
-            checkpoint_mode,
+            )
         )
 
     stats = _stats(wdf)
@@ -76,7 +74,7 @@ def train_logreg(
         # r13 A/B left it lazy and the per-round crossJoin chain then
         # re-spawned its broadcast jobs inside every later round's
         # evaluation — 66 → 111 Spark jobs, 3.7 s → 7.3 s at sf0.1 —
-        # so the one tiny localCheckpoint job per round is the cheaper
+        # so the one tiny checkpoint job per round is the cheaper
         # side of the trade at any scale
         wdf = checkpointing.materialize(
             wdf.crossJoin(stats).select(
@@ -88,8 +86,7 @@ def train_logreg(
                     ).alias(f"w{i}")
                     for i in range(3)
                 ]
-            ),
-            checkpoint_mode,
+            )
         )
         stats = _stats(wdf)  # gradient for round rnd+1, metric for rnd
         out.append(

@@ -103,7 +103,6 @@ def train_codebook(
     iters: int = 2,
     id_col: str = "vec_id",
     train_fraction: float | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """(sub, c_id, cvec): per-subspace k-means codebook — one GROUPED
     Lloyd's run (subspace is a grouping key everywhere, so all
@@ -136,7 +135,7 @@ def train_codebook(
             )
             .select("sub", F.col("code").alias("c_id"), "cvec")
         )
-        cent = materialize(cent, checkpoint_mode)
+        cent = materialize(cent)
     return cent
 
 
@@ -150,7 +149,6 @@ def pq_topk(
     shortlist: int = 32,
     id_col: str = "vec_id",
     train_fraction: float | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Two-stage PQ/ADC search: approximate distances from the byte
     codes + broadcast query distance table, exact cosine re-rank on
@@ -160,13 +158,12 @@ def pq_topk(
     a ``nrm`` column, as produced by ``with_norms``) — query
     subvectors are looked up by id in the corpus split; external
     query vectors would need their own split/normalize pass."""
-    sub = materialize(split_subspaces(vecs, n_sub, sub_dim, id_col), checkpoint_mode)
+    sub = materialize(split_subspaces(vecs, n_sub, sub_dim, id_col))
     cent = train_codebook(
         sub,
         n_cent,
         id_col=id_col,
         train_fraction=train_fraction,
-        checkpoint_mode=checkpoint_mode,
     )
     codes = _assign(sub, cent, id_col).select(id_col, "sub", "code")
     qids = queries.select(F.col(id_col).alias("query_id"))

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from portfolio1_etl_spark.operators.checkpointing import materialize
+
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
     "cast(0.0 as double), (acc, x) -> acc + x)"
@@ -184,9 +186,7 @@ def quantized_topk(
     # regroup shuffle to ~1 partition, the checkpoint freezes that
     # layout, and the integer-L2 shortlist pass then ran single-core;
     # the explicit width is pinned through the checkpoint instead.
-    qv = spread_rows(scalar_quantize(vecs, id_col)).localCheckpoint(
-        eager=True
-    )
+    qv = materialize(spread_rows(scalar_quantize(vecs, id_col)))
     corpus_q = qv
     queries_q = queries.select(F.col(id_col).alias("query_id")).join(
         qv.select(F.col(id_col).alias("query_id"), F.col("qv").alias("qqv")),

@@ -654,7 +654,7 @@ def q259_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.p_name").alias("node"), F.col("b.p_name").alias("r")
         )
     )
-    closure = pairs.localCheckpoint(eager=True)
+    closure = materialize(pairs)
     for _ in range(5):
         left = closure.select("node", F.col("r").alias("mid"))
         right = closure.select(F.col("node").alias("mid"), "r")

@@ -157,8 +157,8 @@ def q72_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles (q77 applies it; q73's LSH plays that role here).
     The shingle set feeds three consumers inside ``jaccard_pairs``
     (sizes + both sides of the self-join), so it is materialized once
-    (``checkpointing.materialize``, a localCheckpoint by default; on a
-    cluster: its reliable mode or a DISK_ONLY persist)
+    (``checkpointing.materialize``: a reliable checkpoint when the
+    session has a checkpoint directory, else a local one)
     instead of re-running the tokenize→explode→md5 scan per consumer."""
     sh = materialize(shingle_hashes(_docs(spark, sf_dir), "text"))
     return jaccard_pairs(sh, 0.4)

@@ -39,6 +39,7 @@ from portfolio1_etl_spark import catalog
 from portfolio1_etl_spark.functions.exact import CENTS_SQL as _CENTS
 from portfolio1_etl_spark.functions.exact import cents_of as _cents
 from portfolio1_etl_spark.functions.numeric import zround
+from portfolio1_etl_spark.operators.checkpointing import materialize
 from portfolio1_etl_spark.operators.ranks import ntile_from_rank, with_exact_rank
 from portfolio1_etl_spark.plans.registry import query
 
@@ -974,7 +975,7 @@ def q254_neighborhood_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, nbr = _copurchase_graph(spark, sf_dir)
     # nbr fans out four ways (deg, hop1, both hop2 sides) — materialize
     # once instead of re-running the edge self-join per branch
-    nbr = nbr.localCheckpoint(eager=True)
+    nbr = materialize(nbr)
     deg = nbr.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     hop1 = (
         nbr.join(
@@ -1216,8 +1217,6 @@ def q271_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical rounds as CTEs — integer counts and min-label
     tie-breaks make every round bit-deterministic. Output is the
     community census with a membership checksum."""
-    from portfolio1_etl_spark.operators.checkpointing import materialize
-
     _, nbr = _copurchase_graph(spark, sf_dir)
     nbr = materialize(nbr)
     labels = nbr.select("node").distinct().select(

@@ -20,6 +20,8 @@ the task.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -491,13 +493,7 @@ def q112_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _META_FORMATS = ("png", "ppm", "jpeg", "gif", "bmp")
 
 
-def _meta_geometry(doc_id: int) -> tuple[int, int]:
-    return 1 + doc_id % 13, 1 + doc_id % 7  # (width, height)
-
-
 def _synthesize_mixed_media(docs):
-    import struct
-
     from portfolio1_etl_spark.operators.multimodal import (
         encode_png as _enc_png,
         encode_ppm as _enc_ppm,
@@ -517,7 +513,7 @@ def _synthesize_mixed_media(docs):
     def _one(doc_id: int) -> bytes:
         if doc_id % 31 == 0:
             return b"\x00corrupt media object\x00"
-        w, h = _meta_geometry(doc_id)
+        w, h = 1 + doc_id % 13, 1 + doc_id % 7
         kind = _META_FORMATS[doc_id % 5]
         if kind == "png":
             ch = (1, 3, 4)[doc_id % 3]
@@ -610,14 +606,6 @@ def q137_media_metadata_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PIXEL_FORMATS = ("jpeg", "gif", "bmp")
 
 
-def _pixel_geometry(doc_id: int) -> tuple[int, int]:
-    # decoupled from the doc_id % 3 format cycle (doc_id // 3 varies
-    # WITHIN each format) so JPEGs span 1..3 MCUs per row — the
-    # restart-marker resync actually fires — and every format sees
-    # every size; w stays a multiple of 4 so the GIF mean closes.
-    return 4 * (1 + (doc_id // 3) % 5), 1 + (doc_id // 3) % 7
-
-
 def _synthesize_lossy_media(docs):
     from portfolio1_etl_spark.operators.gif import encode_gif as _enc_gif
     from portfolio1_etl_spark.operators.jpeg import (
@@ -629,7 +617,12 @@ def _synthesize_lossy_media(docs):
     def _one(doc_id: int) -> bytes:
         if doc_id % 37 == 0:
             return b"\xff\xd8 not actually a scan \x00"  # corrupt JPEG
-        w, h = _pixel_geometry(doc_id)
+        # geometry is decoupled from the doc_id % 3 format cycle
+        # (doc_id // 3 varies WITHIN each format) so JPEGs span 1..3
+        # MCUs per row — the restart-marker resync actually fires — and
+        # every format sees every size; w stays a multiple of 4 so the
+        # GIF mean closes. q147 synthesizes with the same geometry.
+        w, h = 4 * (1 + (doc_id // 3) % 5), 1 + (doc_id // 3) % 7
         kind = _PIXEL_FORMATS[doc_id % 3]
         if kind == "jpeg":
             v = (doc_id * 11) % 256
@@ -720,24 +713,12 @@ def q142_lossy_pixel_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: recursive CTE walking the (predictor, step-index) state machine.
 
 
-def _mulaw_params(doc_id: int) -> tuple[int, int]:
-    return 32 + doc_id % 64, 8000 + (doc_id % 5) * 2000  # (n codes, rate)
-
-
-def _adpcm_params(doc_id: int) -> tuple[int, int, int]:
-    # (n nibbles, seed predictor, seed step index)
-    return 16 + doc_id % 17, ((doc_id * 37) % 2048) - 1024, doc_id % 89
-
-
-def _bad_wav() -> bytes:
-    import struct
-
-    fmt = struct.pack("<HHIIHHH", 2, 1, 8000, 8000, 1, 4, 0)  # MS ADPCM tag
-    return (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + 4) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 4) + bytes(4)
-    )
+_BAD_WAV_FMT = struct.pack("<HHIIHHH", 2, 1, 8000, 8000, 1, 4, 0)  # MS ADPCM tag
+_BAD_WAV = (
+    b"RIFF" + struct.pack("<I", 4 + 8 + len(_BAD_WAV_FMT) + 8 + 4) + b"WAVE"
+    + b"fmt " + struct.pack("<I", len(_BAD_WAV_FMT)) + _BAD_WAV_FMT
+    + b"data" + struct.pack("<I", 4) + bytes(4)
+)
 
 
 def _synthesize_mulaw_media(docs):
@@ -745,8 +726,8 @@ def _synthesize_mulaw_media(docs):
 
     def _one(doc_id: int) -> bytes:
         if doc_id % 41 == 0:
-            return _bad_wav()
-        n, rate = _mulaw_params(doc_id)
+            return _BAD_WAV
+        n, rate = 32 + doc_id % 64, 8000 + (doc_id % 5) * 2000  # (n codes, rate)
         codes = ((doc_id * 7 + np.arange(n) * 13) % 256).astype(np.uint8)
         return encode_wav_mulaw_raw(codes, rate)
 
@@ -812,8 +793,11 @@ def _synthesize_adpcm_media(docs):
 
     def _one(doc_id: int) -> bytes:
         if doc_id % 41 == 0:
-            return _bad_wav()
-        n_nib, pred0, index0 = _adpcm_params(doc_id)
+            return _BAD_WAV
+        # (n nibbles, seed predictor, seed step index)
+        n_nib, pred0, index0 = (
+            16 + doc_id % 17, ((doc_id * 37) % 2048) - 1024, doc_id % 89
+        )
         nib = ((doc_id + np.arange(n_nib) * 5) % 16).astype(np.uint8)
         return encode_wav_adpcm(nib, pred0, index0, 8000)
 
@@ -907,24 +891,16 @@ def q144_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Every 43rd doc is a truncated GIF → (0, 0, 0.0) survival row.
 
 
-def _anim_geometry(doc_id: int) -> tuple[int, int, int]:
-    # (w, h, n_frames); w,h ≥ 9 keeps every inset patch non-empty
-    return 9 + (doc_id // 3) % 8, 9 + (doc_id // 5) % 6, 2 + doc_id % 3
-
-
-def _anim_color(doc_id: int, f: int) -> int:
-    return (doc_id * 13 + f * 29) % 256
-
-
 def _synthesize_animations(docs):
     from portfolio1_etl_spark.operators.gif import encode_gif_animated
 
     def _one(doc_id: int) -> bytes:
-        w, h, nf = _anim_geometry(doc_id)
+        # (w, h, n_frames); w,h ≥ 9 keeps every inset patch non-empty
+        w, h, nf = 9 + (doc_id // 3) % 8, 9 + (doc_id // 5) % 6, 2 + doc_id % 3
         frames = []
         offsets = []
         for f in range(nf):
-            c = _anim_color(doc_id, f)
+            c = (doc_id * 13 + f * 29) % 256
             fw, fh = w - 2 * f, h - 2 * f
             frames.append(np.full((fh, fw, 3), c, dtype=np.uint8))
             offsets.append((f, f))
@@ -1056,7 +1032,8 @@ def _synthesize_exif_tiff_media(docs):
     def _one(doc_id: int) -> bytes:
         if doc_id % 29 == 0:
             return b"II*\x00 truncated ifd"
-        w, h = _pixel_geometry(doc_id)
+        # q142's geometry
+        w, h = 4 * (1 + (doc_id // 3) % 5), 1 + (doc_id // 3) % 7
         if doc_id % 2 == 0:
             rows = ((doc_id + np.arange(h)) % 256).astype(np.uint8)
             if doc_id % 4 == 0:

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from portfolio1_etl_spark import catalog
+from portfolio1_etl_spark.operators.checkpointing import materialize
 from portfolio1_etl_spark.operators.similarity import (
     DOT as _DOT,
     QDIST2,
@@ -624,7 +625,7 @@ def q252_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_r = brute_force_topk(vecs, anchors, k=20).select(
         "query_id", "neighbor_id", F.col("rank").alias("rnk")
     )
-    qv = scalar_quantize(vecs).localCheckpoint(eager=True)
+    qv = materialize(scalar_quantize(vecs))
     qcand = (
         qv.crossJoin(
             F.broadcast(
@@ -878,7 +879,7 @@ def q260_multiprobe_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
     )
-    sims = sims.localCheckpoint(eager=True)
+    sims = materialize(sims)
     cand = sims.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("candidates_seen")
     )
@@ -1209,6 +1210,8 @@ def q269_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("nrm").alias("cnrm"),
     )
+    # the one checkpoint outside checkpointing.materialize: LAZY, so the
+    # table is stored by the query's own job (an eager cut adds a job)
     rel = (
         c.crossJoin(F.broadcast(q))
         .select(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from portfolio1_etl_spark import catalog
+from portfolio1_etl_spark.operators.checkpointing import materialize
 from portfolio1_etl_spark.operators.sketches import (
     BLOOM_BITS,
     BLOOM_MOD,
@@ -88,10 +89,8 @@ def q92_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus scan: the exact-counts aggregate materializes once and
     # feeds the (weighted) sketch build, the probe side, and the
     # comparison column — the raw token stream is never re-exploded.
-    exact = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("exact_count"))
-        .localCheckpoint(eager=True)
+    exact = materialize(
+        toks.groupBy("w").agg(F.count(F.lit(1)).alias("exact_count"))
     )
     sketch = cms_build_weighted(exact, "w", "exact_count")
     est = cms_estimate(

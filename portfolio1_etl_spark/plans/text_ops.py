@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from portfolio1_etl_spark import catalog
 from portfolio1_etl_spark.functions.numeric import zround
+from portfolio1_etl_spark.operators.checkpointing import materialize
 from portfolio1_etl_spark.plans.registry import query
 
 
@@ -593,7 +594,7 @@ def q94_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly once, and tf — which fans out to the scoring join and
     # the df aggregate — is materialized instead of the token stream.
     tf = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.localCheckpoint(eager=True)
+    tf = materialize(tf)
     dfc = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

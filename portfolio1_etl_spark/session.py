@@ -39,10 +39,13 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` else ``*``. Shuffle
     partitions default to the core count (AQE coalesces further down).
     ``checkpoint_dir`` (else ``$SPARK_GRAFT_CHECKPOINT_DIR``) sets the
-    SparkContext checkpoint directory for operators running with
-    ``checkpoint_mode='reliable'`` (see ``operators.checkpointing``) —
-    on a cluster this must be a durable URI (HDFS/object store), since
-    reliable checkpoints exist precisely to survive executor loss.
+    SparkContext checkpoint directory, and with it set every
+    materialization is durable: each iterative round, plan-level cut
+    and streaming fold that goes through ``operators.checkpointing``
+    writes a reliable checkpoint there instead of executor-local
+    blocks. On a cluster this must be a durable URI (HDFS/object
+    store), since reliable checkpoints exist precisely to survive
+    executor loss. Without it, materializations stay local.
     """
     cpus = str(cpus) if cpus is not None else _cpus()
     if shuffle_partitions is None:

@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from portfolio1_etl_spark.operators.checkpointing import materialize
+
+
 def _raw_events_schema(ts_type: T.DataType) -> T.StructType:
     """File-stream schema; ``ts`` depends on the landing zone's parquet
     encoding (TIMESTAMP(NANOS) surfaces as long under nanosAsLong,
@@ -224,7 +227,7 @@ def cms_maintenance_stream(events: DataFrame, state: dict):
     linearity makes the streaming fold EXACTLY equal to sketching the
     whole history in one batch (asserted in tests/test_streaming.py).
     The running sketch is ≤ depth·width rows, so the per-epoch
-    localCheckpoint is a few KB; in production it lands in the
+    checkpoint is a few KB; in production it lands in the
     warehouse and any consumer broadcasts it for frequency probes."""
     from portfolio1_etl_spark.operators.sketches import cms_build, cms_merge
 
@@ -234,7 +237,7 @@ def cms_maintenance_stream(events: DataFrame, state: dict):
         batch_sketch = cms_build(batch_df.select("event_type"), "event_type")
         cur = state.get("sketch")
         nxt = batch_sketch if cur is None else cms_merge(cur, batch_sketch)
-        state["sketch"] = nxt.localCheckpoint(eager=True)
+        state["sketch"] = materialize(nxt)
         _epoch_folded(state, epoch_id)
 
     writer = events.writeStream.outputMode("append").foreachBatch(_merge)
@@ -260,7 +263,7 @@ def bloom_maintenance_stream(events: DataFrame, state: dict):
         batch_bloom = bloom_build(batch_df.select("user_id"), "user_id")
         cur = state.get("bloom")
         nxt = batch_bloom if cur is None else bloom_merge(cur, batch_bloom)
-        state["bloom"] = nxt.localCheckpoint(eager=True)
+        state["bloom"] = materialize(nxt)
         _epoch_folded(state, epoch_id)
 
     writer = events.writeStream.outputMode("append").foreachBatch(_merge)
@@ -288,7 +291,7 @@ def scd2_maintenance_stream(events: DataFrame, state: dict):
             nxt = scd2_rebuild(batch_df, tiebreak_col="event_id")
         else:
             nxt = scd2_apply(cur, batch_df, tiebreak_col="event_id")
-        state["current"] = nxt.localCheckpoint(eager=True)
+        state["current"] = materialize(nxt)
         _epoch_folded(state, epoch_id)
 
     writer = events.writeStream.outputMode("append").foreachBatch(_merge)
@@ -345,8 +348,8 @@ def corpus_prep_stream(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         if _epoch_already_folded(state, epoch_id):
             return
-        b_docs = batch_df.localCheckpoint(eager=True)
-        b_sh = shingle_hashes(b_docs, "text").localCheckpoint(eager=True)
+        b_docs = materialize(batch_df)
+        b_sh = materialize(shingle_hashes(b_docs, "text"))
         is_eval = F.col("doc_id") % eval_mod == 0
 
         # -- exact-dup fold --------------------------------------------
@@ -354,13 +357,13 @@ def corpus_prep_stream(
             F.min("doc_id").alias("keep_doc_id")
         )
         keep_old = state.get("keep")
-        keep = (
+        keep = materialize(
             b_keep
             if keep_old is None
             else keep_old.unionByName(b_keep)
             .groupBy("text_hash")
             .agg(F.min("keep_doc_id").alias("keep_doc_id"))
-        ).localCheckpoint(eager=True)
+        )
 
         # -- candidate discovery among survivors ----------------------
         keepers = keep.select(F.col("keep_doc_id").alias("doc_id"))
@@ -389,25 +392,25 @@ def corpus_prep_stream(
             .distinct()
         )
         cand_old = state.get("cand")
-        cand = (
+        cand = materialize(
             b_cand
             if cand_old is None
             else cand_old.unionByName(b_cand).distinct()
-        ).localCheckpoint(eager=True)
+        )
 
         # -- contamination fold (symmetric delta join) -----------------
         b_eval_sh = b_sh.join(
             b_docs.filter(is_eval).select("doc_id"), "doc_id", "left_semi"
         ).select("h").distinct()
         eval_old = state.get("eval_sh")
-        delta_e = (
+        delta_e = materialize(
             b_eval_sh
             if eval_old is None
             else b_eval_sh.join(eval_old, "h", "left_anti")
-        ).localCheckpoint(eager=True)
-        eval_sh = (
+        )
+        eval_sh = materialize(
             delta_e if eval_old is None else eval_old.unionByName(delta_e)
-        ).localCheckpoint(eager=True)
+        )
 
         non_eval_ids_b = b_docs.filter(~is_eval).select("doc_id")
         inc2 = (
@@ -431,10 +434,8 @@ def corpus_prep_stream(
         contam = contam_parts[0]
         for part in contam_parts[1:]:
             contam = contam.unionByName(part)
-        contam = (
-            contam.groupBy("doc_id")
-            .agg(F.sum("n_shared").alias("n_shared"))
-            .localCheckpoint(eager=True)
+        contam = materialize(
+            contam.groupBy("doc_id").agg(F.sum("n_shared").alias("n_shared"))
         )
 
         # -- stateless per-doc gates + accumulation --------------------
@@ -449,12 +450,12 @@ def corpus_prep_stream(
             ).alias("too_repetitive"),
         )
         rep_old = state.get("rep")
-        rep = (
+        rep = materialize(
             b_rep if rep_old is None else rep_old.unionByName(b_rep)
-        ).localCheckpoint(eager=True)
-        sh_acc = (
+        )
+        sh_acc = materialize(
             b_sh if sh_acc_old is None else sh_acc_old.unionByName(b_sh)
-        ).localCheckpoint(eager=True)
+        )
 
         state.update(
             keep=keep, cand=cand, eval_sh=eval_sh, contam=contam,
@@ -493,9 +494,11 @@ def corpus_prep_finalize(
     cand, contam, rep = state["cand"], state["contam"], state["rep"]
     keepers = keep.select(F.col("keep_doc_id").alias("doc_id"))
     sh_surv = sh_acc.join(keepers, "doc_id", "left_semi")
-    sh_capped = sh_surv.join(
-        F.broadcast(hot_shingles(sh_surv, df_cap).select("h")), "h", "left_anti"
-    ).localCheckpoint(eager=True)
+    sh_capped = materialize(
+        sh_surv.join(
+            F.broadcast(hot_shingles(sh_surv, df_cap).select("h")), "h", "left_anti"
+        )
+    )
     pairs = verify_candidates(
         sh_capped, cand, jaccard_threshold, assume_pair_distinct=True
     )
@@ -579,21 +582,21 @@ def pack_ingest_stream(
             base = F.coalesce(F.col("total"), F.lit(0))
         else:
             base = F.lit(0)
-        layout_b = local.select(
-            "doc_id",
-            "shard",
-            "n_tokens",
-            (base + F.col("off")).cast("long").alias("start_tok"),
-        ).localCheckpoint(eager=True)
-        layout = (
+        layout_b = materialize(
+            local.select(
+                "doc_id",
+                "shard",
+                "n_tokens",
+                (base + F.col("off")).cast("long").alias("start_tok"),
+            )
+        )
+        layout = materialize(
             layout_b
             if layout_old is None
             else layout_old.unionByName(layout_b)
-        ).localCheckpoint(eager=True)
-        totals = (
-            layout.groupBy("shard")
-            .agg(F.sum("n_tokens").alias("total"))
-            .localCheckpoint(eager=True)
+        )
+        totals = materialize(
+            layout.groupBy("shard").agg(F.sum("n_tokens").alias("total"))
         )
         state.update(layout=layout, totals=totals)
         _epoch_folded(state, epoch_id)
@@ -618,11 +621,11 @@ def governance_stream(docs_stream: DataFrame, state: dict):
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         if _epoch_already_folded(state, epoch_id):
             return
-        b = governance_doc_stage(batch_df).localCheckpoint(eager=True)
+        b = materialize(governance_doc_stage(batch_df))
         prev = state.get("doc")
-        state["doc"] = (
+        state["doc"] = materialize(
             b if prev is None else prev.unionByName(b)
-        ).localCheckpoint(eager=True)
+        )
         _epoch_folded(state, epoch_id)
 
     writer = docs_stream.writeStream.outputMode("append").foreachBatch(_fold)
@@ -700,11 +703,11 @@ def wordcount_stream(docs_stream: DataFrame, state: dict):
             .agg(F.count(F.lit(1)).alias("freq"))
         )
         prev = state.get("wordcount")
-        state["wordcount"] = (
+        state["wordcount"] = materialize(
             b
             if prev is None
             else prev.unionByName(b).groupBy("word").agg(F.sum("freq").alias("freq"))
-        ).localCheckpoint(eager=True)
+        )
         _epoch_folded(state, epoch_id)
 
     writer = docs_stream.writeStream.outputMode("append").foreachBatch(_fold)
@@ -740,7 +743,7 @@ def media_census_stream(media_stream: DataFrame, state: dict):
         feats = decode_media_features(batch_df)
         cur = state.get("census")
         nxt = feats if cur is None else cur.unionByName(feats)
-        state["census"] = nxt.localCheckpoint(eager=True)
+        state["census"] = materialize(nxt)
         _epoch_folded(state, epoch_id)
 
     writer = media_stream.writeStream.outputMode("append").foreachBatch(_fold)
@@ -896,7 +899,7 @@ def variant_ingest_stream(feed_stream: DataFrame, state: dict):
                     F.sum("sum_qty").cast("long").alias("sum_qty"),
                 )
             )
-        state["census"] = b.localCheckpoint(eager=True)
+        state["census"] = materialize(b)
         _epoch_folded(state, epoch_id)
 
     writer = feed_stream.writeStream.outputMode("append").foreachBatch(_fold)
@@ -1292,9 +1295,7 @@ def neardup_ingest_stream(
                 "rebuild the chains or route through a full re-sign"
             )
         new_docs = feed.select("doc_id", "text")
-        sigs_new = minhash_signatures(
-            shingle_hashes(new_docs, "text")
-        ).localCheckpoint(eager=True)
+        sigs_new = materialize(minhash_signatures(shingle_hashes(new_docs, "text")))
         stored = read_version(spark, sig_path, svs[-1])
         bands_all = band_table(
             stored.unionByName(sigs_new), n_bands

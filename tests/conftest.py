@@ -23,6 +23,29 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture()
+def restore_checkpoint_dir(spark):
+    """Put the context's checkpoint directory back (none in a plain
+    session) after a test that sets one. A directory left set would
+    turn every ``checkpointing.materialize`` of the later tests in the
+    shared session into a reliable checkpoint. PySpark has no public
+    unset, so the JVM field is restored directly."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.checkpointDir()
+    yield
+    getattr(jsc, "checkpointDir_$eq")(before)
+
+
+@pytest.fixture()
+def ckpt_dir(spark, tmp_path, restore_checkpoint_dir):
+    """A fresh checkpoint directory on the context for one test: every
+    ``checkpointing.materialize`` in it writes a reliable checkpoint
+    there."""
+    d = str(tmp_path / "ckpt")
+    spark.sparkContext.setCheckpointDir(d)
+    return d
+
+
 @pytest.fixture(scope="session")
 def registry_oracle(spark, sf_dir):
     """``check(name)`` runs registered query ``name`` at ``sf_dir`` and

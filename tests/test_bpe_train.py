@@ -4,6 +4,7 @@ monotonicity, and mode-equality for the checkpoint policy."""
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import pytest
@@ -40,11 +41,11 @@ def _reference_train(word_freqs: dict[str, int], rounds: int):
     return out
 
 
-def _spark_train(spark, word_freqs, rounds, **kw):
+def _spark_train(spark, word_freqs, rounds):
     words = spark.createDataFrame(
         list(word_freqs.items()), "word string, freq long"
     )
-    rows = train_bpe_merges(words, rounds, **kw).collect()
+    rows = train_bpe_merges(words, rounds).collect()
     return sorted(
         (r.round, r.l, r.r, r.merged, r.cnt, r.n_pieces_after) for r in rows
     )
@@ -72,11 +73,14 @@ def test_census_strictly_decreases(spark, sf_dir):
 
 
 @pytest.mark.parametrize("mode", ["local", "reliable"])
-def test_checkpoint_modes_agree(spark, mode):
+def test_checkpoint_modes_agree(spark, mode, request):
+    """Without and with a session checkpoint directory (local and
+    reliable per-round materialization) the merges are the same."""
     wf = {"ababab": 2, "bab": 1, "aa": 4}
-    assert _spark_train(spark, wf, 3, checkpoint_mode=mode) == _reference_train(
-        wf, 3
-    )
+    d = request.getfixturevalue("ckpt_dir") if mode == "reliable" else None
+    assert _spark_train(spark, wf, 3) == _reference_train(wf, 3)
+    if d is not None:
+        assert any(files for _, _, files in os.walk(d))
 
 
 def test_matches_reference_on_random_corpora(spark):

@@ -510,6 +510,56 @@ def test_map_rows_fanout_through_inline(spark):
     assert got == [(1, 0, b"\x00"), (2, 0, b"\x00"), (2, 1, b"\x01"), (3, None, None)]
 
 
+def test_multimodal_row_functions_do_not_import_plans(spark, sf_dir, tmp_path):
+    """Every row function the multimodal queries hand to ``map_rows``
+    unpickles in a fresh interpreter without importing the ``plans``
+    package. cloudpickle ships a module-level function by reference,
+    so a row function that calls one from ``plans/multimodal_ops.py``
+    makes each Python worker import every query module."""
+    import pickle
+    import subprocess
+    import sys
+    from unittest import mock
+
+    from pyspark import cloudpickle
+
+    from portfolio1_etl_spark.plans import REGISTRY, multimodal_ops
+
+    fns = []  # (query, row function)
+    real = multimodal_ops.map_rows
+    names = sorted(
+        n for n, q in REGISTRY.items() if q.fn.__module__ == multimodal_ops.__name__
+    )
+    for name in names:
+
+        def spy(df, fn, schema, cols, on_error=None):
+            fns.extend((name, f) for f in (fn, on_error) if f is not None)
+            return real(df, fn, schema, cols, on_error)
+
+        with mock.patch.object(multimodal_ops, "map_rows", spy):
+            REGISTRY[name].fn(spark, sf_dir)
+    assert len(fns) >= len(names)
+
+    blob = tmp_path / "row_fns.pkl"
+    blob.write_bytes(pickle.dumps([cloudpickle.dumps(f) for _, f in fns]))
+    probe = (
+        "import pickle, sys\n"
+        "for i, b in enumerate(pickle.loads(open(sys.argv[1], 'rb').read())):\n"
+        "    pickle.loads(b)\n"
+        "    if 'portfolio1_etl_spark.plans' in sys.modules:\n"
+        "        print(i)\n"
+        "        break\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", probe, str(blob)],
+        cwd=repo, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    if out:
+        name, fn = fns[int(out)]
+        pytest.fail(f"{name}: {fn.__qualname__} imports portfolio1_etl_spark.plans")
+
+
 def test_compact_parquet_recovers_from_crashed_swap(spark, sf_dir, tmp_path):
     """A leftover ._precompact with the dataset missing at path (crash
     between the two renames) is restored before compacting."""
